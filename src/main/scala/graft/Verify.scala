@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/selfcheck.py). Exits
+  * non-zero when any key throws, after dumping the rest. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,18 +15,42 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q32,t10 (name-prefix filter) restricts the
     // dump for local bisection — same contract as Bench's BENCH_ONLY;
     // the driver never sets it, so the gate output is unchanged
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failures = dump(spark, sfDir, outDir,
+      SparkEntry.queries.filter(kv => selected(kv._1)).toSeq,
+      SparkEntry.oracleSql.filter(kv => selected(kv._1)))
+    spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failures.size} key(s) failed; see $outDir/failures.txt")
+      sys.exit(1)
+    }
+  }
+
+  /** Dump each key's result to `outDir/<key>` as parquet and write
+    * `oracle_sql.json`. A key that throws is logged and the remaining
+    * keys still dump; the failed keys are written to `failures.txt`
+    * (key TAB message, one per line) and returned as (key, message).
+    * With no failure, a stale `failures.txt` from an earlier run is
+    * removed. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      oracleSql: Map[String, String]): Seq[(String, String)] = {
+    new java.io.File(outDir).mkdirs()
+    val failures = queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> Option(e.getMessage).getOrElse(e.toString)
+          .replaceAll("\\s+", " "))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -40,9 +65,13 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    val json = oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val manifest = Paths.get(s"$outDir/failures.txt")
+    if (failures.isEmpty) Files.deleteIfExists(manifest)
+    else Files.writeString(manifest,
+      failures.map { case (k, m) => s"$k\t$m\n" }.mkString)
+    failures
   }
 }

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * over Cloud Object Stores", VLDB '20 — the `_delta_log/N.json`
   * mutual-exclusion trick; Iceberg's atomic metadata-pointer swap is
   * the same contract). This is what the repo's parquet commit logs
-  * (a40/a41/p23/p28) deliberately do NOT have: those are single-writer
+  * (a40/a41/p28/p33) deliberately do NOT have: those are single-writer
   * by construction (`synchronized` driver blocks), which is honest for
   * a build pipeline but not for a 100-TB deployment where a continuous
   * ingest writer, a compaction daemon, and a scheduled vacuum race on

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.operators.OccCommitLog
 import graft.sinks.CsvSink
 import graft.sources.Partitions
 
@@ -32,8 +33,10 @@ object PipelineQueries {
     * a constant 2, so compaction provably shrinks files at every
     * scale. v8: every keyword-index stage now goes through the shared
     * stageKwIndexTable builder, whose meta carries max_term_id — the
-    * a19kw meta gained that column.) */
-  val StagingFormatVersion = 8
+    * a19kw meta gained that column. v9: the p23 versioned-table stage's
+    * log is now an OccCommitLog under `log/` whose every action carries
+    * its artifact's schema, replacing the parquet `commit_log`.) */
+  val StagingFormatVersion = 9
 
   /** Full-width digest key for a staging identity. Replaces the old
     * 32-bit `String.hashCode`, which can collide two distinct dirs —
@@ -146,9 +149,9 @@ object PipelineQueries {
   }
 
   /** A parquet commit log read into (version, kind, path) triples —
-    * the one read every log consumer shares (the a40/a41 serves, the
-    * p23 snapshot reader, the p29 change feed, p28's vacuum). The
-    * collect is metadata-scale by construction: one row per commit. */
+    * the one read every parquet-log consumer shares (the a40/a41
+    * serves, p28's vacuum, the p33 owned table log). The collect is
+    * metadata-scale by construction: one row per commit. */
   def readCommitLog(spark: SparkSession, logRoot: String): Seq[(Int, String, String)] =
     spark.read.parquet(s"$logRoot/commit_log").collect()
       .map(r => (r.getAs[Int]("version"), r.getAs[String]("kind"),
@@ -537,76 +540,123 @@ object PipelineQueries {
       .orderBy(col("z_bucket"))
   }
 
-  /** The p23 versioned-table fixture — a commit log over delta and
-    * tombstone files, the minimal lakehouse transaction-log shape
-    * (Delta/Iceberg snapshot model, public): commits 0–2 each land one
-    * insert delta (doc_id % 4 == v), commit 3 lands a DELETE as a
-    * tombstone id list (merge-on-read — no data file is rewritten).
-    * `commit_log` (version, kind, path) is one row per FILE —
-    * metadata-scale — and is written before the `done` marker so a
-    * half-built fixture is rebuilt, never trusted. Keyed by a content
-    * fingerprint of documents.parquet. */
+  /** The p23 versioned-table fixture — an [[OccCommitLog]] under
+    * `log/` over delta and tombstone files, the minimal lakehouse
+    * transaction-log shape (Delta/Iceberg snapshot model, public):
+    * commits 0–2 each land one insert delta (doc_id % 4 == v), commit 3
+    * lands a DELETE as a tombstone id list (merge-on-read — no data
+    * file is rewritten). Each commit is one `.commit` file naming one
+    * artifact and carrying that artifact's schema as a `schema`
+    * metadata token (DDL; Delta's `metaData.schemaString`), so the log
+    * is the authority for both the file list and the schema: planning
+    * a snapshot lists the log and reads no footer. The log is written
+    * before the `done` marker so a half-built fixture is rebuilt, never
+    * trusted. Keyed by a content fingerprint of documents.parquet. */
   private def stageVersionedTable(spark: SparkSession, dir: String): String =
     synchronized {
-      import spark.implicits._
       val fp = contentFingerprint(spark, s"$dir/documents.parquet")
       val root = staging("p23tt", s"$dir#$fp")
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val hfs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
       if (!hfs.exists(new org.apache.hadoop.fs.Path(s"$root/done"))) {
         hfs.delete(rootPath, true)
-        def commit(version: Int, kind: String, path: String): Unit =
-          Seq((version, kind, path)).toDF("version", "kind", "path")
-            .write.mode("append").parquet(s"$root/commit_log")
-        (0 to 2).foreach { v =>
-          val p = s"$root/delta_v$v"
-          Tables.documents(spark, dir).filter(col("doc_id") % 4 === v)
-            .select(col("doc_id"), col("lang"), col("n_chars"))
-            .coalesce(1).write.mode("overwrite").parquet(p)
-          commit(v, "insert", p)
+        def commit(kind: String, path: String, df: DataFrame): Unit = {
+          df.coalesce(1).write.mode("overwrite").parquet(path)
+          OccCommitLog.commitMeta(hfs, s"$root/log", kind, path,
+            Map("schema" -> df.schema.toDDL))
         }
-        val tomb = s"$root/tombstones_v3"
-        Tables.documents(spark, dir).filter(col("doc_id") % 3 === 0)
-          .select(col("doc_id")).coalesce(1).write.mode("overwrite").parquet(tomb)
-        commit(3, "delete", tomb)
+        (0 to 2).foreach { v =>
+          commit("insert", s"$root/delta_v$v",
+            Tables.documents(spark, dir).filter(col("doc_id") % 4 === v)
+              .select(col("doc_id"), col("lang"), col("n_chars")))
+        }
+        commit("delete", s"$root/tombstones_v3",
+          Tables.documents(spark, dir).filter(col("doc_id") % 3 === 0)
+            .select(col("doc_id")))
         spark.range(1).write.mode("overwrite").parquet(s"$root/done")
       }
       root
     }
 
-  /** The p23 snapshot reader — plans a version's rows from EXACTLY the
-    * commit-log files with version ≤ v: file-level pruning off a
-    * metadata-scale log read (PlanAuditSpec pins that the as-of-1 plan
-    * never references the v2 delta or the tombstones), with deletes
-    * applied merge-on-read as a broadcast anti-join of the tombstone
-    * id list. Public as the test hook. */
-  def p23SnapshotAsOf(spark: SparkSession, dir: String, v: Int): DataFrame = {
-    val root = stageVersionedTable(spark, dir)
-    val log = readCommitLog(spark, root).filter(_._1 <= v)
-    val inserts = log.filter(_._2 == "insert").map(_._3).sorted
-    val tombs = log.filter(_._2 == "delete").map(_._3).sorted
-    val data = spark.read.parquet(inserts.toIndexedSeq: _*)
+  /** The versioned table's log under `root`: a directory listing, no
+    * Spark job. */
+  private def versionedTableLog(spark: SparkSession,
+      root: String): Seq[OccCommitLog.Commit] = {
+    val logDir = s"$root/log"
+    OccCommitLog.read(new org.apache.hadoop.fs.Path(logDir)
+      .getFileSystem(spark.sessionState.newHadoopConf()), logDir)
+  }
+
+  /** The artifacts of `commits` read under the schema their commits
+    * recorded — no inference job, no footer read. Every commit must
+    * carry a `schema` token and all must agree; a missing or
+    * conflicting token fails naming the version, never falls back to
+    * inference. */
+  private def readLogged(spark: SparkSession, commits: Seq[OccCommitLog.Commit],
+      label: String): DataFrame = {
+    val ddls = commits.map { c =>
+      c.version -> c.meta.getOrElse("schema", throw new IllegalStateException(
+        s"commit at version ${c.version} in $label (${c.kind} ${c.path}) " +
+          "records no schema — the versioned-table log must carry one per action"))
+    }
+    val (v0, ddl) = ddls.head
+    ddls.find(_._2 != ddl).foreach { case (v, other) =>
+      throw new IllegalStateException(
+        s"commit at version $v in $label records schema '$other', " +
+          s"conflicting with version $v0's '$ddl'")
+    }
+    spark.read.schema(ddl).parquet(commits.map(_.path).sorted: _*)
+  }
+
+  /** A version's rows from EXACTLY the log's commits with version ≤ v
+    * (file-level pruning off the log listing — PlanAuditSpec pins that
+    * the as-of-1 plan never references the v2 delta or the tombstones),
+    * with deletes applied merge-on-read as a broadcast anti-join of the
+    * tombstone id list. */
+  private def snapshotOf(spark: SparkSession, log: Seq[OccCommitLog.Commit],
+      v: Int, label: String): DataFrame = {
+    val visible = log.filter(_.version <= v)
+    val inserts = visible.filter(_.kind == "insert")
+    val tombs = visible.filter(_.kind == "delete")
+    require(inserts.nonEmpty,
+      s"no snapshot exists at or before version $v in $label")
+    val data = readLogged(spark, inserts, label)
     if (tombs.isEmpty) data
-    else data.join(broadcast(spark.read.parquet(tombs.toIndexedSeq: _*)),
+    else data.join(broadcast(readLogged(spark, tombs, label)),
       Seq("doc_id"), "left_anti")
   }
+
+  /** The p23 snapshot reader over the shared stage. Public as the test
+    * hook. */
+  def p23SnapshotAsOf(spark: SparkSession, dir: String, v: Int): DataFrame =
+    p23SnapshotFromRoot(spark, stageVersionedTable(spark, dir), v)
+
+  /** The same reader off an EXPLICIT versioned-table root (a spec's
+    * hand-built log). */
+  def p23SnapshotFromRoot(spark: SparkSession, root: String, v: Int): DataFrame =
+    snapshotOf(spark, versionedTableLog(spark, root), v, root)
 
   /** p23 — TIME TRAVEL: read the versioned table AS OF every commit
     * version and aggregate each snapshot. Version 0–2 grow by one
     * insert delta each; version 3 shows the delete taking effect while
     * versions 0–2 still see the deleted rows — snapshot isolation in
-    * the exact sense the lakehouse formats promise. Scale shape: the
-    * commit log is one row per file, so an as-of read costs only its
-    * snapshot's files (a 100 TB table's history adds log rows, not
-    * scan volume); deletes stay merge-on-read until a compaction
-    * (p08/a15's rewrite path) folds them in. */
-  def p23TimeTravel(spark: SparkSession, dir: String): DataFrame =
+    * the exact sense the lakehouse formats promise. The log is listed
+    * once for all four versions, and every artifact is read under its
+    * logged schema, so building the plan runs no Spark job. Scale
+    * shape: the commit log is one file per commit, so an as-of read
+    * costs only its snapshot's files (a 100 TB table's history adds log
+    * files, not scan volume); deletes stay merge-on-read until a
+    * compaction (p08/a15's rewrite path) folds them in. */
+  def p23TimeTravel(spark: SparkSession, dir: String): DataFrame = {
+    val root = stageVersionedTable(spark, dir)
+    val log = versionedTableLog(spark, root)
     (0 to 3).map { v =>
-      p23SnapshotAsOf(spark, dir, v)
+      snapshotOf(spark, log, v, root)
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).cast("long").as("sum_chars"))
         .select(lit(v).as("version"), col("n_docs"), col("sum_chars"))
     }.reduce(_.unionByName(_)).orderBy(col("version"))
+  }
 
   /** The p29 change-feed reader: every commit in `(from, to]` emitted
     * as change rows — insert deltas with their payload, delete commits
@@ -617,27 +667,33 @@ object PipelineQueries {
     * the log recorded them — an ids-only tombstone list — because on a
     * merge-on-read table that IS the change (the standard CDC-feed
     * contract, p11's input shape; applying a delete for a row the
-    * consumer never had is a no-op downstream). Public as the test
-    * hook. */
+    * consumer never had is a no-op downstream). The triples come from
+    * the stage's OCC log listing. Public as the test hook. */
   def p29ChangesBetween(spark: SparkSession, dir: String,
       from: Int, to: Int): DataFrame =
-    p29ChangesFromRoot(spark, stageVersionedTable(spark, dir), from, to)
+    p29ChangesFromTriples(spark,
+      versionedTableLog(spark, stageVersionedTable(spark, dir))
+        .map(c => (c.version, c.kind, c.path)), from, to)
 
-  /** The same feed off an EXPLICIT log root (the p33 owned/checkpointed
-    * stage, a spec fixture) — one reader body however many logs carry
-    * the contract. Two commitments beyond the shared-stage reader:
-    * `snapshot` commits are SKIPPED (a checkpoint is derived data — it
-    * introduces no change; Delta's CDF likewise never emits checkpoint
-    * contents as table changes) while truly unknown kinds still fail
-    * loudly, and every in-range data file is existence-checked before
-    * it is planned — a consumer pulling changes from behind the
-    * retention horizon gets the NAMED contract error, not whatever the
-    * scan happens to throw (one stat per in-range commit,
-    * metadata-scale). */
+  /** The same feed off an EXPLICIT parquet log root (the p33
+    * owned/checkpointed stage). */
   def p29ChangesFromRoot(spark: SparkSession, root: String,
-      from: Int, to: Int): DataFrame = {
-    val log = readCommitLog(spark, root)
-      .filter(c => c._1 > from && c._1 <= to).sortBy(_._1)
+      from: Int, to: Int): DataFrame =
+    p29ChangesFromTriples(spark, readCommitLog(spark, root), from, to)
+
+  /** The feed body over in-hand (version, kind, path) triples — one
+    * reader body however many logs carry the contract. Two commitments
+    * beyond a plain read: `snapshot` commits are SKIPPED (a checkpoint
+    * is derived data — it introduces no change; Delta's CDF likewise
+    * never emits checkpoint contents as table changes) while truly
+    * unknown kinds still fail loudly, and every in-range data file is
+    * existence-checked before it is planned — a consumer pulling
+    * changes from behind the retention horizon gets the NAMED contract
+    * error, not whatever the scan happens to throw (one stat per
+    * in-range commit, metadata-scale). */
+  private def p29ChangesFromTriples(spark: SparkSession,
+      triples: Seq[(Int, String, String)], from: Int, to: Int): DataFrame = {
+    val log = triples.filter(c => c._1 > from && c._1 <= to).sortBy(_._1)
     val conf = spark.sessionState.newHadoopConf()
     def pullable(v: Int, p: String): String = {
       val hp = new org.apache.hadoop.fs.Path(p)
@@ -696,7 +752,8 @@ object PipelineQueries {
     * log-owned storage — p28's ownership model brought to the TABLE
     * side, so checkpoint and vacuum may physically reclaim data files
     * without touching the shared p23 stage every other query (p23,
-    * p29, s37) serves from. Same artifact names, same commit triples,
+    * p29, s37) serves from. Same artifact names, same commit triples
+    * (listed from the stage's OCC log, written here as a parquet log),
     * marker last. */
   private[queries] def stageP33OwnedTableLog(spark: SparkSession, dir: String,
       tag: String = "p33tt", force: Boolean = false): String = synchronized {
@@ -708,9 +765,9 @@ object PipelineQueries {
     if (force || !hfs.exists(new org.apache.hadoop.fs.Path(s"$root/done"))) {
       hfs.delete(rootPath, true)
       val src = stageVersionedTable(spark, dir)
-      readCommitLog(spark, src).sortBy(_._1).map { case (v, kind, p) =>
-        val name = p.substring(p.lastIndexOf('/') + 1)
-        (v, kind, copyDir(spark, p, s"$root/$name"))
+      versionedTableLog(spark, src).map { c =>
+        val name = c.path.substring(c.path.lastIndexOf('/') + 1)
+        (c.version, c.kind, copyDir(spark, c.path, s"$root/$name"))
       }.toDF("version", "kind", "path")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/commit_log")
       spark.range(1).write.mode("overwrite").parquet(s"$root/done")

@@ -22,12 +22,10 @@ object KinesisSink extends Logging {
 
     @transient private var producer: RecordProducer = _
     @transient private var buf: ArrayBuffer[ProducedRecord] = _
-    @transient private var failures: Long = 0L
 
     override def open(partitionId: Long, epochId: Long): Boolean = {
       producer = producerFactory()
       buf = new ArrayBuffer[ProducedRecord]()
-      failures = 0L
       true
     }
 
@@ -40,7 +38,7 @@ object KinesisSink extends Logging {
       try {
         val results = producer.putRecords(stream, buf.toSeq)
         results.foreach { r =>
-          if (r.failed) { failures += 1; logError(s"Failed to produce record: ${r.errorMessage}") }
+          if (r.failed) logError(s"Failed to produce record: ${r.errorMessage}")
           else logInfo(s"Produced sequence ${r.sequenceNumber} to ${r.shardId}")
         }
       } catch {

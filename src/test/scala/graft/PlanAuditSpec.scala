@@ -877,6 +877,38 @@ class PlanAuditSpec extends AnyFunSuite {
       s"merge-on-read delete must be a broadcast anti-join:\n$p3")
   }
 
+  /** Spark jobs started while `build` runs, the async listener bus
+    * drained on both sides so no earlier job leaks in or later one out. */
+  private def jobsStartedBy(build: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Internals
+    val sc = spark.sparkContext
+    Internals.drainListenerBus(sc)
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try { build; Internals.drainListenerBus(sc); started.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("p23: building the time-travel plan starts no Spark job — the log carries files and schemas") {
+    PipelineQueries.p23SnapshotAsOf(spark, dir, 0) // stage the table once
+    // the log read is a listing and every artifact is read under its
+    // logged schema: no collect, no schema-inference job
+    val jobs = jobsStartedBy(PipelineQueries.p23TimeTravel(spark, dir))
+    assert(jobs == 0, s"building p23's plan started $jobs Spark jobs")
+  }
+
+  test("p29: building the change feed starts at most one job per artifact read") {
+    PipelineQueries.p29LogChanges(spark, dir) // stage the table once
+    // the triples come from the log listing; only the three in-range
+    // artifacts' schemaless reads may infer a schema
+    val jobs = jobsStartedBy(PipelineQueries.p29LogChanges(spark, dir))
+    assert(jobs <= 3, s"building p29's feed started $jobs Spark jobs")
+  }
+
   test("p13: sorted layout's row-group stats skip the month; insert order cannot") {
     import scala.jdk.CollectionConverters._
     PipelineQueries.p13SortLayout(spark, dir).collect() // materialize staging

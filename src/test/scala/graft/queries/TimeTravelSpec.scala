@@ -425,6 +425,35 @@ class TimeTravelSpec extends AnyFunSuite {
       "second table vacuum must be a no-op")
   }
 
+  test("p23: a commit without a logged schema, or with a conflicting one, fails naming its version") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.operators.OccCommitLog
+    val root = java.nio.file.Files.createTempDirectory("p23schema").toString
+    try {
+      val docs = spark.range(4).select(col("id").as("doc_id"),
+        lit("en").as("lang"), lit(1L).as("n_chars"))
+      (0 to 2).foreach(v => docs.write.parquet(s"$root/delta_v$v"))
+      val logDir = s"$root/log"
+      OccCommitLog.commitMeta(fs(root), logDir, "insert", s"$root/delta_v0",
+        Map("schema" -> docs.schema.toDDL))
+      OccCommitLog.commitMeta(fs(root), logDir, "insert", s"$root/delta_v1",
+        Map("schema" -> "doc_id INT"))
+      OccCommitLog.commit(fs(root), logDir, "insert", s"$root/delta_v2")
+      assert(PipelineQueries.p23SnapshotFromRoot(spark, root, 0).count() == 4)
+      val conflict = intercept[IllegalStateException] {
+        PipelineQueries.p23SnapshotFromRoot(spark, root, 1)
+      }
+      assert(conflict.getMessage.contains("version 1"),
+        s"a conflicting schema must name its version: $conflict")
+      val missing = intercept[IllegalStateException] {
+        PipelineQueries.p23SnapshotFromRoot(spark, root, 2)
+      }
+      assert(missing.getMessage.contains("version 2") &&
+        missing.getMessage.contains("no schema"),
+        s"a missing schema must name its version: $missing")
+    } finally fs(root).delete(new Path(root), true)
+  }
+
   test("p29: a change-feed read plans only the in-range commits' files") {
     val files = PipelineQueries.p29ChangesBetween(spark, dir, 0, 3)
       .inputFiles.toSeq
