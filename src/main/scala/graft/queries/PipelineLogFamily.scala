@@ -38,7 +38,9 @@ import graft.Tables
   * Shared machinery deliberately single-sourced:
   * [[PipelineQueries.tableAsOfTriples]] resolves snapshots,
   * [[PipelineQueries.tableVacuumTriples]] reclaims folded history —
-  * one rule for the parquet log (p33) and the OCC log (p35/s44). */
+  * one rule for the parquet log (p33) and the OCC log (p35/s44) — and
+  * [[LoggedTable]] lands and reads the schema-logged p38/p41/p43/p44
+  * tables. */
 private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
 
   // ---------------------------------------------------------------- p34
@@ -450,38 +452,38 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
 
   // ---------------------------------------------------------------- p38
 
-  /** VERSION-RANKED merge-on-read resolution — the UPDATE-aware
-    * generalization of [[PipelineQueries.tableAsOfTriples]]'s rule: a
-    * row from an insert at version vi survives iff no delete of its id
-    * exists at a version AFTER vi (a delete in the SAME version
+  /** VERSION-RANKED merge-on-read resolution over an OCC log whose
+    * insert and delete actions carry `schema` tokens — the
+    * UPDATE-aware generalization of [[PipelineQueries.tableAsOfTriples]]'s
+    * rule: a row from an insert at version vi survives iff no delete of
+    * its id exists at a version AFTER vi (a delete in the SAME version
     * applies before its co-committed insert — the within-commit order
     * that makes delete+replacement an update). When no id is ever
     * re-inserted the two rules coincide; when one is, this rule reads
     * the update correctly where a flat anti-join would kill the
-    * replacement along with the original. Scalable shape: per-id MAX
-    * delete version broadcast-joined once — no per-version fold, plan
-    * depth constant in history length (Hudi's record-level
-    * merge-on-read; Delta reaches the same semantics with file-grained
-    * removes). */
-  private[queries] def tableAsOfOrdered(spark: SparkSession,
-      triples: Seq[(Int, String, String)], v: Int, label: String): DataFrame = {
-    val log = triples.filter(_._1 <= v)
-    val inserts = log.filter(_._2 == "insert")
-    val deletes = log.filter(_._2 == "delete")
+    * replacement along with the original. Every artifact is read under
+    * its logged schema ([[LoggedTable.readLogged]]), so building the
+    * plan starts no Spark job, and a missing or conflicting token fails
+    * naming its version. The rule is ONE broadcast left-anti join of
+    * the version-tagged delete ids on `doc_id = _did AND _vd > _vi`: no
+    * per-version fold and no per-id aggregate, plan depth constant in
+    * history length (Hudi's record-level merge-on-read; Delta reaches
+    * the same semantics with file-grained removes). */
+  def tableAsOfOrdered(spark: SparkSession,
+      log: Seq[graft.operators.OccCommitLog.Commit], v: Int,
+      label: String): DataFrame = {
+    val visible = log.filter(_.version <= v)
+    val inserts = visible.filter(_.kind == "insert")
+    val deletes = visible.filter(_.kind == "delete")
     require(inserts.nonEmpty, s"no data exists at or before version $v in $label")
-    val data = inserts.map { case (vi, _, p) =>
-      spark.read.parquet(p).withColumn("_vi", lit(vi))
-    }.reduce(_ unionByName _)
-    if (deletes.isEmpty) data.drop("_vi")
-    else {
-      val dels = deletes.map { case (vd, _, p) =>
-        spark.read.parquet(p).select(col("doc_id"), lit(vd).as("_vd"))
-      }.reduce(_ unionByName _)
-        .groupBy(col("doc_id")).agg(max(col("_vd")).as("_vd"))
-      data.join(broadcast(dels), Seq("doc_id"), "left")
-        .filter(col("_vd").isNull || col("_vd") <= col("_vi"))
-        .drop("_vi", "_vd")
-    }
+    val data = LoggedTable.readLogged(spark, inserts, label, Some("_vi"))
+    val live =
+      if (deletes.isEmpty) data
+      else data.join(
+        broadcast(LoggedTable.readLogged(spark, deletes, label, Some("_vd"))
+          .select(col("doc_id").as("_did"), col("_vd"))),
+        col("doc_id") === col("_did") && col("_vd") > col("_vi"), "left_anti")
+    live.drop("_vi")
   }
 
   /** p38 — ATOMIC ROW UPDATE through the log (Delta's multi-action
@@ -494,10 +496,16 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * ([[graft.operators.OccCommitLog.commitActions]] — the version
     * file is a single put-if-absent publish, so readers see all
     * actions or none): delete(ids ≡ 0 mod 5) + insert(the same docs
-    * with n_chars bumped 100). The head read resolves with
-    * [[tableAsOfOrdered]] and the oracle recomputes the updated column
-    * from the definitions — a torn read, a lost replacement, or a
-    * surviving original all break the hash. TableLogSpec pins the
+    * with n_chars bumped 100). All four artifacts land at the same
+    * time through [[LoggedTable.land]], and only then do the three
+    * commits follow (versions 0, 1 and the update at 2), each action
+    * carrying its artifact's `schema` token — so every commit names
+    * fully landed data. The head read resolves with
+    * [[tableAsOfOrdered]] under the logged schemas (building it starts
+    * no Spark job; PlanAuditSpec pins that and the run's job count),
+    * and the oracle recomputes the updated column from the
+    * definitions — a torn read, a lost replacement, or a surviving
+    * original all break the hash. TableLogSpec pins the
     * other halves: as-of BEFORE the update serves the originals, a
     * writer crashing between staging and commit leaves NOTHING
     * visible, and its txn replay lands exactly one commit. */
@@ -510,27 +518,25 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     val occ = graft.operators.OccCommitLog
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq(0, 1).foreach { k =>
-      val p = s"$root/delta_r$k"
-      docs.filter(col("doc_id") % 2 === k).coalesce(1)
-        .write.mode("overwrite").parquet(p)
-      occ.commit(fs, logDir, "insert", p, txn = Some(("p38-ingest", k.toLong)))
-    }
-    // the UPDATE: both artifacts staged FIRST (a commit names fully
-    // landed data), then ONE commit carries delete + replacement
-    docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/upd_del")
-    docs.filter(col("doc_id") % 5 === 0)
-      .withColumn("n_chars", col("n_chars") + 100)
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/upd_ins")
-    val uv = occ.commitActions(fs, logDir,
-      Seq(("delete", s"$root/upd_del"), ("insert", s"$root/upd_ins")),
+    val updated = docs.filter(col("doc_id") % 5 === 0)
+    // every artifact lands before the first commit; the UPDATE is then
+    // ONE commit carrying delete + replacement
+    val Seq(r0, r1, del, ins) = LoggedTable.land(Seq(
+      s"$root/delta_r0" -> docs.filter(col("doc_id") % 2 === 0),
+      s"$root/delta_r1" -> docs.filter(col("doc_id") % 2 === 1),
+      s"$root/upd_del" -> updated.select(col("doc_id")),
+      s"$root/upd_ins" -> updated.withColumn("n_chars", col("n_chars") + 100)))
+    occ.commitMeta(fs, logDir, "insert", s"$root/delta_r0", r0,
+      txn = Some(("p38-ingest", 0L)))
+    occ.commitMeta(fs, logDir, "insert", s"$root/delta_r1", r1,
+      txn = Some(("p38-ingest", 1L)))
+    val uv = occ.commitActionsMeta(fs, logDir,
+      Seq(("delete", s"$root/upd_del", del), ("insert", s"$root/upd_ins", ins)),
       txn = Some(("p38-updater", 1L)))
     val log = occ.read(fs, logDir)
     require(uv == 2 && log.count(_.version == uv) == 2,
       s"the update must be ONE version carrying BOTH actions: $log")
-    tableAsOfOrdered(spark, occ.readTriples(fs, logDir), uv, logDir)
-      .orderBy(col("doc_id"))
+    tableAsOfOrdered(spark, log, uv, logDir).orderBy(col("doc_id"))
   }
 
   // ---------------------------------------------------------------- p39
@@ -707,38 +713,48 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
 
   // ---------------------------------------------------------------- p41
 
-  /** The CDF fixture: an OCC table whose history holds all four change
-    * shapes — two plain inserts (v0: ids ≡ 0 mod 2, v1: the rest), the
-    * p38 atomic UPDATE (v2: delete ids ≡ 0 mod 5 + their replacements
-    * with n_chars+100, ONE multi-action commit), and a plain delete
-    * (v3: ids ≡ 0 mod 7). Ids ≡ 0 mod 35 are updated THEN deleted —
-    * the overlap that makes pre-image resolution observable. */
+  /** The four-shape history p41 and p43 serve, committed to `root/log`:
+    * two plain inserts (v0: ids ≡ 0 mod 2, v1: the rest), the p38
+    * atomic UPDATE (v2: delete ids ≡ 0 mod 5 + their replacements with
+    * n_chars+100, ONE multi-action commit), and a plain delete (v3: ids
+    * ≡ 0 mod 7). Ids ≡ 0 mod 35 are updated THEN deleted — the overlap
+    * that makes pre-image resolution observable. All five artifacts
+    * land through [[LoggedTable.land]] before the first commit, and
+    * every action carries its `schema` token plus `stamp(version)`
+    * (p43's commit timestamps); `app` prefixes the writer-txn ids. */
+  private def commitFourShapeHistory(spark: SparkSession, dir: String,
+      root: String, app: String,
+      stamp: Int => Map[String, String] = _ => Map.empty): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val logDir = s"$root/log"
+    val occ = graft.operators.OccCommitLog
+    val docs = Tables.documents(spark, dir)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val updated = docs.filter(col("doc_id") % 5 === 0)
+    val Seq(d0, d1, uDel, uIns, t3) = LoggedTable.land(Seq(
+      s"$root/d0" -> docs.filter(col("doc_id") % 2 === 0),
+      s"$root/d1" -> docs.filter(col("doc_id") % 2 === 1),
+      s"$root/u_del" -> updated.select(col("doc_id")),
+      s"$root/u_ins" -> updated.withColumn("n_chars", col("n_chars") + 100),
+      s"$root/t3" -> docs.filter(col("doc_id") % 7 === 0).select(col("doc_id"))))
+    occ.commitMeta(fs, logDir, "insert", s"$root/d0", d0 ++ stamp(0),
+      txn = Some((s"$app-ing", 0L)))
+    occ.commitMeta(fs, logDir, "insert", s"$root/d1", d1 ++ stamp(1),
+      txn = Some((s"$app-ing", 1L)))
+    occ.commitActionsMeta(fs, logDir,
+      Seq(("delete", s"$root/u_del", uDel ++ stamp(2)),
+        ("insert", s"$root/u_ins", uIns ++ stamp(2))),
+      txn = Some((s"$app-upd", 1L)))
+    occ.commitMeta(fs, logDir, "delete", s"$root/t3", t3 ++ stamp(3),
+      txn = Some((s"$app-del", 1L)))
+  }
+
+  /** The CDF fixture: the four-shape history under p41's own root. */
   private[queries] def stageP41CdfTable(spark: SparkSession, dir: String): String = {
     val root = PipelineQueries.staging("p41cdf", dir)
     PipelineQueries.stageOnce("p41cdf", dir, Seq(root)) {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val logDir = s"$root/log"
-      val occ = graft.operators.OccCommitLog
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      Seq(0, 1).foreach { k =>
-        val p = s"$root/d$k"
-        docs.filter(col("doc_id") % 2 === k).coalesce(1)
-          .write.mode("overwrite").parquet(p)
-        occ.commit(fs, logDir, "insert", p, txn = Some(("p41-ing", k.toLong)))
-      }
-      docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/u_del")
-      docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("n_chars", col("n_chars") + 100)
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/u_ins")
-      occ.commitActions(fs, logDir,
-        Seq(("delete", s"$root/u_del"), ("insert", s"$root/u_ins")),
-        txn = Some(("p41-upd", 1L)))
-      docs.filter(col("doc_id") % 7 === 0).select(col("doc_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/t3")
-      occ.commit(fs, logDir, "delete", s"$root/t3", txn = Some(("p41-del", 1L)))
+      commitFourShapeHistory(spark, dir, root, "p41")
     }
     root
   }
@@ -759,10 +775,12 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     *     transaction (p38), so the feed needs no row-matching
     *     heuristics.
     *
-    * Pre-images are resolved at READ time — each delete-bearing
-    * version joins its id list (broadcast) against the table as of
-    * v−1 via [[tableAsOfOrdered]], so the feed costs O(pre-state) per
-    * delete-bearing version and O(changed bytes) for everything else.
+    * Every artifact is read under its logged schema
+    * ([[LoggedTable.readLogged]]). Pre-images are resolved at READ time
+    * — each delete-bearing version joins its id list (broadcast)
+    * against the table as of v−1 via [[tableAsOfOrdered]], so the feed
+    * costs O(pre-state) per delete-bearing version and O(changed
+    * bytes) for everything else.
     * Delta instead pays at WRITE time (`_change_data` files) to make
     * CDF reads pure scans; read-time resolution is the Hudi/Iceberg
     * incremental-read trade, honest here because delete-bearing
@@ -774,16 +792,16 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val occ = graft.operators.OccCommitLog
-    val log = occ.read(fs, s"$root/log")
-    val triples = log.map(c => (c.version, c.kind, c.path))
+    val label = s"$root/log"
+    val log = occ.read(fs, label)
     val cols = Seq("doc_id", "lang", "n_chars")
     def tagged(df: DataFrame, v: Int, tpe: String): DataFrame =
       df.select(lit(tpe).as("change_type") +: lit(v).as("version") +:
         cols.map(col): _*)
-    def preImage(v: Int, idPaths: Seq[String]): DataFrame =
-      tableAsOfOrdered(spark, triples, v - 1, s"$root/log")
-        .join(broadcast(spark.read.parquet(idPaths: _*).select(col("doc_id"))),
-          Seq("doc_id"), "left_semi")
+    def preImage(v: Int, dels: Seq[occ.Commit]): DataFrame =
+      tableAsOfOrdered(spark, log, v - 1, label)
+        .join(broadcast(LoggedTable.readLogged(spark, dels, label)
+          .select(col("doc_id"))), Seq("doc_id"), "left_semi")
     val frames = log.filter(c => c.version > from && c.version <= to)
       .groupBy(_.version).toSeq.sortBy(_._1).flatMap { case (v, actions) =>
         val known = actions.filter(a => a.kind == "insert" || a.kind == "delete")
@@ -793,20 +811,20 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
             s"p41: unknown commit kind '${a.kind}' at version $v — " +
               "the classified feed understands insert/delete actions only")
         }
-        val ins = known.filter(_.kind == "insert").map(_.path)
-        val del = known.filter(_.kind == "delete").map(_.path)
+        val ins = known.filter(_.kind == "insert")
+        val del = known.filter(_.kind == "delete")
         (ins.nonEmpty, del.nonEmpty) match {
           case (true, false) =>
-            Seq(tagged(spark.read.parquet(ins: _*), v, "insert"))
+            Seq(tagged(LoggedTable.readLogged(spark, ins, label), v, "insert"))
           case (false, true) =>
             Seq(tagged(preImage(v, del), v, "delete"))
           case (true, true) => Seq(
             tagged(preImage(v, del), v, "update_preimage"),
-            tagged(spark.read.parquet(ins: _*), v, "update_postimage"))
+            tagged(LoggedTable.readLogged(spark, ins, label), v, "update_postimage"))
           case (false, false) => Seq.empty // derived-only commit
         }
       }
-    require(frames.nonEmpty, s"no changes in ($from, $to] on $root/log")
+    require(frames.nonEmpty, s"no changes in ($from, $to] on $label")
     frames.reduce(_ unionByName _)
       .orderBy(col("version"), col("change_type"), col("doc_id"))
   }
@@ -936,42 +954,19 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
 
   /** The timestamp-stamped table: p41's four-shape history (two
     * inserts, the atomic update, a delete) rebuilt under its own root
-    * with every commit carrying a `ts` metadata token — Delta's
-    * per-commit timestamp, the thing `TIMESTAMP AS OF` resolves
-    * against. Timestamps here are LOGICAL ((v+1)·1000) because a
-    * gated query must be deterministic; production stamps wall-clock
-    * at publish and enforces monotonicity the same way Delta adjusts
-    * for clock skew (a commit's ts is max(now, prior ts + 1)). The
-    * resolution rule is identical either way. */
+    * with every commit carrying a `ts` metadata token beside its
+    * `schema` token — Delta's per-commit timestamp, the thing
+    * `TIMESTAMP AS OF` resolves against. Timestamps here are LOGICAL
+    * ((v+1)·1000) because a gated query must be deterministic;
+    * production stamps wall-clock at publish and enforces monotonicity
+    * the same way Delta adjusts for clock skew (a commit's ts is
+    * max(now, prior ts + 1)). The resolution rule is identical either
+    * way. */
   private[queries] def stageP43TsTable(spark: SparkSession, dir: String): String = {
     val root = PipelineQueries.staging("p43tt", dir)
     PipelineQueries.stageOnce("p43tt", dir, Seq(root)) {
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val logDir = s"$root/log"
-      val occ = graft.operators.OccCommitLog
-      def ts(v: Int) = Map("ts" -> ((v + 1) * 1000L).toString)
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      Seq(0, 1).foreach { k =>
-        val p = s"$root/d$k"
-        docs.filter(col("doc_id") % 2 === k).coalesce(1)
-          .write.mode("overwrite").parquet(p)
-        occ.commitMeta(fs, logDir, "insert", p, ts(k),
-          txn = Some(("p43-ing", k.toLong)))
-      }
-      docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/u_del")
-      docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("n_chars", col("n_chars") + 100)
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/u_ins")
-      occ.commitActionsMeta(fs, logDir,
-        Seq(("delete", s"$root/u_del", ts(2)), ("insert", s"$root/u_ins", ts(2))),
-        txn = Some(("p43-upd", 1L)))
-      docs.filter(col("doc_id") % 7 === 0).select(col("doc_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/t3")
-      occ.commitMeta(fs, logDir, "delete", s"$root/t3", ts(3),
-        txn = Some(("p43-del", 1L)))
+      commitFourShapeHistory(spark, dir, root, "p43",
+        v => Map("ts" -> ((v + 1) * 1000L).toString))
     }
     root
   }
@@ -1004,8 +999,9 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * as of instant 3500 — between the update's commit (ts 3000) and
     * the delete's (ts 4000) — resolved through the log's `ts`
     * metadata to version 2 and served with the version machinery
-    * ([[tableAsOfOrdered]]): timestamp resolution is a thin total
-    * order over version resolution, never a second read path. Gated
+    * ([[tableAsOfOrdered]], under the logged schemas): timestamp
+    * resolution is a thin total order over version resolution, never
+    * a second read path. Gated
     * by p38's oracle VERBATIM — asking by instant and asking by
     * version must be indistinguishable. TableLogSpec pins the
     * boundaries: before-first errors with the named contract message,
@@ -1020,9 +1016,7 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     val log = occ.read(fs, s"$root/log")
     val v = p43ResolveTimestamp(log, 3500L, s"$root/log")
     require(v == 2, s"instant 3500 must resolve between update and delete: got v$v")
-    tableAsOfOrdered(spark, log.map(c => (c.version, c.kind, c.path)), v,
-      s"$root/log")
-      .orderBy(col("doc_id"))
+    tableAsOfOrdered(spark, log, v, s"$root/log").orderBy(col("doc_id"))
   }
 
   // ---------------------------------------------------------------- p44
@@ -1053,7 +1047,10 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * a constraint the existing data violates must never enter the log
     * (TableLogSpec pins that refusal) — and v4 lands a delete list.
     * Constraints accumulate; every delta validates against ALL checks
-    * active at its version. */
+    * active at its version. Each artifact lands through
+    * [[LoggedTable.land]] one at a time, just before its own commit
+    * (a delta may land only after the checks it must pass are
+    * committed), and every action carries its `schema` token. */
   private[queries] def stageP44CheckedTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val root = PipelineQueries.staging("p44ck", dir)
@@ -1066,32 +1063,34 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
         .select(col("doc_id"), col("lang"), col("n_chars"))
       def activeChecks(): Seq[String] =
         occ.read(fs, logDir).filter(_.kind == "meta").flatMap(_.meta.get("check"))
-      def commitCheck(tag: String, check: String, txnV: Long): Unit = {
+      // one artifact at a time: each must pass the checks active when
+      // it lands, so none can land ahead of the commit before it
+      def landAndCommit(kind: String, tag: String, df: DataFrame,
+          meta: Map[String, String], txn: (String, Long)): Unit = {
         val p = s"$root/$tag"
-        Seq(check).toDF("check_expr").coalesce(1)
-          .write.mode("overwrite").parquet(p)
-        occ.commitMeta(fs, logDir, "meta", p, Map("check" -> check),
-          txn = Some(("p44-ddl", txnV)))
+        occ.commitMeta(fs, logDir, kind, p,
+          meta ++ LoggedTable.land(Seq(p -> df)).head, txn = Some(txn))
       }
+      def commitCheck(tag: String, check: String, txnV: Long): Unit =
+        landAndCommit("meta", tag, Seq(check).toDF("check_expr"),
+          Map("check" -> check), ("p44-ddl", txnV))
       commitCheck("check_v0", "n_chars >= 0 AND lang IS NOT NULL", 0L)
       Seq(0, 1).foreach { k =>
         val delta = docs.filter(col("doc_id") % 2 === k)
         p44EnforceChecks(delta, activeChecks(), s"delta $k")
-        val p = s"$root/d$k"
-        delta.coalesce(1).write.mode("overwrite").parquet(p)
-        occ.commit(fs, logDir, "insert", p, txn = Some(("p44-ing", k.toLong)))
+        landAndCommit("insert", s"d$k", delta, Map.empty, ("p44-ing", k.toLong))
       }
       // ADD CONSTRAINT: the whole table as of the read version must
       // already satisfy the new predicate before it may be declared
       val newCheck = "n_chars <= 100000000"
+      val log = occ.read(fs, logDir)
       p44EnforceChecks(
-        tableAsOfOrdered(spark, occ.readTriples(fs, logDir),
-          occ.read(fs, logDir).map(_.version).max, logDir),
+        tableAsOfOrdered(spark, log, log.map(_.version).max, logDir),
         Seq(newCheck), "ADD CONSTRAINT")
       commitCheck("check_v3", newCheck, 1L)
-      docs.filter(col("doc_id") % 3 === 0).select(col("doc_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/t4")
-      occ.commit(fs, logDir, "delete", s"$root/t4", txn = Some(("p44-del", 1L)))
+      landAndCommit("delete", "t4",
+        docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")),
+        Map.empty, ("p44-del", 1L))
     }
     root
   }
@@ -1104,9 +1103,11 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * metadata so enforcement needs one log read and one O(delta)
     * aggregate per landing. Gated by p33's membership oracle (the
     * p35 aliasing move, third log discipline, same answer): policing
-    * writes must leave no trace in what a valid history serves.
-    * TableLogSpec pins the refusals — a violating delta, a violating
-    * ADD CONSTRAINT — and SQL CHECK's NULL-passes rule. */
+    * writes must leave no trace in what a valid history serves. The
+    * head reads every artifact under its logged schema
+    * ([[tableAsOfOrdered]]). TableLogSpec pins the refusals — a
+    * violating delta, a violating ADD CONSTRAINT — and SQL CHECK's
+    * NULL-passes rule. */
   def p44CheckConstraints(spark: SparkSession, dir: String): DataFrame = {
     val root = stageP44CheckedTable(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -1115,8 +1116,7 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     val log = occ.read(fs, s"$root/log")
     require(log.filter(_.kind == "meta").flatMap(_.meta.get("check")).size == 2,
       s"the staged log must carry both declared checks: $log")
-    tableAsOfOrdered(spark, log.map(c => (c.version, c.kind, c.path)),
-      log.map(_.version).max, s"$root/log")
+    tableAsOfOrdered(spark, log, log.map(_.version).max, s"$root/log")
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy(col("doc_id"))
   }

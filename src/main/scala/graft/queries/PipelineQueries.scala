@@ -35,8 +35,11 @@ object PipelineQueries {
     * stageKwIndexTable builder, whose meta carries max_term_id — the
     * a19kw meta gained that column. v9: the p23 versioned-table stage's
     * log is now an OccCommitLog under `log/` whose every action carries
-    * its artifact's schema, replacing the parquet `commit_log`.) */
-  val StagingFormatVersion = 9
+    * its artifact's schema, replacing the parquet `commit_log`. v10: the
+    * p41/p43/p44 stages' insert and delete actions carry a `schema`
+    * token too; their readers have no inference fallback, so a v9
+    * fixture without tokens must be rebuilt, never read.) */
+  val StagingFormatVersion = 10
 
   /** Full-width digest key for a staging identity. Replaces the old
     * 32-bit `String.hashCode`, which can collide two distinct dirs —
@@ -549,9 +552,11 @@ object PipelineQueries {
     * artifact and carrying that artifact's schema as a `schema`
     * metadata token (DDL; Delta's `metaData.schemaString`), so the log
     * is the authority for both the file list and the schema: planning
-    * a snapshot lists the log and reads no footer. The log is written
-    * before the `done` marker so a half-built fixture is rebuilt, never
-    * trusted. Keyed by a content fingerprint of documents.parquet. */
+    * a snapshot lists the log and reads no footer. The four artifacts
+    * land together ([[LoggedTable.land]]) before the first commit, and
+    * the log is written before the `done` marker so a half-built
+    * fixture is rebuilt, never trusted. Keyed by a content fingerprint
+    * of documents.parquet. */
   private def stageVersionedTable(spark: SparkSession, dir: String): String =
     synchronized {
       val fp = contentFingerprint(spark, s"$dir/documents.parquet")
@@ -560,19 +565,16 @@ object PipelineQueries {
       val hfs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
       if (!hfs.exists(new org.apache.hadoop.fs.Path(s"$root/done"))) {
         hfs.delete(rootPath, true)
-        def commit(kind: String, path: String, df: DataFrame): Unit = {
-          df.coalesce(1).write.mode("overwrite").parquet(path)
-          OccCommitLog.commitMeta(hfs, s"$root/log", kind, path,
-            Map("schema" -> df.schema.toDDL))
+        val docs = Tables.documents(spark, dir)
+        val actions = (0 to 2).map { v =>
+          ("insert", s"$root/delta_v$v", docs.filter(col("doc_id") % 4 === v)
+            .select(col("doc_id"), col("lang"), col("n_chars")))
+        } :+ ("delete", s"$root/tombstones_v3",
+          docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")))
+        val tokens = LoggedTable.land(actions.map(a => a._2 -> a._3))
+        actions.zip(tokens).foreach { case ((kind, path, _), meta) =>
+          OccCommitLog.commitMeta(hfs, s"$root/log", kind, path, meta)
         }
-        (0 to 2).foreach { v =>
-          commit("insert", s"$root/delta_v$v",
-            Tables.documents(spark, dir).filter(col("doc_id") % 4 === v)
-              .select(col("doc_id"), col("lang"), col("n_chars")))
-        }
-        commit("delete", s"$root/tombstones_v3",
-          Tables.documents(spark, dir).filter(col("doc_id") % 3 === 0)
-            .select(col("doc_id")))
         spark.range(1).write.mode("overwrite").parquet(s"$root/done")
       }
       root
@@ -587,27 +589,6 @@ object PipelineQueries {
       .getFileSystem(spark.sessionState.newHadoopConf()), logDir)
   }
 
-  /** The artifacts of `commits` read under the schema their commits
-    * recorded — no inference job, no footer read. Every commit must
-    * carry a `schema` token and all must agree; a missing or
-    * conflicting token fails naming the version, never falls back to
-    * inference. */
-  private def readLogged(spark: SparkSession, commits: Seq[OccCommitLog.Commit],
-      label: String): DataFrame = {
-    val ddls = commits.map { c =>
-      c.version -> c.meta.getOrElse("schema", throw new IllegalStateException(
-        s"commit at version ${c.version} in $label (${c.kind} ${c.path}) " +
-          "records no schema — the versioned-table log must carry one per action"))
-    }
-    val (v0, ddl) = ddls.head
-    ddls.find(_._2 != ddl).foreach { case (v, other) =>
-      throw new IllegalStateException(
-        s"commit at version $v in $label records schema '$other', " +
-          s"conflicting with version $v0's '$ddl'")
-    }
-    spark.read.schema(ddl).parquet(commits.map(_.path).sorted: _*)
-  }
-
   /** A version's rows from EXACTLY the log's commits with version ≤ v
     * (file-level pruning off the log listing — PlanAuditSpec pins that
     * the as-of-1 plan never references the v2 delta or the tombstones),
@@ -620,9 +601,9 @@ object PipelineQueries {
     val tombs = visible.filter(_.kind == "delete")
     require(inserts.nonEmpty,
       s"no snapshot exists at or before version $v in $label")
-    val data = readLogged(spark, inserts, label)
+    val data = LoggedTable.readLogged(spark, inserts, label)
     if (tombs.isEmpty) data
-    else data.join(broadcast(readLogged(spark, tombs, label)),
+    else data.join(broadcast(LoggedTable.readLogged(spark, tombs, label)),
       Seq("doc_id"), "left_anti")
   }
 

@@ -909,6 +909,27 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(jobs <= 3, s"building p29's feed started $jobs Spark jobs")
   }
 
+  test("p38: building the head plan starts no Spark job") {
+    import graft.queries.AnalyticsQueries
+    AnalyticsQueries.p38AtomicUpdate(spark, dir).collect() // land + commit
+    val logDir = s"${PipelineQueries.staging("p38occ", dir)}/log"
+    val log = graft.operators.OccCommitLog.read(new org.apache.hadoop.fs.Path(logDir)
+      .getFileSystem(spark.sessionState.newHadoopConf()), logDir)
+    // every insert and delete is read under its logged schema: no
+    // schema-inference job, and the delete rule is a plan, not a collect
+    val jobs = jobsStartedBy(AnalyticsQueries.tableAsOfOrdered(spark, log, 2, logDir))
+    assert(jobs == 0, s"building p38's head plan started $jobs Spark jobs")
+  }
+
+  test("p38 end to end starts at most 9 jobs") {
+    import graft.queries.AnalyticsQueries
+    AnalyticsQueries.p38AtomicUpdate(spark, dir).collect() // warm
+    // one documents read, four artifact writes (landed together), and
+    // the head's collect
+    val jobs = jobsStartedBy(AnalyticsQueries.p38AtomicUpdate(spark, dir).collect())
+    assert(jobs <= 9, s"p38 end to end started $jobs Spark jobs")
+  }
+
   test("p13: sorted layout's row-group stats skip the month; insert order cannot") {
     import scala.jdk.CollectionConverters._
     PipelineQueries.p13SortLayout(spark, dir).collect() // materialize staging

@@ -178,9 +178,8 @@ class TableLogSpec extends AnyFunSuite {
     val root = AnalyticsQueries.stageP44CheckedTable(spark, dir)
     val log = graft.operators.OccCommitLog.read(fs(root), s"$root/log")
     assert(log.filter(_.kind == "meta").flatMap(_.meta.get("check")).size == 2)
-    val head = AnalyticsQueries.tableAsOfOrdered(spark,
-      log.map(c => (c.version, c.kind, c.path)), log.map(_.version).max,
-      "spec")
+    val head = AnalyticsQueries.tableAsOfOrdered(spark, log,
+      log.map(_.version).max, "spec")
     val e2 = intercept[IllegalArgumentException] {
       AnalyticsQueries.p44EnforceChecks(head, Seq("n_chars >= 1000"),
         "ADD CONSTRAINT")
@@ -243,9 +242,9 @@ class TableLogSpec extends AnyFunSuite {
     val root = PipelineQueries.staging("p38occ", dir)
     val occ = graft.operators.OccCommitLog
     val hfs = fs(root)
-    val triples = occ.readTriples(hfs, s"$root/log")
+    val log = occ.read(hfs, s"$root/log")
     // as-of BEFORE the update: every doc at its ORIGINAL n_chars
-    val pre = AnalyticsQueries.tableAsOfOrdered(spark, triples, 1, root)
+    val pre = AnalyticsQueries.tableAsOfOrdered(spark, log, 1, root)
     val bumped = pre.filter(col("doc_id") % 5 === 0)
       .join(graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("n_chars").as("orig")), Seq("doc_id"))
@@ -253,7 +252,7 @@ class TableLogSpec extends AnyFunSuite {
     assert(bumped == 0, "a pre-update snapshot saw updated rows")
     // torn state is UNREPRESENTABLE: no version carries the delete
     // without its replacement — v2 holds exactly both actions
-    val v2 = occ.read(hfs, s"$root/log").filter(_.version == 2)
+    val v2 = log.filter(_.version == 2)
     assert(v2.map(_.kind).sorted == Seq("delete", "insert"))
     // a second updater CRASHES between staging and commit: nothing
     // becomes visible (its staged artifacts exist, the log is
@@ -270,6 +269,158 @@ class TableLogSpec extends AnyFunSuite {
       txn = Some(("p38-updater", 1L)))
     assert(replayed == 2 && occ.read(hfs, s"$root/log").size == before,
       "a replayed update must resolve to its original commit")
+  }
+
+  /** A fresh temp root, passed to `body` and deleted afterwards. */
+  private def withTableRoot(body: String => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("tablelog").toString
+    try body(root) finally fs(root).delete(new Path(root), true)
+  }
+
+  private def rowsArtifact(path: String, rows: Seq[(Long, Long)]): Map[String, String] = {
+    val sp = spark
+    import sp.implicits._
+    val df = rows.map { case (id, n) => (id, s"l$id", n) }.toDF("doc_id", "lang", "n_chars")
+    LoggedTable.land(Seq(path -> df)).head
+  }
+
+  private def idsArtifact(path: String, ids: Seq[Long]): Map[String, String] = {
+    val sp = spark
+    import sp.implicits._
+    LoggedTable.land(Seq(path -> ids.toDF("doc_id"))).head
+  }
+
+  test("tableAsOfOrdered fails naming the version when an insert or delete action has no schema token, or a conflicting one") {
+    val occ = graft.operators.OccCommitLog
+    withTableRoot { root =>
+      val hfs = fs(root)
+      val rows = rowsArtifact(s"$root/d0", Seq(0L -> 0L, 1L -> 10L))
+      val ids = idsArtifact(s"$root/t1", Seq(1L))
+      // each case: v0 and v1 a proper insert and delete, v2 the action
+      // under test
+      val cases = Seq(
+        ("insert without a token", "insert", s"$root/d0", Map.empty[String, String], "no schema"),
+        ("delete without a token", "delete", s"$root/t1", Map.empty[String, String], "no schema"),
+        ("insert with a conflicting token", "insert", s"$root/d0", ids, "conflicting"),
+        ("delete with a conflicting token", "delete", s"$root/t1", rows, "conflicting"))
+      cases.zipWithIndex.foreach { case ((what, kind, path, meta, needle), i) =>
+        val logDir = s"$root/log$i"
+        occ.commitMeta(hfs, logDir, "insert", s"$root/d0", rows)
+        occ.commitMeta(hfs, logDir, "delete", s"$root/t1", ids)
+        occ.commitMeta(hfs, logDir, kind, path, meta)
+        val log = occ.read(hfs, logDir)
+        assert(AnalyticsQueries.tableAsOfOrdered(spark, log, 1, logDir).count() == 1)
+        val e = intercept[IllegalStateException] {
+          AnalyticsQueries.tableAsOfOrdered(spark, log, 2, logDir)
+        }
+        assert(e.getMessage.contains("version 2") && e.getMessage.contains(needle),
+          s"$what must fail naming version 2: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("tableAsOfOrdered: an id deleted, re-inserted by an update, then deleted again resolves at every version") {
+    val occ = graft.operators.OccCommitLog
+    withTableRoot { root =>
+      val hfs = fs(root)
+      val logDir = s"$root/log"
+      // version -> actions (kind, artifact name, rows or ids)
+      val history: Seq[Seq[(String, String, Seq[(Long, Long)])]] = Seq(
+        Seq(("insert", "d0", Seq(0L -> 0L, 1L -> 10L, 2L -> 20L, 3L -> 30L))),
+        Seq(("delete", "u1_del", Seq(1L -> 0L)), ("insert", "u1_ins", Seq(1L -> 111L))),
+        Seq(("delete", "t2", Seq(1L -> 0L, 2L -> 0L))),
+        Seq(("insert", "d3", Seq(1L -> 131L))),
+        Seq(("delete", "u4_del", Seq(1L -> 0L, 3L -> 0L)), ("insert", "u4_ins", Seq(3L -> 333L))))
+      history.foreach { actions =>
+        occ.commitActionsMeta(hfs, logDir, actions.map { case (kind, name, rows) =>
+          val p = s"$root/$name"
+          (kind, p,
+            if (kind == "insert") rowsArtifact(p, rows) else idsArtifact(p, rows.map(_._1)))
+        })
+      }
+      // the old rule, recomputed on the driver: a row inserted at vi
+      // survives iff the MAX delete version of its id (≤ v) is ≤ vi
+      def maxVersionRule(v: Int): Set[(Long, Long)] = {
+        val seen = history.zipWithIndex.take(v + 1)
+        val maxDel = seen.flatMap { case (as, vd) =>
+          as.filter(_._1 == "delete").flatMap(_._3.map(_._1 -> vd))
+        }.groupMapReduce(_._1)(_._2)(math.max)
+        seen.flatMap { case (as, vi) =>
+          as.filter(_._1 == "insert").flatMap(_._3)
+            .filter(r => maxDel.get(r._1).forall(_ <= vi))
+        }.toSet
+      }
+      val expected = Seq(
+        Set(0L -> 0L, 1L -> 10L, 2L -> 20L, 3L -> 30L),
+        Set(0L -> 0L, 1L -> 111L, 2L -> 20L, 3L -> 30L),
+        Set(0L -> 0L, 3L -> 30L),
+        Set(0L -> 0L, 1L -> 131L, 3L -> 30L),
+        Set(0L -> 0L, 3L -> 333L))
+      val log = occ.read(hfs, logDir)
+      expected.zipWithIndex.foreach { case (want, v) =>
+        assert(maxVersionRule(v) == want, s"the reference rule disagrees at v$v")
+        val got = AnalyticsQueries.tableAsOfOrdered(spark, log, v, logDir)
+          .collect().map(r => r.getLong(0) -> r.getLong(2)).toSet
+        assert(got == want, s"as of v$v")
+      }
+    }
+  }
+
+  test("landing: a failed write is rethrown naming its path after the other writes finish; nothing is committed") {
+    val occ = graft.operators.OccCommitLog
+    withTableRoot { root =>
+      val hfs = fs(root)
+      val logDir = s"$root/log"
+      occ.commitMeta(hfs, logDir, "insert", s"$root/d0",
+        rowsArtifact(s"$root/d0", Seq(0L -> 0L)))
+      val before = occ.read(hfs, logDir)
+      // a regular file where the failing artifact's parent dir should be
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/blocker"), "x")
+      val good = s"$root/good"
+      val bad = s"$root/blocker/bad"
+      // the failing write comes first and fails long before the good
+      // one, a larger write, can finish
+      val big = spark.range(0, 300000, 1, 4)
+        .selectExpr("id AS doc_id", "repeat('x', 64) AS pad")
+      val e = intercept[IllegalStateException] {
+        val Seq(b, g) = LoggedTable.land(Seq(
+          bad -> spark.range(10).toDF("doc_id"), good -> big))
+        occ.commitActionsMeta(hfs, logDir, Seq(("delete", bad, b), ("insert", good, g)))
+      }
+      assert(e.getMessage.contains(bad), e.getMessage)
+      assert(hfs.exists(new Path(s"$good/_SUCCESS")),
+        "the landing rethrew before its other write finished")
+      assert(occ.read(hfs, logDir) == before, "a failed landing moved the log")
+    }
+  }
+
+  test("landing: jobs started by the landing carry the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Internals
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    }
+    withTableRoot { root =>
+      Internals.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      sc.setJobGroup("tablelog-landing", "landing job-group pin")
+      try {
+        LoggedTable.land((0 until 3).map(k =>
+          s"$root/a$k" -> spark.range(k * 10, k * 10 + 10).toDF("doc_id")))
+        Internals.drainListenerBus(sc)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.size >= 3 && seen.forall(_ == "tablelog-landing"),
+      s"landing jobs lost the caller's job group: $seen")
   }
 
   test("graft-logfeed: version offsets survive the checkpoint, behind-horizon pulls and unknown kinds fail with named errors") {
