@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -18,6 +19,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import graft.operators.OccCommitLog
 
 /** The TABLE LOG as a first-class Structured Streaming SOURCE —
@@ -46,7 +48,10 @@ import graft.operators.OccCommitLog
   *     error, not whatever the scan happens to throw.
   *   - rows are read EXECUTOR-side (ReplaySource's reader discipline:
   *     the driver plans paths, PartitionReaders scan parquet), one
-  *     InputPartition per action.
+  *     InputPartition per action. The readers' Hadoop conf is the
+  *     session's, captured and broadcast once per stream when the
+  *     first trigger builds its reader factory (ReplaySource's
+  *     [[StreamHadoopConf]]); `stop()` destroys the broadcast.
   *
   * Options:
   *   - `logDir`                the OccCommitLog directory (required)
@@ -194,16 +199,21 @@ class LogFeedMicroBatchStream(options: CaseInsensitiveStringMap)
       }.toArray
   }
 
+  private val readerConf = new StreamHadoopConf
+
+  /** Readers resolve artifacts with the session's Hadoop conf as it
+    * was at the first trigger, shipped once per stream as a broadcast. */
   override def createReaderFactory(): PartitionReaderFactory =
-    new LogFeedReaderFactory(new SerializableHadoopConf(hconf))
+    new LogFeedReaderFactory(readerConf.get(spark))
 
   override def commit(end: Offset): Unit = () // the log is immutable
-  override def stop(): Unit = ()
+  override def stop(): Unit = readerConf.destroy()
 }
 
-class LogFeedReaderFactory(conf: SerializableHadoopConf) extends PartitionReaderFactory {
+class LogFeedReaderFactory(conf: Broadcast[SerializableConfiguration])
+  extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new LogFeedPartitionReader(partition.asInstanceOf[LogFeedInputPartition], conf.value)
+    new LogFeedPartitionReader(partition.asInstanceOf[LogFeedInputPartition], conf.value.value)
 }
 
 /** Emits one change row per record of the action's parquet artifact:

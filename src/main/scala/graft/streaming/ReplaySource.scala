@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
@@ -11,6 +10,7 @@ import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -23,6 +23,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** T1/T2 as a REAL Structured Streaming source (reference contract:
   * main.py:39-44): a rate-limited `MicroBatchStream` that replays a
@@ -53,12 +54,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *      not replayed (documented contract, like a file source's
   *      processed-file log).
   *   4. Each trigger admits the timestamp range `(lastTs, hiTs]` due
-  *      under the pacing clock, packs the admitted groups into at most
-  *      ~2×cores `InputPartition`s carrying `(files, tsLo, tsHi)`, and
-  *      the `PartitionReader`s scan the staged parquet EXECUTOR-side
-  *      with a range predicate (row groups outside the range are
-  *      skipped via footer statistics). Task count is bounded by the
-  *      core count, not the group count.
+  *      under the pacing clock and plans one `InputPartition` per
+  *      staged file whose footer ts bounds overlap it, carrying
+  *      `(file, lastTs, hiTs)`; the `PartitionReader`s scan the staged
+  *      parquet EXECUTOR-side with that range predicate (row groups
+  *      outside the range are skipped via footer statistics). Task
+  *      count is the number of overlapping staged files, at most the
+  *      core count the snapshot was staged with: a paced trigger
+  *      usually reads one file with one task, a full drain every file
+  *      once. Each file has exactly one owner, so each row is read
+  *      once.
+  *   5. The session's Hadoop conf is captured once per stream, when
+  *      the first trigger builds its reader factory, and broadcast
+  *      (not re-serialized into every trigger's tasks); `stop()`
+  *      destroys the broadcast.
   *
   * Options:
   *   - `path`            parquet file/dir to replay (required)
@@ -212,75 +221,66 @@ object ReplayOffset {
   }
 }
 
-/** A pack of admitted timestamp groups: scan `files` for rows with
-  * `tsLoExclusive < ts_ms <= tsHiInclusive`. Carries only paths and
-  * bounds — rows are read executor-side. */
+/** One staged file's share of an admitted span: scan `file` for rows
+  * with `tsLoExclusive < ts_ms <= tsHiInclusive`. Carries only a path
+  * and bounds — rows are read executor-side. */
 case class ReplayInputPartition(
-    files: Array[String], tsLoExclusive: Long, tsHiInclusive: Long)
+    file: String, tsLoExclusive: Long, tsHiInclusive: Long)
   extends InputPartition
 
-/** Hadoop `Configuration` is not `java.io.Serializable`; standard
-  * writable-backed wrapper so executors resolve the staged files with
-  * the session's filesystem settings. */
-class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  @throws[IOException]
-  private def writeObject(out: ObjectOutputStream): Unit = value.write(out)
-  @throws[IOException]
-  private def readObject(in: ObjectInputStream): Unit = {
-    value = new Configuration(false)
-    value.readFields(in)
+/** The session's Hadoop conf for one stream's readers, built and
+  * broadcast the first time a reader factory needs it, and destroyed
+  * with the stream. Spark's `SerializableConfiguration` carries it:
+  * Spark's Kryo registration serializes it through Java
+  * serialization, so it arrives whole under either serializer. Shared
+  * by [[ReplayMicroBatchStream]] and [[LogFeedMicroBatchStream]]. */
+private[streaming] final class StreamHadoopConf {
+  private var bc: Broadcast[SerializableConfiguration] = null
+
+  def get(spark: SparkSession): Broadcast[SerializableConfiguration] = synchronized {
+    if (bc == null) bc = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    bc
+  }
+
+  def destroy(): Unit = synchronized {
+    if (bc != null) { bc.destroy(); bc = null }
   }
 }
 
-class ReplayReaderFactory(conf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ReplayInputPartition]
-    new ReplayPartitionReader(p, conf.value)
-  }
+class ReplayReaderFactory(conf: Broadcast[SerializableConfiguration])
+  extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new ReplayPartitionReader(partition.asInstanceOf[ReplayInputPartition], conf.value.value)
 }
 
-/** Scans each staged file with a `ts_ms` range predicate. The filter
+/** Scans one staged file with a `ts_ms` range predicate. The filter
   * is pushed to parquet-mr, which drops whole row groups via footer
   * statistics and filters records inside surviving groups; bounds are
   * re-checked here anyway (defense, not correctness-critical). */
 class ReplayPartitionReader(p: ReplayInputPartition, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
-  private val predicate = FilterApi.and(
-    FilterApi.gt(FilterApi.longColumn("ts_ms"), java.lang.Long.valueOf(p.tsLoExclusive)),
-    FilterApi.ltEq(FilterApi.longColumn("ts_ms"), java.lang.Long.valueOf(p.tsHiInclusive)))
-
-  private var fileIdx = -1
-  private var reader: ParquetReader[Group] = _
+  private val reader: ParquetReader[Group] = ParquetReader
+    .builder(new GroupReadSupport(), new HPath(p.file))
+    .withConf(conf)
+    .withFilter(FilterCompat.get(FilterApi.and(
+      FilterApi.gt(FilterApi.longColumn("ts_ms"), java.lang.Long.valueOf(p.tsLoExclusive)),
+      FilterApi.ltEq(FilterApi.longColumn("ts_ms"), java.lang.Long.valueOf(p.tsHiInclusive)))))
+    .build()
   private var current: Group = _
 
-  private def nextReader(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    fileIdx += 1
-    if (fileIdx >= p.files.length) return false
-    reader = ParquetReader
-      .builder(new GroupReadSupport(), new HPath(p.files(fileIdx)))
-      .withConf(conf)
-      .withFilter(FilterCompat.get(predicate))
-      .build()
-    true
-  }
-
   override def next(): Boolean = {
-    while (true) {
-      if (reader == null && !nextReader()) return false
-      var g = reader.read()
-      while (g != null) {
-        val ts = g.getLong("ts_ms", 0)
-        if (ts > p.tsLoExclusive && ts <= p.tsHiInclusive) {
-          current = g
-          return true
-        }
-        g = reader.read()
+    var g = reader.read()
+    while (g != null) {
+      val ts = g.getLong("ts_ms", 0)
+      if (ts > p.tsLoExclusive && ts <= p.tsHiInclusive) {
+        current = g
+        return true
       }
-      reader.close(); reader = null
+      g = reader.read()
     }
-    false // unreachable
+    false
   }
 
   override def get(): InternalRow = {
@@ -294,7 +294,7 @@ class ReplayPartitionReader(p: ReplayInputPartition, conf: Configuration)
       current.getLong("ts_ms", 0), str("partition_key"), str("payload")))
   }
 
-  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
+  override def close(): Unit = reader.close()
 }
 
 class ReplayMicroBatchStream(
@@ -371,8 +371,8 @@ class ReplayMicroBatchStream(
     val confKey = "spark.sql.legacy.parquet.nanosAsLong"
     val prev = spark.conf.getOption(confKey)
     if (nanosAsLong) spark.conf.set(confKey, "true")
-    try {
-      val projected = spark.read.parquet(path).selectExpr(
+    val projected = try {
+      val df = spark.read.parquet(path).selectExpr(
         s"CAST(($tsMillisExpr) AS BIGINT) AS ts_ms",
         s"CAST(($keyExpr) AS STRING) AS partition_key",
         s"CAST(($payloadExpr) AS STRING) AS payload")
@@ -380,17 +380,18 @@ class ReplayMicroBatchStream(
       // range-partition + sort so each file covers a tight contiguous
       // ts range — triggers then touch only their slice of files and
       // row-group stats prune inside each file
-      projected
-        .repartitionByRange(nFiles, col("ts_ms"))
+      df.repartitionByRange(nFiles, col("ts_ms"))
         .sortWithinPartitions("ts_ms")
         .write.mode("overwrite").parquet(dir)
+      df
     } finally {
       if (nanosAsLong) prev match {
         case Some(v) => spark.conf.set(confKey, v)
         case None    => spark.conf.unset(confKey)
       }
     }
-    val snapshot = spark.read.parquet(dir)
+    // the snapshot's schema is the projection's: no inference job
+    val snapshot = spark.read.schema(projected.schema).parquet(dir)
     // the driver schedule is 3 longs PER DISTINCT GROUP KEY. At
     // second/day-grained recordings that is metadata; for
     // millisecond-unique telemetry it would be 24 bytes/row — set
@@ -403,10 +404,12 @@ class ReplayMicroBatchStream(
       if (groupGranularityMs == 1L) col("ts_ms")
       else col("ts_ms") - pmod(col("ts_ms"), lit(groupGranularityMs)) +
         lit(groupGranularityMs - 1L)
-    val grouped = snapshot.groupBy(groupKey.as("g_ts")).count()
-      .orderBy(col("g_ts")).collect() // one row per distinct group: metadata
-    val ts = grouped.map(_.getLong(0))
-    val counts = grouped.map(_.getLong(1))
+    // one row per distinct group: metadata, so it is sorted on the
+    // driver rather than by a range exchange
+    val grouped = snapshot.groupBy(groupKey.as("g_ts")).count().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val ts = grouped.map(_._1)
+    val counts = grouped.map(_._2)
     val due = new Array[Long](ts.length)
     val cum = new Array[Long](ts.length)
     var i = 0
@@ -415,10 +418,9 @@ class ReplayMicroBatchStream(
       cum(i) = (if (i > 0) cum(i - 1) else 0L) + counts(i)
       i += 1
     }
-    val hconf = spark.sessionState.newHadoopConf()
-    ReplaySource.heartbeat(dir, hconf) // freshness marker for cross-JVM pruning
+    ReplaySource.heartbeat(dir, stageHconf) // freshness marker for cross-JVM pruning
     lastBeat = clock()
-    val files = snapshot.inputFiles.map(f => footerTsBounds(f, hconf)).sortBy(_._2)
+    val files = snapshot.inputFiles.map(f => footerTsBounds(f, stageHconf)).sortBy(_._2)
     logInfo(s"graft-replay staged ${ts.length} groups (${if (cum.isEmpty) 0L else cum.last} rows) " +
       s"into ${files.length} files at $dir")
     stagedRef = Staged(dir, files, ts, due, cum)
@@ -557,36 +559,26 @@ class ReplayMicroBatchStream(
   override def reportLatestOffset(): Offset =
     if (staged.ts.isEmpty) ReplayOffset.Start else ReplayOffset(staged.ts.last)
 
-  /** Packs the admitted groups into at most ~2×cores partitions, each
-    * carrying only `(files, tsLo, tsHi)`. Rows are fetched
-    * executor-side from the staged snapshot — nothing data-scale
-    * crosses the driver, and task count is bounded by cores, not by
-    * the number of distinct timestamps. */
+  /** One partition per staged file whose footer ts bounds overlap the
+    * admitted span `(startTs, endTs]`, each carrying only `(file,
+    * startTs, endTs)`. The snapshot is range-partitioned by `ts_ms`, so
+    * a paced trigger usually plans one file and a full drain plans
+    * each file once: task count is bounded by the staged file count,
+    * not by the number of distinct timestamps. Rows are fetched
+    * executor-side — nothing data-scale crosses the driver. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = staged
     val startTs = start.asInstanceOf[ReplayOffset].lastTs
     val endTs = end.asInstanceOf[ReplayOffset].lastTs
-    val from = idxAfter(s.ts, startTs)
-    val to = idxAfter(s.ts, endTs)
-    if (to <= from) return Array.empty
-    val nGroups = to - from
-    val maxParts = math.max(1, 2 * spark.sparkContext.defaultParallelism)
-    val nParts = math.min(maxParts, nGroups)
-    val per = (nGroups + nParts - 1) / nParts
-    (0 until nParts).iterator
-      .map(pi => (from + pi * per, math.min(from + (pi + 1) * per, to)))
-      .filter { case (gLo, gHi) => gLo < gHi } // ceil-split can leave empty tails
-      .map { case (gLo, gHi) =>
-        val lo = if (gLo == from) startTs else s.ts(gLo - 1)
-        val hi = s.ts(gHi - 1)
-        val files = s.files.collect { case (f, fLo, fHi) if fHi > lo && fLo <= hi => f }
-        ReplayInputPartition(files, lo, hi): InputPartition
-      }
-      .filter(_.asInstanceOf[ReplayInputPartition].files.nonEmpty).toArray
+    if (endTs <= startTs) return Array.empty
+    staged.files.collect { case (f, lo, hi) if hi > startTs && lo <= endTs =>
+      ReplayInputPartition(f, startTs, endTs): InputPartition
+    }
   }
 
+  private val readerConf = new StreamHadoopConf
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new ReplayReaderFactory(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+    new ReplayReaderFactory(readerConf.get(spark))
 
   override def commit(end: Offset): Unit = ()
 
@@ -598,6 +590,7 @@ class ReplayMicroBatchStream(
     val s = stagedRef
     if (s != null)
       ReplaySource.deleteStaged(s.dir, spark.sessionState.newHadoopConf())
+    readerConf.destroy()
     val h = cleanupHook
     if (h != null) {
       // clean exit: the hook's work is done, don't accumulate one

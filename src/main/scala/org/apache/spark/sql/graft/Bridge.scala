@@ -13,8 +13,8 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Two more `private[spark]` one-hop escalations the measurement and
-  * serving code needs:
+/** More `private[spark]` one-hop escalations the measurement, serving
+  * and test code needs:
   *
   *  - [[Internals.drainListenerBus]]: the listener bus is async, so
   *    snapshot-based accounting (shuffle-record deltas, executed-plan
@@ -24,7 +24,10 @@ object Bridge {
   *  - [[Internals.checkpointRdd]]: `Dataset.localCheckpoint` persists
   *    an internal RDD behind a `LogicalRDD` leaf with no public handle
   *    back to it, so pinned query-scale intermediates can't be
-  *    released without digging the RDD out of the analyzed plan. */
+  *    released without digging the RDD out of the analyzed plan.
+  *  - [[Internals.broadcastBlocks]]: a broadcast's storage is visible
+  *    only in the driver's block manager, so a leaked broadcast can be
+  *    seen only there. */
 object Internals {
   import org.apache.spark.SparkContext
   import org.apache.spark.rdd.RDD
@@ -42,4 +45,9 @@ object Internals {
     * frame is one (its analyzed plan is a bare `LogicalRDD` leaf). */
   def checkpointRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
+
+  /** Names of the broadcast blocks (values and pieces) the driver's
+    * block manager holds now. */
+  def broadcastBlocks(sc: SparkContext): Set[String] =
+    sc.env.blockManager.getMatchingBlockIds(_.isBroadcast).map(_.name).toSet
 }

@@ -930,6 +930,26 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(jobs <= 9, s"p38 end to end started $jobs Spark jobs")
   }
 
+  test("staging a replay stream starts at most 6 jobs") {
+    import graft.streaming.ReplayMicroBatchStream
+    val sp = spark
+    import sp.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft_audit_replay").toString
+    (0 until 1000).map(i => (i.toLong, s"k${i % 3}", s"p$i"))
+      .toDF("ts", "key", "payload").write.mode("overwrite").parquet(src)
+    val opts = new java.util.HashMap[String, String]()
+    Seq("path" -> src, "tsMillisExpr" -> "ts", "keyExpr" -> "key", "payloadExpr" -> "payload")
+      .foreach { case (k, v) => opts.put(k, v) }
+    val s = new ReplayMicroBatchStream(new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))
+    // the range-partitioned write, then the schedule's aggregate: the
+    // snapshot is read under the projection's schema and the schedule
+    // is sorted on the driver
+    try {
+      val jobs = jobsStartedBy(s.reportLatestOffset())
+      assert(jobs <= 6, s"staging a replay stream started $jobs Spark jobs")
+    } finally s.stop()
+  }
+
   test("p13: sorted layout's row-group stats skip the month; insert order cannot") {
     import scala.jdk.CollectionConverters._
     PipelineQueries.p13SortLayout(spark, dir).collect() // materialize staging

@@ -379,36 +379,142 @@ class StreamingSpec extends AnyFunSuite {
     s.stop(); s2.stop(); s3.stop(); s4.stop()
   }
 
-  test("replay source: partitions carry file ranges, rows read executor-side") {
+  /** A fresh 1000-row recording (ts 0..999, payload p<ts>) and an
+    * empty staging root beside it. */
+  private def thousandRows(): (String, String) = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_rs_plan").toString
-    val n = 1000
-    (0 until n).map(i => (i.toLong, s"k${i % 3}", s"p$i"))
+    (0 until 1000).map(i => (i.toLong, s"k${i % 3}", s"p$i"))
       .toDF("ts", "key", "payload").write.mode("overwrite").parquet(dir)
-    val s = new ReplayMicroBatchStream(replayOptions(dir))
-    val end = s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
-    val parts = s.planInputPartitions(ReplayOffset.Start, end)
-    val maxParts = 2 * spark.sparkContext.defaultParallelism
-    assert(parts.length <= maxParts,
-      s"$n groups must pack into <= $maxParts partitions, got ${parts.length}")
-    // ranges must tile the admitted span: disjoint, covering, ordered
-    val rps = parts.map(_.asInstanceOf[ReplayInputPartition])
-    rps.sliding(2).foreach {
-      case Array(a, b) => assert(a.tsHiInclusive == b.tsLoExclusive)
-      case _           =>
-    }
-    // the readers themselves must return every row exactly once
-    val factory = s.createReaderFactory()
-    val seen = rps.flatMap { p =>
+    (dir, java.nio.file.Files.createTempDirectory("graft_rs_stage").toString)
+  }
+
+  /** The parquet files a stream staged under `stageRoot`, as paths. */
+  private def stagedFiles(stageRoot: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(stageRoot))
+    try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+    finally s.close()
+  }
+
+  private def filePath(f: String): String = new org.apache.hadoop.fs.Path(f).toUri.getPath
+
+  /** Payloads `factory`'s readers return for `parts`. */
+  private def readAll(factory: org.apache.spark.sql.connector.read.PartitionReaderFactory,
+      parts: Seq[org.apache.spark.sql.connector.read.InputPartition]): Seq[String] =
+    parts.flatMap { p =>
       val r = factory.createReader(p)
       val buf = ArrayBuffer.empty[String]
-      while (r.next()) buf += r.get().getUTF8String(2).toString
-      r.close()
+      try while (r.next()) buf += r.get().getUTF8String(2).toString
+      finally r.close()
       buf
     }
+
+  test("replay source: partitions carry file ranges, rows read executor-side") {
+    val n = 1000
+    val (dir, stageRoot) = thousandRows()
+    val s = new ReplayMicroBatchStream(replayOptions(dir, "stagingDir" -> stageRoot))
+    val end = s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
+    val parts = s.planInputPartitions(ReplayOffset.Start, end)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(parts.length <= cores,
+      s"a full admission must plan <= $cores partitions, got ${parts.length}")
+    // each staged file is owned by exactly one partition
+    val rps = parts.map(_.asInstanceOf[ReplayInputPartition])
+    assert(rps.map(p => filePath(p.file)).sorted.toSeq == stagedFiles(stageRoot),
+      s"every staged file must appear in exactly one partition: ${rps.map(_.file).toSeq}")
+    // the readers themselves must return every row exactly once
+    val seen = readAll(s.createReaderFactory(), rps.toSeq)
     assert(seen.length == n)
     assert(seen.toSet == (0 until n).map(i => s"p$i").toSet)
     s.stop()
+  }
+
+  test("replay source: a one-group paced admission plans exactly one partition") {
+    val (dir, stageRoot) = thousandRows()
+    val s = new ReplayMicroBatchStream(
+      replayOptions(dir, "stagingDir" -> stageRoot, "maxGroupsPerTrigger" -> "1"))
+    try {
+      assert(stagedFiles(stageRoot).isEmpty)
+      s.reportLatestOffset() // stage
+      assert(stagedFiles(stageRoot).size > 1, "the fixture must stage several files")
+      val factory = s.createReaderFactory()
+      // a range-partitioned group lies inside one staged file, wherever
+      // the file boundaries fell
+      Seq(0L, 1L, 249L, 250L, 251L, 500L, 750L, 999L).foreach { ts =>
+        val start = if (ts == 0L) ReplayOffset.Start else ReplayOffset(ts - 1)
+        val end = s.latestOffset(start, s.getDefaultReadLimit)
+        assert(end == ReplayOffset(ts))
+        val parts = s.planInputPartitions(start, end)
+        assert(parts.length == 1, s"group $ts planned ${parts.length} partitions")
+        assert(readAll(factory, parts.toSeq) == Seq(s"p$ts"))
+      }
+    } finally s.stop()
+  }
+
+  test("replay reader factory round-trips through the Kryo and Java serializers") {
+    import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
+    import org.apache.spark.sql.connector.read.PartitionReaderFactory
+    // local mode never ships a reader factory to another JVM, so the
+    // executor-side deserialization is exercised here by hand
+    val (dir, stageRoot) = thousandRows()
+    val s = new ReplayMicroBatchStream(replayOptions(dir, "stagingDir" -> stageRoot))
+    try {
+      val end = s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
+      val parts = s.planInputPartitions(ReplayOffset.Start, end).toSeq
+      val factory = s.createReaderFactory()
+      val want = readAll(factory, parts).sorted
+      assert(want.size == 1000)
+      val conf = spark.sparkContext.getConf
+      Seq(new KryoSerializer(conf), new JavaSerializer(conf)).foreach { ser =>
+        val inst = ser.newInstance()
+        val back = inst.deserialize[PartitionReaderFactory](inst.serialize(factory))
+        assert(readAll(back, parts).sorted == want,
+          s"${ser.getClass.getSimpleName} round trip changed the rows")
+      }
+    } finally s.stop()
+  }
+
+  test("replay source: stop() destroys the stream's conf broadcast") {
+    val (dir, stageRoot) = thousandRows()
+    val s = new ReplayMicroBatchStream(replayOptions(dir, "stagingDir" -> stageRoot))
+    val end = s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
+    val parts = s.planInputPartitions(ReplayOffset.Start, end).toSeq
+    val factory = s.createReaderFactory()
+    assert(readAll(factory, parts).size == 1000)
+    s.stop()
+    val e = intercept[org.apache.spark.SparkException](factory.createReader(parts.head))
+    assert(e.getMessage.contains("destroyed"), e.getMessage)
+  }
+
+  test("starting and stopping several replay streams leaves no broadcast block behind") {
+    import org.apache.spark.sql.graft.Internals
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val (dir, stageRoot) = thousandRows()
+    val streams = (1 to 3).map(_ =>
+      new ReplayMicroBatchStream(replayOptions(dir, "stagingDir" -> stageRoot)))
+    // stage first: the staging jobs' own task broadcasts are not the
+    // streams' and are cleaned on the context cleaner's schedule
+    streams.foreach(_.reportLatestOffset())
+    val before = Internals.broadcastBlocks(sc)
+    try {
+      streams.foreach { s =>
+        val end = s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
+        val parts = s.planInputPartitions(ReplayOffset.Start, end).toSeq
+        // every trigger builds a factory; only the first broadcasts
+        (1 to 3).foreach(_ => assert(readAll(s.createReaderFactory(), parts).size == 1000))
+      }
+      val held = Internals.broadcastBlocks(sc) -- before
+      assert(held.count(!_.contains("_piece")) == streams.size,
+        s"each stream must hold exactly one conf broadcast: $held")
+    } finally streams.foreach(_.stop())
+    // destroy() removes blocks asynchronously
+    eventually(timeout(10.seconds), interval(50.millis)) {
+      val left = Internals.broadcastBlocks(sc) -- before
+      assert(left.isEmpty, s"stopped streams left broadcast blocks: $left")
+    }
   }
 
   test("upsert sink: batch replay after a crash is absorbed, not double-counted") {

@@ -254,14 +254,26 @@ class TableLogSpec extends AnyFunSuite {
     // without its replacement — v2 holds exactly both actions
     val v2 = log.filter(_.version == 2)
     assert(v2.map(_.kind).sorted == Seq("delete", "insert"))
-    // a second updater CRASHES between staging and commit: nothing
-    // becomes visible (its staged artifacts exist, the log is
-    // unmoved), and the resolution is untouched
-    spark.range(1).select(lit(0L).as("doc_id")).write.mode("overwrite")
-      .parquet(s"$root/crash_del")
-    val before = occ.read(hfs, s"$root/log").size
-    // (the crash: the writer dies here, never calling commitActions)
-    assert(occ.read(hfs, s"$root/log").size == before)
+    // a second updater CRASHES between staging and commit: it lands a
+    // real delete and insert, then dies before commitActions. Nothing
+    // becomes visible: the log is unmoved and the head resolves to the
+    // same rows
+    val head = log.last.version
+    val headRows = AnalyticsQueries.tableAsOfOrdered(spark, log, head, root).collect().toSet
+    val victim = headRows.head.getAs[Long]("doc_id")
+    val tokens = LoggedTable.land(Seq(
+      s"$root/crash_del" -> spark.range(1).select(lit(victim).as("doc_id")),
+      s"$root/crash_ins" -> pre.filter(col("doc_id") === victim)
+        .withColumn("n_chars", col("n_chars") + 1)))
+    assert(tokens.forall(_.contains("schema")) &&
+      fs(s"$root/crash_del").exists(new Path(s"$root/crash_del")) &&
+      fs(s"$root/crash_ins").exists(new Path(s"$root/crash_ins")),
+      "the crashed updater's artifacts must have landed")
+    val staged = occ.read(hfs, s"$root/log")
+    assert(staged == log, "landing without a commit moved the log")
+    assert(AnalyticsQueries.tableAsOfOrdered(spark, staged, head, root).collect().toSet == headRows,
+      "landed but uncommitted artifacts changed the head")
+    val before = staged.size
     // txn replay of the update (the restarted writer's schedule):
     // exactly one commit, the original version
     val replayed = occ.commitActions(hfs, s"$root/log",
