@@ -147,7 +147,7 @@ object RetrievalStress {
         graft.queries.AnalyticsQueries.a37KeywordLifecycle(spark, dir).count()
       }
       // the index's HISTORY: recording an epoch in the a40 commit log
-      // must price at metadata (one row per retained artifact — the
+      // must price at metadata (one commit per retained artifact — the
       // layouts already exist, the log only names them); the four-epoch
       // time-travel serve prices at 4 × one pruned probe (each epoch's
       // plan reads only its snapshot's files — TimeTravelSpec); p28's
@@ -164,7 +164,9 @@ object RetrievalStress {
         graft.queries.AnalyticsQueries.rebuildP28OwnedLogStage(spark, dir)
       }
       timed(s"p28 vacuum (file deletes) $tag") {
-        graft.queries.AnalyticsQueries.p28VacuumRun(spark, p28Stage).size.toLong
+        graft.operators.OccCommitLog.vacuum(new org.apache.hadoop.fs.Path(p28Stage)
+          .getFileSystem(spark.sessionState.newHadoopConf()),
+          s"$p28Stage/log", p28Stage).size.toLong
       }
       timed(s"p28 post-vacuum serve (warm) $tag") {
         graft.queries.AnalyticsQueries.p28ServeCurrent(spark, dir, p28Stage).count()

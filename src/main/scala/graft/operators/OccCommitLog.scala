@@ -8,12 +8,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (Armbrust et al., "Delta Lake: High-Performance ACID Table Storage
   * over Cloud Object Stores", VLDB '20 — the `_delta_log/N.json`
   * mutual-exclusion trick; Iceberg's atomic metadata-pointer swap is
-  * the same contract). This is what the repo's parquet commit logs
-  * (a40/a41/p28/p33) deliberately do NOT have: those are single-writer
-  * by construction (`synchronized` driver blocks), which is honest for
-  * a build pipeline but not for a 100-TB deployment where a continuous
-  * ingest writer, a compaction daemon, and a scheduled vacuum race on
-  * ONE table. Here the log directory itself is the arbiter:
+  * the same contract). It is the repo's one commit-log format: the
+  * staged single-writer logs (a40/a41/p28/p30, p33, p34/p36/p39/p40/p42)
+  * commit through it the same way the racing writers do (p31/p35/p37,
+  * s44), because a 100-TB deployment has a continuous ingest writer, a
+  * compaction daemon and a scheduled vacuum racing on ONE table. The
+  * log directory itself is the arbiter:
   *
   *   - a commit is ONE file named `%08d.commit` whose content is the
   *     commit body (kind TAB path, plus an optional writer-transaction
@@ -54,13 +54,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (Delta's LogStore boundary), documented, not papered over. */
 object OccCommitLog {
 
-  /** One committed log entry. `kind` and `path` carry the same
-    * layout/tombstones vocabulary as the parquet logs, so
-    * [[graft.queries.PipelineQueries.resolveAsOf]] applies unchanged.
-    * `txnApp`/`txnVersion`, when present, are the committing writer's
-    * transaction identity (Delta's `txn` action): the log remembers
-    * the highest txnVersion each appId has applied, and a replayed
-    * commit at or below it is skipped. */
+  /** One committed action. `kind` and `path` name what the action
+    * records: index logs speak layout/tombstones (resolved by
+    * [[graft.queries.PipelineQueries.resolveAsOf]]), table logs speak
+    * insert/delete/snapshot/optimize/meta. `txnApp`/`txnVersion`, when
+    * present, are the committing writer's transaction identity
+    * (Delta's `txn` action): the log remembers the highest txnVersion
+    * each appId has applied, and a replayed commit at or below it is
+    * skipped. `meta` holds the action's `key=value` tokens: a
+    * `schema`, per-file stats (`min_id`, `max_id`, `min_chars`,
+    * `max_chars`, a base64 `bloom`), a `ts`, or a snapshot's `asof`. */
   final case class Commit(version: Int, kind: String, path: String,
       txnApp: Option[String] = None, txnVersion: Option[Long] = None,
       meta: Map[String, String] = Map.empty)
@@ -190,10 +193,27 @@ object OccCommitLog {
     out
   }
 
-  /** Convenience: read as the (version, kind, path) triples the
-    * parquet-log consumers already speak. */
+  /** The log as the (version, kind, path) triples the as-of, vacuum
+    * and change-feed rules speak. A `snapshot` action (a data
+    * checkpoint) reads at the version in its `asof` token: a
+    * checkpoint of an older version is committed at the log's tail,
+    * because a version is never claimed twice, yet it folds exactly
+    * the commits at or before `asof`. Without the token a snapshot
+    * keeps its commit version. An `asof` that is not an integer, or
+    * that names a version after its own commit, is a damaged log and
+    * fails naming the commit. */
   def readTriples(fs: FileSystem, logDir: String): Seq[(Int, String, String)] =
-    read(fs, logDir).map(c => (c.version, c.kind, c.path))
+    read(fs, logDir).map { c =>
+      val v = c.meta.get("asof").filter(_ => c.kind == "snapshot").map { a =>
+        val asOf = a.toIntOption.getOrElse(throw new IllegalStateException(
+          s"snapshot at version ${c.version} in $logDir has a non-integer asof '$a'"))
+        if (asOf > c.version) throw new IllegalStateException(
+          s"snapshot at version ${c.version} in $logDir claims asof=$asOf, " +
+            "a version after its own commit")
+        asOf
+      }
+      (v.getOrElse(c.version), c.kind, c.path)
+    }
 
   /** The highest txnVersion `appId` has committed to this log, if any
     * — what a checkpoint-replayed writer consults to skip work it

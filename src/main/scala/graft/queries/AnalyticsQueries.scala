@@ -291,9 +291,9 @@ object AnalyticsQueries
     // afterwards must be exactly the twice-merged survivor index —
     // a37's fresh-build-over-survivors oracle gates it unchanged
     ("p28_index_vacuum" -> oracleSqlBase("a37_keyword_lifecycle")) +
-    // vector-channel vacuum: the same reclaim operator (p28VacuumRun
-    // verbatim) on the owned a41 log — the serve after reclaim must be
-    // exactly the purged twice-merged table's, a16's one-shot soft
+    // vector-channel vacuum: p28's reclaim operator
+    // (OccCommitLog.vacuum) on the owned a41 log — the serve after
+    // reclaim must be exactly the purged twice-merged table's, a16's one-shot soft
     // delete, codebooks untouched
     ("p30_vector_vacuum" -> oracleSqlBase("a16_tombstone_search")) +
     // optimistic-concurrency commits: whatever version assignment the
@@ -310,7 +310,7 @@ object AnalyticsQueries
     // the doc table through the OCC protocol: whatever version
     // assignment the writer race produced, membership (inserts minus
     // the delete list) is deterministic, and checkpoint + vacuum must
-    // leave the head serve exactly the single-writer parquet log's —
+    // leave the head serve exactly p33's single-writer log's —
     // p33's oracle, one answer however the log is written
     ("p35_occ_table_commits" ->
       PipelineQueries.oracleSql("p33_table_checkpoint_vacuum")) +

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.OccCommitLog
 
 /** Lifecycle-cycle family (a37–a39, m13) — the 100-TB STEADY STATE as
   * gated queries. Every per-channel lifecycle step is pinned singly
@@ -398,21 +399,22 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   /** The a40 COMMIT LOG stage: the keyword channel's lifecycle epochs
     * recorded as a versioned metadata log (p23's lakehouse commit-log
     * pattern applied to the INDEX rather than the table). The log is
-    * four rows — (version, kind, path) — pointing at artifacts the
-    * lifecycle ALREADY retains: v0 the frozen a20 base build, v1 the
-    * a37 cycle's first re-stat merge output, v2 the tombstone id list
-    * (merge-on-read — no layout rewrite happened at delete time), v3
-    * the delete-applying second merge. Building the log costs ZERO
-    * index bytes (TimeTravelSpec pins the stage dir to commit_log +
-    * marker only): at 100 TB, index history is free until vacuum
-    * because generational merging already keeps every epoch's layout
-    * on disk — the log just names them. Marker written LAST. */
+    * four [[OccCommitLog]] commits — (version, kind, path) — pointing
+    * at artifacts the lifecycle ALREADY retains: v0 the frozen a20 base
+    * build, v1 the a37 cycle's first re-stat merge output, v2 the
+    * tombstone id list (merge-on-read — no layout rewrite happened at
+    * delete time), v3 the delete-applying second merge. Building the
+    * log costs ZERO index bytes (TimeTravelSpec pins the stage dir to
+    * `log` + marker only): at 100 TB, index history is free until
+    * vacuum because generational merging already keeps every epoch's
+    * layout on disk — the log just names them. Marker written LAST;
+    * a build without it starts from an empty stage. */
   private[queries] def stageA40CommitLog(spark: SparkSession, dir: String,
       force: Boolean = false): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a40log", s"$dir#$fp")
-    val fs = new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val stagePath = new org.apache.hadoop.fs.Path(stage)
+    val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
     // dependency revalidation OUTSIDE the marker check: the log only
     // NAMES the lifecycle's artifacts, so a surviving log marker must
     // not outlive the stages it points at (both build-if-missing —
@@ -420,11 +422,11 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     val cyc = stageA37KwCycle(spark, dir)
     val base = stageA20CorpusKwIndex(spark, dir)
     if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
-      import spark.implicits._
-      Seq((0, "layout", base), (1, "layout", s"$cyc/gen1"),
-          (2, "tombstones", s"$cyc/tombstones"), (3, "layout", cyc))
-        .toDF("version", "kind", "path")
-        .coalesce(1).write.mode("overwrite").parquet(s"$stage/commit_log")
+      fs.delete(stagePath, true)
+      Seq(("layout", base), ("layout", s"$cyc/gen1"), ("tombstones",
+        s"$cyc/tombstones"), ("layout", cyc)).foreach { case (kind, path) =>
+        OccCommitLog.commit(fs, s"$stage/log", kind, path)
+      }
       spark.range(1).write.mode("overwrite").parquet(s"$stage/done")
     }
     stage
@@ -436,7 +438,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
 
   /** Stress hook: re-land the a40 commit log unconditionally (the
     * lifecycle artifacts build-if-missing) — prices exactly what
-    * recording an epoch costs at scale: one metadata row per retained
+    * recording an epoch costs at scale: one commit file per retained
     * artifact, zero index bytes. */
   def rebuildA40CommitLogStage(spark: SparkSession, dir: String): String =
     stageA40CommitLog(spark, dir, force = true)
@@ -454,7 +456,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   private[queries] def kwServeAsOfLog(spark: SparkSession, dir: String,
       logStage: String, v: Int): DataFrame = {
     val (layout, tombs) = PipelineQueries.resolveAsOf(
-      PipelineQueries.readCommitLog(spark, logStage), v, logStage)
+      PipelineQueries.occTriples(spark, logStage), v, logStage)
     kwServeSnapshot(spark, dir, layout, tombs)
   }
 
@@ -506,7 +508,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   }
 
   /** The a41 commit-log stage — a40's discipline on the VECTOR
-    * channel, proving the log is channel-agnostic: four metadata rows
+    * channel, proving the log is channel-agnostic: four commits
     * naming artifacts the a39 cycle and the a12 index already retain
     * (v0 the frozen even-half code table, v1 the first layout merge's
     * output, v2 the tombstone id list, v3 the purged twice-merged
@@ -517,30 +519,23 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * time-travels. Zero index bytes, marker last, dependencies
     * revalidated outside the marker check (a40's self-heal rule). */
   private[queries] def stageA41VecCommitLog(spark: SparkSession,
-      dir: String, force: Boolean = false): String = synchronized {
+      dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a41log", s"$dir#$fp")
-    val fs = new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val stagePath = new org.apache.hadoop.fs.Path(stage)
+    val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
     val cyc = stageA39VecCycle(spark, dir)
     val a12 = stageA12Index(spark, dir)
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
-      import spark.implicits._
-      Seq((0, "layout", s"$a12/codes"), (1, "layout", s"$cyc/gen1"),
-          (2, "tombstones", s"$cyc/tombstones"), (3, "layout", s"$cyc/codes"))
-        .toDF("version", "kind", "path")
-        .coalesce(1).write.mode("overwrite").parquet(s"$stage/commit_log")
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
+      fs.delete(stagePath, true)
+      Seq(("layout", s"$a12/codes"), ("layout", s"$cyc/gen1"), ("tombstones",
+        s"$cyc/tombstones"), ("layout", s"$cyc/codes")).foreach { case (kind, path) =>
+        OccCommitLog.commit(fs, s"$stage/log", kind, path)
+      }
       spark.range(1).write.mode("overwrite").parquet(s"$stage/done")
     }
     stage
   }
-
-  /** Stress/test hook: re-land the a41 commit log unconditionally (the
-    * lifecycle artifacts build-if-missing) — the same rebuild parity
-    * a40 has: one metadata row per retained artifact, zero index
-    * bytes. */
-  def rebuildA41CommitLogStage(spark: SparkSession, dir: String): String =
-    stageA41VecCommitLog(spark, dir, force = true)
 
   /** The vector channel's as-of serve: same log-resolution rule as
     * [[kwServeAsOfLog]] (newest layout ≤ v; tombstone commits after it
@@ -553,7 +548,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   private[queries] def pqServeAsOfLog(spark: SparkSession, dir: String,
       logStage: String, v: Int): DataFrame = {
     val (layout, tombs) = PipelineQueries.resolveAsOf(
-      PipelineQueries.readCommitLog(spark, logStage), v, logStage)
+      PipelineQueries.occTriples(spark, logStage), v, logStage)
     pqServeSnapshot(spark, dir, layout, tombs)
   }
 
@@ -607,8 +602,10 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * format ownership model (Delta/Iceberg: the log's files are the
     * table's files), which is what makes physical reclaim safe: p28's
     * vacuum deletes ONLY directories this stage owns, never the
-    * shared lifecycle stages other queries serve from. Copies are
-    * index bytes (no recompute — the layouts already exist); `tag`
+    * shared lifecycle stages other queries serve from
+    * ([[OccCommitLog.vacuum]] refuses a log naming any path outside
+    * the stage). Copies are index bytes (no recompute — the layouts
+    * already exist); `tag`
     * lets tests stage a private log they can corrupt or vacuum
     * without touching the shared one. Marker written LAST; a crash
     * mid-copy leaves no marker and the next build wipes and recopies
@@ -621,7 +618,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     val stagePath = new org.apache.hadoop.fs.Path(stage)
     val fs = stagePath.getFileSystem(conf)
     if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
-      import spark.implicits._
       fs.delete(stagePath, true)
       val cyc = stageA37KwCycle(spark, dir)
       val base = stageA20CorpusKwIndex(spark, dir)
@@ -638,10 +634,8 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
       val v1 = ownLayout(s"$cyc/gen1", "v1")
       val t2 = own(s"$cyc/tombstones", "tomb2")
       val v3 = ownLayout(cyc, "v3")
-      Seq((0, "layout", v0), (1, "layout", v1), (2, "tombstones", t2),
-          (3, "layout", v3))
-        .toDF("version", "kind", "path")
-        .coalesce(1).write.mode("overwrite").parquet(s"$stage/commit_log")
+      Seq(("layout", v0), ("layout", v1), ("tombstones", t2), ("layout", v3))
+        .foreach { case (kind, path) => OccCommitLog.commit(fs, s"$stage/log", kind, path) }
       spark.range(1).write.mode("overwrite").parquet(s"$stage/done")
     }
     stage
@@ -665,62 +659,16 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
       logStage: String): DataFrame =
     kwServeAsOfLog(spark, dir, logStage, 3)
 
-  /** VACUUM over an owned commit log: physically delete every
-    * artifact directory superseded by the RETENTION HORIZON — the
-    * `retainLayouts`-th newest layout commit (Delta's retention
-    * window, expressed in epochs rather than hours: keep the newest K
-    * servable snapshots, reclaim everything strictly older — older
-    * layouts, and tombstone lists already folded in by a
-    * delete-applying merge at or before the horizon). The LOG ROWS
-    * stay — history remains enumerable as metadata, but an as-of read
-    * into a vacuumed epoch now fails at planning (Delta/Iceberg's
-    * VACUUM-beyond-retention semantics); as-of reads AT or after the
-    * horizon still serve, including merge-on-read epochs whose
-    * tombstone lists are newer than the horizon. Idempotent:
-    * already-deleted paths are skipped. Returns the paths it
-    * reclaimed this call. */
-  def p28VacuumRun(spark: SparkSession, logStage: String,
-      retainLayouts: Int = 1): Seq[String] = {
-    require(retainLayouts >= 1, "retention must keep at least the newest layout")
-    val conf = spark.sessionState.newHadoopConf()
-    val log = PipelineQueries.readCommitLog(spark, logStage)
-    // ownership guard: vacuum deletes files, so it may ONLY run on a
-    // log whose artifacts it owns (every commit path inside the log's
-    // own stage). The a40 SHARED log names the live lifecycle stages —
-    // vacuuming it would delete artifacts other queries serve from.
-    // Containment is checked against the stage WITH a trailing
-    // separator: a sibling stage whose path merely extends this one
-    // (".../graft_x_abc" vs ".../graft_x_abc2") must read as foreign.
-    val owned = logStage.stripSuffix("/") + "/"
-    require(log.forall(_._3.startsWith(owned)),
-      s"refusing to vacuum a log with commits it does not own " +
-        s"(log=$logStage, foreign=${log.filterNot(_._3.startsWith(owned)).map(_._3).toSeq})")
-    val keepFrom = log.filter(_._2 == "layout").map(_._1)
-      .sorted(Ordering[Int].reverse).take(retainLayouts).last
-    // an owned layout's version dir holds terms+postings; reclaim the
-    // version dir as a unit (tombstone commits are a single dir)
-    def unitRoot(p: String): String =
-      if (p.endsWith("/terms") || p.endsWith("/postings"))
-        p.substring(0, p.lastIndexOf('/')) else p
-    // a unit named by BOTH a reclaimed commit and a retained one (a
-    // layout re-published after a rollback) is LIVE — liveness is set
-    // membership over the retained commits, same rule as
-    // [[graft.operators.OccCommitLog.vacuum]]
-    val live = log.filter(_._1 >= keepFrom).map(t => unitRoot(t._3)).toSet
-    log.filter(_._1 < keepFrom).map(t => unitRoot(t._3)).toSeq
-      .sorted.distinct.filterNot(live).flatMap { p =>
-        val root = new org.apache.hadoop.fs.Path(p)
-        val fs = root.getFileSystem(conf)
-        if (fs.exists(root)) { fs.delete(root, true); Some(root.toString) }
-        else None
-      }
-  }
-
   /** p28 — INDEX VACUUM: storage reclaim as a first-class maintenance
     * operator. Build the owned four-epoch log (copies priced once,
-    * fingerprint-keyed), VACUUM it — v0, v1 and the folded tombstone
-    * list are physically deleted, the current layout and the log's
-    * history rows survive — then serve the CURRENT snapshot. Gated by
+    * fingerprint-keyed), VACUUM it with [[OccCommitLog.vacuum]] — the
+    * RETENTION HORIZON is the newest layout commit (Delta's retention
+    * window in epochs: keep the newest servable snapshot, reclaim
+    * everything strictly older), so v0, v1 and the folded tombstone
+    * list are physically deleted while the current layout and the
+    * log's commit files survive (history stays enumerable; an as-of
+    * read into a vacuumed epoch fails at planning) — then serve the
+    * CURRENT snapshot. Gated by
     * a37's fresh-build-over-survivors oracle: reclaiming history must
     * not perturb the present by a single row (TimeTravelSpec
     * additionally pins the files physically gone, as-of reads into
@@ -731,7 +679,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * paying for them. */
   def p28IndexVacuum(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageP28OwnedLog(spark, dir)
-    p28VacuumRun(spark, stage)
+    OccCommitLog.vacuum(PipelineQueries.fsOf(spark, stage), s"$stage/log", stage)
     kwServeAsOfLog(spark, dir, stage, 3)
   }
 
@@ -752,7 +700,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     val stagePath = new org.apache.hadoop.fs.Path(stage)
     val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
     if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
-      import spark.implicits._
       fs.delete(stagePath, true)
       val cyc = stageA39VecCycle(spark, dir)
       val a12 = stageA12Index(spark, dir)
@@ -760,10 +707,8 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
       val v1 = PipelineQueries.copyDir(spark, s"$cyc/gen1", s"$stage/v1")
       val t2 = PipelineQueries.copyDir(spark, s"$cyc/tombstones", s"$stage/tomb2")
       val v3 = PipelineQueries.copyDir(spark, s"$cyc/codes", s"$stage/v3")
-      Seq((0, "layout", v0), (1, "layout", v1), (2, "tombstones", t2),
-          (3, "layout", v3))
-        .toDF("version", "kind", "path")
-        .coalesce(1).write.mode("overwrite").parquet(s"$stage/commit_log")
+      Seq(("layout", v0), ("layout", v1), ("tombstones", t2), ("layout", v3))
+        .foreach { case (kind, path) => OccCommitLog.commit(fs, s"$stage/log", kind, path) }
       spark.range(1).write.mode("overwrite").parquet(s"$stage/done")
     }
     stage
@@ -782,12 +727,12 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     pqServeAsOfLog(spark, dir, logStage, v)
 
   /** p30 — VECTOR-CHANNEL VACUUM: p28's retention reclaim run on the
-    * a41 log's owned copy, with [[p28VacuumRun]] REUSED verbatim — the
+    * a41 log's owned copy, with the same [[OccCommitLog.vacuum]] — the
     * horizon rule and ownership guard never look inside a layout, so
     * the operator that reclaims postings reclaims code tables
     * unchanged (reclaim now proven channel-agnostic the way a41 proved
     * serving). v0, v1 and the folded tombstone list are physically
-    * deleted; the current purged code table and the log's history rows
+    * deleted; the current purged code table and the log's commit files
     * survive; the serve afterwards is gated by a16's ORACLE — however
     * much history was reclaimed, the present must not move by a row.
     * Codebooks sit outside the log and are untouched: at 100 TB the
@@ -795,7 +740,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * serving state (LUT-sized) never enters the retention math. */
   def p30VectorVacuum(spark: SparkSession, dir: String): DataFrame = {
     val stage = stageP30OwnedVecLog(spark, dir)
-    p28VacuumRun(spark, stage)
+    OccCommitLog.vacuum(PipelineQueries.fsOf(spark, stage), s"$stage/log", stage)
     pqServeAsOfLog(spark, dir, stage, 3)
   }
 
@@ -814,7 +759,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   private[queries] def indexChangesFromLog(spark: SparkSession, logStage: String,
       from: Int, to: Int): DataFrame = {
     import spark.implicits._
-    PipelineQueries.readCommitLog(spark, logStage)
+    PipelineQueries.occTriples(spark, logStage)
       .filter(c => c._1 > from && c._1 <= to).sortBy(_._1)
       .map {
         case (v, "layout", p) => (v, "replace", p)

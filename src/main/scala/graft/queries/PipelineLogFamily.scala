@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.OccCommitLog
 
 /** Table-format log family (p34–p36) — the three Delta-lake table
   * capabilities the doc-table story still lacked after p23/p29/p33
@@ -35,10 +36,11 @@ import graft.Tables
   *     what a writer may commit; here the log is the single authority
   *     for both.
   *
-  * Shared machinery deliberately single-sourced:
+  * Every table here logs through [[graft.operators.OccCommitLog]]
+  * under `root/log`. Shared machinery deliberately single-sourced:
   * [[PipelineQueries.tableAsOfTriples]] resolves snapshots,
   * [[PipelineQueries.tableVacuumTriples]] reclaims folded history —
-  * one rule for the parquet log (p33) and the OCC log (p35/s44) — and
+  * one rule for every table log that folds (p33, p35, s44) — and
   * [[LoggedTable]] lands and reads the schema-logged p38/p41/p43/p44
   * tables. */
 private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
@@ -46,92 +48,110 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
   // ---------------------------------------------------------------- p34
 
   /** Write `docs` as `nFiles` doc_id-range-clustered files under
-    * `root/<prefix><k>`, returning one stats-carrying log row per file
-    * (version k, `kind`, path, min_id, max_id, min_chars, max_chars) —
-    * the one writer body behind BOTH moments stats are free: p34's
-    * ingest (stats from the delta the writer has in hand; Delta
-    * computes add-action stats the same way) and p39's OPTIMIZE
-    * (stats RE-derived from the rewrite the compactor just produced).
-    * Range clustering is what makes id-predicates skippable — the
-    * same reason p13 sorts before writing. */
+    * `root/<prefix><k>`, returning each file's path and its stats as
+    * commit metadata tokens ([[statsTokens]]) — the one writer body
+    * behind BOTH moments stats are free: p34's ingest (stats from the
+    * delta the writer has in hand; Delta computes add-action stats the
+    * same way) and p39's OPTIMIZE (stats RE-derived from the rewrite
+    * the compactor just produced). Range clustering is what makes
+    * id-predicates skippable — the same reason p13 sorts before
+    * writing. */
   private def writeStatsDeltas(spark: SparkSession, docs: DataFrame,
-      root: String, nFiles: Int, prefix: String, kind: String)
-      : Seq[(Int, String, String, Long, Long, Long, Long)] = {
+      root: String, nFiles: Int, prefix: String)
+      : Seq[(String, Map[String, String])] = {
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
     val step = maxId / nFiles + 1
     (0 until nFiles).map { k =>
       val p = s"$root/$prefix$k"
       docs.filter(col("doc_id") >= k * step && col("doc_id") < (k + 1) * step)
         .coalesce(1).write.mode("overwrite").parquet(p)
-      val st = spark.read.parquet(p).agg(
-        min(col("doc_id")), max(col("doc_id")),
-        min(col("n_chars")), max(col("n_chars"))).head
-      require(!st.isNullAt(0),
-        s"stats range $k is empty — doc_id is no longer contiguous under $root")
-      (k, kind, p, st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3))
+      (p, statsTokens(spark, p, s"stats range $k under $root"))
     }
   }
 
-  private val StatsLogCols =
-    Seq("version", "kind", "path", "min_id", "max_id", "min_chars", "max_chars")
+  /** One file's (min_id, max_id, min_chars, max_chars), derived in
+    * one aggregate pass and carried as `key=value` metadata tokens on
+    * the file's commit — Delta's `add.stats`. */
+  private def statsTokens(spark: SparkSession, path: String,
+      label: String): Map[String, String] = {
+    val st = spark.read.parquet(path).agg(
+      min(col("doc_id")), max(col("doc_id")),
+      min(col("n_chars")), max(col("n_chars"))).head
+    require(!st.isNullAt(0), s"$label is empty")
+    Seq("min_id", "max_id", "min_chars", "max_chars").zipWithIndex
+      .map { case (k, i) => k -> st.getLong(i).toString }.toMap
+  }
+
+  /** A numeric stat token of one commit; a missing one fails naming
+    * the commit, since pruning without it would drop or keep the file
+    * on no evidence. */
+  private def statOf(c: OccCommitLog.Commit, key: String): Long =
+    c.meta.getOrElse(key, throw new IllegalStateException(
+      s"commit v${c.version} (${c.path}) carries no $key stat")).toLong
+
+  /** Commit each (path, stats) as its own insert version of `root/log`. */
+  private def commitInserts(spark: SparkSession, root: String,
+      files: Seq[(String, Map[String, String])]): Unit =
+    files.foreach { case (p, st) =>
+      OccCommitLog.commitMeta(PipelineQueries.fsOf(spark, root), s"$root/log",
+        "insert", p, st)
+    }
 
   /** The stats-carrying table stage: the documents table written as 8
-    * doc_id-range-clustered insert deltas, the commit log carrying
-    * per-file (min_id, max_id, min_chars, max_chars) computed at WRITE
+    * doc_id-range-clustered insert deltas, each committed with its
+    * (min_id, max_id, min_chars, max_chars) tokens computed at WRITE
     * time by [[writeStatsDeltas]]. */
   private[queries] def stageP34StatsTable(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
     val root = PipelineQueries.staging("p34st", dir)
     PipelineQueries.stageOnce("p34st", dir, Seq(root)) {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      writeStatsDeltas(spark, docs, root, 8, "delta_r", "insert")
-        .toDF(StatsLogCols: _*)
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/commit_log")
+      commitInserts(spark, root, writeStatsDeltas(spark, docs, root, 8, "delta_r"))
     }
     root
   }
 
-  /** The stats-pruned scan: commits whose [min_id, max_id] range
-    * misses the predicate are dropped from the plan HERE, off one
-    * metadata-scale log read — no footer, no listing, no data bytes
+  /** The stats-pruned scan over in-hand commits: files whose
+    * [min_id, max_id] range misses the predicate are dropped from the
+    * plan HERE, on the driver — no footer, no listing, no data bytes
     * for a skipped file. Returns the scan plus (planned, total) file
-    * counts so callers can assert skipping actually happened.
-    * TableLogSpec pins the plan's input files to exactly the
-    * intersecting deltas. */
-  private[queries] def p34PrunedScan(spark: SparkSession, dir: String,
+    * counts so callers can assert skipping actually happened. */
+  private def prunedById(spark: SparkSession, files: Seq[OccCommitLog.Commit],
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val root = stageP34StatsTable(spark, dir)
-    val log = spark.read.parquet(s"$root/commit_log").collect()
-      .map(r => (r.getAs[Int]("version"), r.getAs[String]("path"),
-        r.getAs[Long]("min_id"), r.getAs[Long]("max_id")))
-      .toSeq.sortBy(_._1)
-    val hit = log.filter(c => c._4 >= lo && c._3 <= hi)
-    val scan = spark.read.parquet(hit.map(_._2).toIndexedSeq: _*)
+    val hit = files.filter(c => statOf(c, "max_id") >= lo && statOf(c, "min_id") <= hi)
+    val scan = spark.read.parquet(hit.map(_.path).sorted.toIndexedSeq: _*)
       .filter(col("doc_id").between(lo, hi))
-    (scan, hit.size, log.size)
+    (scan, hit.size, files.size)
+  }
+
+  /** p34's pruned scan off its log listing. TableLogSpec pins the
+    * plan's input files to exactly the intersecting deltas. */
+  private[queries] def p34PrunedScan(spark: SparkSession, dir: String,
+      lo: Long, hi: Long): (DataFrame, Int, Int) =
+    prunedById(spark, PipelineQueries.occLog(spark, stageP34StatsTable(spark, dir)), lo, hi)
+
+  /** The stats-pruned serve both p34 and p39 answer: the id predicate
+    * planned from `files`' stats, plus one aggregate answered from the
+    * STATS ALONE (`table_max_chars` = max over the per-file max_chars,
+    * zero data files — how Delta answers bare MIN/MAX queries), so the
+    * oracle gates the stats' exactness, not just their pruning. The
+    * body `require`s that skipping actually pruned files. */
+  private def statsServe(spark: SparkSession, files: Seq[OccCommitLog.Commit],
+      what: String): DataFrame = {
+    val (scan, nHit, nTotal) = prunedById(spark, files, 100L, 299L)
+    require(nHit < nTotal, s"$what must prune files: planned $nHit of $nTotal")
+    scan.groupBy(col("lang"))
+      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
+      .withColumn("table_max_chars", lit(files.map(statOf(_, "max_chars")).max))
+      .orderBy(col("lang"))
   }
 
   /** p34 — LOG-CARRIED FILE STATISTICS (Delta data skipping): an id
     * predicate planned from the commit log's per-file min/max — files
-    * whose range misses the predicate never enter the plan — plus one
-    * aggregate answered from the STATS ALONE (`table_max_chars` =
-    * max over the per-file max_chars, zero data files — how Delta
-    * answers bare MIN/MAX queries), so the oracle gates the stats'
-    * exactness, not just their pruning. The body `require`s that
-    * skipping actually pruned files at every scale. */
-  def p34StatsSkipping(spark: SparkSession, dir: String): DataFrame = {
-    val root = stageP34StatsTable(spark, dir)
-    val (scan, nHit, nTotal) = p34PrunedScan(spark, dir, 100L, 299L)
-    require(nHit < nTotal,
-      s"stats must prune files: planned $nHit of $nTotal")
-    val tableMaxChars = spark.read.parquet(s"$root/commit_log")
-      .agg(max(col("max_chars"))).head.getLong(0)
-    scan.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-      .withColumn("table_max_chars", lit(tableMaxChars))
-      .orderBy(col("lang"))
-  }
+    * whose range misses the predicate never enter the plan — plus the
+    * stats-only `table_max_chars`, both from one log listing. */
+  def p34StatsSkipping(spark: SparkSession, dir: String): DataFrame =
+    statsServe(spark, PipelineQueries.occLog(spark, stageP34StatsTable(spark, dir)), "stats")
 
   // ---------------------------------------------------------------- p35
 
@@ -154,8 +174,8 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * already reclaimed the landing's data, because the txn check
     * precedes any artifact access. Head serve resolves THROUGH the
     * snapshot (TableLogSpec pins the plan holds no reclaimed delta);
-    * gated by p33's membership oracle — single-writer parquet log or
-    * multi-writer OCC log, one answer. */
+    * gated by p33's membership oracle — single writer or racing
+    * writers, one answer. */
   def p35OccTableCommits(spark: SparkSession, dir: String): DataFrame = {
     val root = PipelineQueries.staging("p35occ", dir)
     val rootPath = new org.apache.hadoop.fs.Path(root)
@@ -249,8 +269,9 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * → v5 delete list. Every delta goes through [[p36EnforceSchema]]
     * against the schema at its version — the v4 delta is only legal
     * BECAUSE v3 evolved the schema first. Meta payloads are one-row
-    * parquet (`name:type` pairs) so a meta commit is as cheap and
-    * atomic as any other. */
+    * parquet (`name:type` pairs) named by the `meta` commit, so a meta
+    * commit is as cheap and atomic as any other. The log is an
+    * [[OccCommitLog]] under `root/log`. */
   private[queries] def stageP36EvolvedTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val root = PipelineQueries.staging("p36se", dir)
@@ -259,18 +280,19 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
         .select(col("doc_id"), col("lang"), col("n_chars"))
       val s0 = Seq("doc_id" -> "bigint", "lang" -> "string", "n_chars" -> "bigint")
       val s3 = s0 :+ ("quality" -> "bigint")
-      var commits = Vector.empty[(Int, String, String)]
+      def commit(kind: String, p: String): Unit =
+        OccCommitLog.commit(PipelineQueries.fsOf(spark, root), s"$root/log", kind, p)
       def writeMeta(v: Int, cols: Seq[(String, String)]): Unit = {
         val p = s"$root/schema_v$v"
         Seq(cols.map { case (n, t) => s"$n:$t" }.mkString(","))
           .toDF("cols").coalesce(1).write.mode("overwrite").parquet(p)
-        commits :+= ((v, "meta", p))
+        commit("meta", p)
       }
       def writeDelta(v: Int, df: DataFrame, schema: Seq[(String, String)]): Unit = {
         p36EnforceSchema(df.columns.toSeq, schema.map(_._1), s"version $v")
         val p = s"$root/delta_v$v"
         df.coalesce(1).write.mode("overwrite").parquet(p)
-        commits :+= ((v, "insert", p))
+        commit("insert", p)
       }
       writeMeta(0, s0)
       writeDelta(1, docs.filter(col("doc_id") % 4 === 0), s0)
@@ -281,19 +303,17 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
       val tombP = s"$root/tombstones_v5"
       docs.filter(col("doc_id") % 3 === 0).select(col("doc_id"))
         .coalesce(1).write.mode("overwrite").parquet(tombP)
-      commits :+= ((5, "delete", tombP))
-      commits.toDF("version", "kind", "path")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/commit_log")
+      commit("delete", tombP)
     }
     root
   }
 
-  /** The table schema AS OF `v`: the newest `meta` commit at or before
-    * it, parsed back to (name, type) pairs. */
-  private[queries] def p36SchemaAsOf(spark: SparkSession, root: String,
-      v: Int): Seq[(String, String)] = {
-    val metas = PipelineQueries.readCommitLog(spark, root)
-      .filter(t => t._2 == "meta" && t._1 <= v)
+  /** The table schema AS OF `v` in the (version, kind, path) `log`:
+    * the newest `meta` commit at or before it, parsed back to (name,
+    * type) pairs. */
+  private def p36SchemaAsOf(spark: SparkSession, log: Seq[(Int, String, String)],
+      v: Int, root: String): Seq[(String, String)] = {
+    val metas = log.filter(t => t._2 == "meta" && t._1 <= v)
     require(metas.nonEmpty, s"no schema exists at or before version $v in $root")
     spark.read.parquet(metas.maxBy(_._1)._3).head.getString(0)
       .split(",").toSeq.map { s =>
@@ -309,8 +329,9 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * schema — the new column simply does not exist there yet. */
   private[queries] def p36ReadAsOf(spark: SparkSession, dir: String, v: Int): DataFrame = {
     val root = stageP36EvolvedTable(spark, dir)
-    val schema = p36SchemaAsOf(spark, root, v)
-    val log = PipelineQueries.readCommitLog(spark, root).filter(_._1 <= v)
+    val all = PipelineQueries.occTriples(spark, root)
+    val schema = p36SchemaAsOf(spark, all, v, root)
+    val log = all.filter(_._1 <= v)
     val frames = log.filter(_._2 == "insert").sortBy(_._1).map { case (_, _, p) =>
       val df = spark.read.parquet(p)
       df.select(schema.map { case (n, t) =>
@@ -545,9 +566,10 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * insert deltas rebuilt under p39's own root (maintenance may only
     * touch owned bytes — p34's staged fixture is shared), then
     * bin-packed into 3 range-clustered rewrites whose per-file stats
-    * are RE-DERIVED at rewrite time and carried on the `optimize` log
-    * rows — Delta's OPTIMIZE writes its add-actions with fresh stats
-    * for exactly this reason: data skipping must survive maintenance,
+    * are RE-DERIVED at rewrite time and carried on the `optimize`
+    * actions, all three committed as ONE version (8) — Delta's
+    * OPTIMIZE writes its add-actions with fresh stats for exactly
+    * this reason: data skipping must survive maintenance,
     * or every compaction would degrade reads from prune-by-metadata
     * back to scan-everything. The rewrite reads the COMMITTED deltas
     * (never the source table — a compactor only has the table), and
@@ -556,49 +578,42 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * serve below provably cannot touch pre-maintenance bytes. */
   private[queries] def stageP39OptimizedStatsTable(spark: SparkSession,
       dir: String): String = {
-    import spark.implicits._
     val root = PipelineQueries.staging("p39so", dir)
     PipelineQueries.stageOnce("p39so", dir, Seq(root)) {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val inserts = writeStatsDeltas(spark, docs, root, 8, "delta_r", "insert")
+      val inserts = writeStatsDeltas(spark, docs, root, 8, "delta_r")
+      commitInserts(spark, root, inserts)
       val optimized = writeStatsDeltas(spark,
-          spark.read.parquet(inserts.map(_._3).toIndexedSeq: _*),
-          root, 3, "opt_r", "optimize")
-        .map { case (_, kind, p, a, b, c, d) => (8, kind, p, a, b, c, d) }
-      (inserts ++ optimized).toDF(StatsLogCols: _*)
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/commit_log")
+        spark.read.parquet(inserts.map(_._1).toIndexedSeq: _*), root, 3, "opt_r")
+      OccCommitLog.commitActionsMeta(PipelineQueries.fsOf(spark, root), s"$root/log",
+        optimized.map { case (p, st) => ("optimize", p, st) })
       val reclaimed = PipelineQueries.tableVacuumTriples(spark,
-        (inserts ++ optimized).map(t => (t._1, t._2, t._3)), root,
+        PipelineQueries.occTriples(spark, root), root,
         horizonKind = "optimize", preserveKinds = Set("optimize"))
-      require(reclaimed.toSet == inserts.map(_._3).toSet,
+      require(reclaimed.toSet == inserts.map(_._1).toSet,
         s"vacuum must reclaim exactly the folded deltas: $reclaimed")
     }
     root
   }
 
-  /** The post-OPTIMIZE pruned serve: plan the id predicate from the
-    * HEAD (`optimize`) rows' re-derived stats — folded insert rows
-    * are history, their files are gone. Returns (scan, planned,
-    * head-file total) so callers can assert skipping still prunes. */
+  /** The post-OPTIMIZE head: the `optimize` actions, whose stats were
+    * re-derived — folded inserts are history, their files are gone. */
+  private def p39Head(spark: SparkSession, dir: String): Seq[OccCommitLog.Commit] =
+    PipelineQueries.occLog(spark, stageP39OptimizedStatsTable(spark, dir))
+      .filter(_.kind == "optimize")
+
+  /** The post-OPTIMIZE pruned serve, planned from the head's stats.
+    * Returns (scan, planned, head-file total) so callers can assert
+    * skipping still prunes. */
   private[queries] def p39PrunedServe(spark: SparkSession, dir: String,
-      lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val root = stageP39OptimizedStatsTable(spark, dir)
-    val head = spark.read.parquet(s"$root/commit_log")
-      .filter(col("kind") === "optimize").collect()
-      .map(r => (r.getAs[String]("path"),
-        r.getAs[Long]("min_id"), r.getAs[Long]("max_id")))
-      .toSeq.sortBy(_._1)
-    val hit = head.filter(c => c._3 >= lo && c._2 <= hi)
-    val scan = spark.read.parquet(hit.map(_._1).toIndexedSeq: _*)
-      .filter(col("doc_id").between(lo, hi))
-    (scan, hit.size, head.size)
-  }
+      lo: Long, hi: Long): (DataFrame, Int, Int) =
+    prunedById(spark, p39Head(spark, dir), lo, hi)
 
   /** p39 — DATA SKIPPING SURVIVES OPTIMIZE (Delta: OPTIMIZE's
     * add-actions carry freshly computed stats): p34's serve repeated
     * over the compacted layout — the predicate plans from the
-    * optimize rows' RE-derived min/max, the stats-only aggregate
+    * optimize actions' RE-derived min/max, the stats-only aggregate
     * re-answers from them alone, and the folded deltas are already
     * vacuumed so the plan physically cannot fall back to
     * pre-maintenance files. Gated by p34's oracle VERBATIM (the p33/
@@ -614,16 +629,7 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
       .getFileSystem(spark.sessionState.newHadoopConf())
     require(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/delta_r0")),
       "the folded deltas must be physically gone before the serve")
-    val (scan, nHit, nTotal) = p39PrunedServe(spark, dir, 100L, 299L)
-    require(nHit < nTotal,
-      s"re-derived stats must still prune files: planned $nHit of $nTotal")
-    val tableMaxChars = spark.read.parquet(s"$root/commit_log")
-      .filter(col("kind") === "optimize")
-      .agg(max(col("max_chars"))).head.getLong(0)
-    scan.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-      .withColumn("table_max_chars", lit(tableMaxChars))
-      .orderBy(col("lang"))
+    statsServe(spark, p39Head(spark, dir), "re-derived stats")
   }
 
   // ---------------------------------------------------------------- p40
@@ -632,21 +638,21 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * 8 files by HASH of doc_id — the layout every id-clustered trick
     * fails on: each file's [min_id, max_id] spans essentially the
     * whole table, so p34's range stats prune nothing for a point
-    * lookup. Each log row therefore also carries a per-file BLOOM
-    * filter over the file's ids (8192 bits / 6 hashes — ~10 bits/key
-    * at the largest tested scale), built by the engine's own
-    * partial-aggregable [[graft.expressions.BloomAgg]] in the SAME
+    * lookup. Each commit therefore also carries a per-file BLOOM
+    * filter over the file's ids as a base64 `bloom` token (8192 bits /
+    * 6 hashes — ~10 bits/key at the largest tested scale), built by
+    * the engine's own partial-aggregable
+    * [[graft.expressions.BloomAgg]] in the SAME
     * aggregate pass that derives min/max — stats and index are one
     * write-time scan (Delta's bloom-filter index; Parquet writes
     * footer blooms for the same reason). ~1 KB of index per file: at
     * 100 TB the whole index rides in the log read. */
   private[queries] def stageP40BloomTable(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
     val root = PipelineQueries.staging("p40bl", dir)
     PipelineQueries.stageOnce("p40bl", dir, Seq(root)) {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      (0 until 8).map { k =>
+      commitInserts(spark, root, (0 until 8).map { k =>
         val p = s"$root/scatter_r$k"
         docs.filter(pmod(hash(col("doc_id")), lit(8)) === k)
           .coalesce(1).write.mode("overwrite").parquet(p)
@@ -654,9 +660,11 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
           min(col("doc_id")), max(col("doc_id")),
           graft.expressions.BloomAgg(col("doc_id"), 8192, 6)).head
         require(!st.isNullAt(0), s"scatter bucket $k is empty in $dir")
-        (k, "insert", p, st.getLong(0), st.getLong(1), st.getAs[Array[Byte]](2))
-      }.toDF("version", "kind", "path", "min_id", "max_id", "bloom")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/commit_log")
+        p -> Map("min_id" -> st.getLong(0).toString,
+          "max_id" -> st.getLong(1).toString,
+          "bloom" -> java.util.Base64.getEncoder
+            .encodeToString(st.getAs[Array[Byte]](2)))
+      })
     }
     root
   }
@@ -674,15 +682,15 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * oracle-exact. */
   private[queries] def p40PrunedLookup(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int) = {
-    val root = stageP40BloomTable(spark, dir)
-    val log = spark.read.parquet(s"$root/commit_log").collect()
-      .map(r => (r.getAs[String]("path"), r.getAs[Long]("min_id"),
-        r.getAs[Long]("max_id"), r.getAs[Array[Byte]]("bloom")))
-      .toSeq.sortBy(_._1)
-    val rangeHit = log.filter(c => P40Probes.exists(p => p >= c._2 && p <= c._3))
-    val bloomHit = log.filter(c =>
-      P40Probes.exists(p => graft.expressions.Bloom.contains(c._4, p)))
-    val scan = spark.read.parquet(bloomHit.map(_._1).toIndexedSeq: _*)
+    val log = PipelineQueries.occLog(spark, stageP40BloomTable(spark, dir)).sortBy(_.path)
+    val rangeHit = log.filter(c =>
+      P40Probes.exists(p => p >= statOf(c, "min_id") && p <= statOf(c, "max_id")))
+    val bloomHit = log.filter { c =>
+      val bloom = java.util.Base64.getDecoder.decode(c.meta.getOrElse("bloom",
+        throw new IllegalStateException(s"commit v${c.version} (${c.path}) carries no bloom")))
+      P40Probes.exists(p => graft.expressions.Bloom.contains(bloom, p))
+    }
+    val scan = spark.read.parquet(bloomHit.map(_.path).toIndexedSeq: _*)
       .filter(col("doc_id").isin(P40Probes: _*))
     (scan, bloomHit.size, rangeHit.size, log.size)
   }
@@ -855,11 +863,11 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * from parquet footers at scan time; this prunes FILES from one
     * metadata read before any file is touched — at 100 TB, before a
     * million footer round trips). Stats here are derived by one
-    * post-write pass per file; a production writer folds the same
+    * post-write pass per file ([[statsTokens]]) and ride each file's
+    * commit as metadata tokens; a production writer folds the same
     * min/max into its write pass (p34's rule — writeStatsDeltas shows
     * the shape). */
   private[queries] def stageP42ZStatsTable(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
     val root = PipelineQueries.staging("p42zs", dir)
     PipelineQueries.stageOnce("p42zs", dir, Seq(root)) {
       val docs = Tables.documents(spark, dir)
@@ -882,14 +890,9 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
         .toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
         .map(_.toString).sorted
       require(parts.size > 1, s"the curve layout degenerated: $parts")
-      parts.zipWithIndex.map { case (p, k) =>
-        val st = spark.read.parquet(p).agg(
-          min(col("doc_id")), max(col("doc_id")),
-          min(col("n_chars")), max(col("n_chars"))).head
-        require(!st.isNullAt(0), s"curve file $k is empty")
-        (k, "insert", p, st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3))
-      }.toDF("version", "kind", "path", "min_id", "max_id", "min_chars", "max_chars")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/commit_log")
+      commitInserts(spark, root, parts.zipWithIndex.map {
+        case (p, k) => p -> statsTokens(spark, p, s"curve file $k")
+      })
     }
     root
   }
@@ -905,12 +908,10 @@ private[queries] trait PipelineLogFamily { this: AnalyticsQueries.type =>
     * contribute nothing. */
   private[queries] def p42PrunedBox(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int, Int) = {
-    val root = stageP42ZStatsTable(spark, dir)
-    val log = spark.read.parquet(s"$root/commit_log").collect()
-      .map(r => (r.getAs[String]("path"),
-        r.getAs[Long]("min_id"), r.getAs[Long]("max_id"),
-        r.getAs[Long]("min_chars"), r.getAs[Long]("max_chars")))
-      .toSeq.sortBy(_._1)
+    val log = PipelineQueries.occLog(spark, stageP42ZStatsTable(spark, dir)).map { c =>
+      (c.path, statOf(c, "min_id"), statOf(c, "max_id"),
+        statOf(c, "min_chars"), statOf(c, "max_chars"))
+    }.sortBy(_._1)
     val (dl, dh) = (log.map(_._2).min, log.map(_._3).max)
     val (cl, ch) = (log.map(_._4).min, log.map(_._5).max)
     val (d0, d1) = (dl + (dh - dl) * 3 / 10, dl + (dh - dl) * 6 / 10)

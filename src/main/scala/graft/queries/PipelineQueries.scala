@@ -35,11 +35,14 @@ object PipelineQueries {
     * stageKwIndexTable builder, whose meta carries max_term_id — the
     * a19kw meta gained that column. v9: the p23 versioned-table stage's
     * log is now an OccCommitLog under `log/` whose every action carries
-    * its artifact's schema, replacing the parquet `commit_log`. v10: the
+    * its artifact's schema, replacing the one-file parquet log. v10: the
     * p41/p43/p44 stages' insert and delete actions carry a `schema`
     * token too; their readers have no inference fallback, so a v9
-    * fixture without tokens must be rebuilt, never read.) */
-  val StagingFormatVersion = 10
+    * fixture without tokens must be rebuilt, never read. v11: the
+    * a40/a41/p28/p30, p33, p34/p36/p39/p40/p42 stages keep their log
+    * as an OccCommitLog under `log/` instead of a one-file parquet
+    * table; the stats logs carry per-file stats as metadata tokens.) */
+  val StagingFormatVersion = 11
 
   /** Full-width digest key for a staging identity. Replaces the old
     * 32-bit `String.hashCode`, which can collide two distinct dirs —
@@ -150,16 +153,6 @@ object PipelineQueries {
       .map(st => (st.getPath.getName, st.getLen))
       .sortBy(_._1)
   }
-
-  /** A parquet commit log read into (version, kind, path) triples —
-    * the one read every parquet-log consumer shares (the a40/a41
-    * serves, p28's vacuum, the p33 owned table log). The collect is
-    * metadata-scale by construction: one row per commit. */
-  def readCommitLog(spark: SparkSession, logRoot: String): Seq[(Int, String, String)] =
-    spark.read.parquet(s"$logRoot/commit_log").collect()
-      .map(r => (r.getAs[Int]("version"), r.getAs[String]("kind"),
-        r.getAs[String]("path")))
-      .toSeq
 
   /** The as-of resolution rule over layout/tombstones commit kinds,
     * extracted so a rule fix cannot land in one channel and miss the
@@ -580,14 +573,22 @@ object PipelineQueries {
       root
     }
 
-  /** The versioned table's log under `root`: a directory listing, no
-    * Spark job. */
-  private def versionedTableLog(spark: SparkSession,
-      root: String): Seq[OccCommitLog.Commit] = {
-    val logDir = s"$root/log"
-    OccCommitLog.read(new org.apache.hadoop.fs.Path(logDir)
-      .getFileSystem(spark.sessionState.newHadoopConf()), logDir)
-  }
+  /** The Hadoop filesystem holding `path`. */
+  private[queries] def fsOf(spark: SparkSession,
+      path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The [[OccCommitLog]] under `root/log` — every staged table and
+    * index log lives there: a directory listing, no Spark job. */
+  private[queries] def occLog(spark: SparkSession,
+      root: String): Seq[OccCommitLog.Commit] =
+    OccCommitLog.read(fsOf(spark, root), s"$root/log")
+
+  /** The same log as [[OccCommitLog.readTriples]] triples — what the
+    * as-of, feed and vacuum rules consume. */
+  private[queries] def occTriples(spark: SparkSession,
+      root: String): Seq[(Int, String, String)] =
+    OccCommitLog.readTriples(fsOf(spark, root), s"$root/log")
 
   /** A version's rows from EXACTLY the log's commits with version ≤ v
     * (file-level pruning off the log listing — PlanAuditSpec pins that
@@ -615,7 +616,7 @@ object PipelineQueries {
   /** The same reader off an EXPLICIT versioned-table root (a spec's
     * hand-built log). */
   def p23SnapshotFromRoot(spark: SparkSession, root: String, v: Int): DataFrame =
-    snapshotOf(spark, versionedTableLog(spark, root), v, root)
+    snapshotOf(spark, occLog(spark, root), v, root)
 
   /** p23 — TIME TRAVEL: read the versioned table AS OF every commit
     * version and aggregate each snapshot. Version 0–2 grow by one
@@ -630,7 +631,7 @@ object PipelineQueries {
     * compaction (p08/a15's rewrite path) folds them in. */
   def p23TimeTravel(spark: SparkSession, dir: String): DataFrame = {
     val root = stageVersionedTable(spark, dir)
-    val log = versionedTableLog(spark, root)
+    val log = occLog(spark, root)
     (0 to 3).map { v =>
       snapshotOf(spark, log, v, root)
         .agg(count(lit(1)).as("n_docs"),
@@ -648,19 +649,17 @@ object PipelineQueries {
     * the log recorded them — an ids-only tombstone list — because on a
     * merge-on-read table that IS the change (the standard CDC-feed
     * contract, p11's input shape; applying a delete for a row the
-    * consumer never had is a no-op downstream). The triples come from
-    * the stage's OCC log listing. Public as the test hook. */
+    * consumer never had is a no-op downstream). Public as the test
+    * hook. */
   def p29ChangesBetween(spark: SparkSession, dir: String,
       from: Int, to: Int): DataFrame =
-    p29ChangesFromTriples(spark,
-      versionedTableLog(spark, stageVersionedTable(spark, dir))
-        .map(c => (c.version, c.kind, c.path)), from, to)
+    p29ChangesFromLog(spark, stageVersionedTable(spark, dir), from, to)
 
-  /** The same feed off an EXPLICIT parquet log root (the p33
-    * owned/checkpointed stage). */
-  def p29ChangesFromRoot(spark: SparkSession, root: String,
+  /** The feed off the OCC log under `root/log` — the p23 stage or the
+    * p33 owned/checkpointed copy; the triples come from one listing. */
+  def p29ChangesFromLog(spark: SparkSession, root: String,
       from: Int, to: Int): DataFrame =
-    p29ChangesFromTriples(spark, readCommitLog(spark, root), from, to)
+    p29ChangesFromTriples(spark, occTriples(spark, root), from, to)
 
   /** The feed body over in-hand (version, kind, path) triples — one
     * reader body however many logs carry the contract. Two commitments
@@ -733,12 +732,11 @@ object PipelineQueries {
     * log-owned storage — p28's ownership model brought to the TABLE
     * side, so checkpoint and vacuum may physically reclaim data files
     * without touching the shared p23 stage every other query (p23,
-    * p29, s37) serves from. Same artifact names, same commit triples
-    * (listed from the stage's OCC log, written here as a parquet log),
-    * marker last. */
+    * p29, s37) serves from. Same artifact names, and the stage's OCC
+    * commits re-committed in order, metadata included, to this copy's
+    * own log under `root/log`; marker last. */
   private[queries] def stageP33OwnedTableLog(spark: SparkSession, dir: String,
       tag: String = "p33tt", force: Boolean = false): String = synchronized {
-    import spark.implicits._
     val fp = contentFingerprint(spark, s"$dir/documents.parquet")
     val root = staging(tag, s"$dir#$fp")
     val rootPath = new org.apache.hadoop.fs.Path(root)
@@ -746,11 +744,11 @@ object PipelineQueries {
     if (force || !hfs.exists(new org.apache.hadoop.fs.Path(s"$root/done"))) {
       hfs.delete(rootPath, true)
       val src = stageVersionedTable(spark, dir)
-      versionedTableLog(spark, src).map { c =>
+      occLog(spark, src).foreach { c =>
         val name = c.path.substring(c.path.lastIndexOf('/') + 1)
-        (c.version, c.kind, copyDir(spark, c.path, s"$root/$name"))
-      }.toDF("version", "kind", "path")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/commit_log")
+        OccCommitLog.commitMeta(hfs, s"$root/log", c.kind,
+          copyDir(spark, c.path, s"$root/$name"), c.meta)
+      }
       spark.range(1).write.mode("overwrite").parquet(s"$root/done")
     }
     root
@@ -763,20 +761,21 @@ object PipelineQueries {
     stageP33OwnedTableLog(spark, dir, tag, force)
 
   /** As-of resolution over a CHECKPOINTED table log: the newest
-    * `snapshot` commit at version ≤ v is the base (the checkpoint
-    * folds every insert AND delete at or before its version), plus
+    * `snapshot` at version ≤ v is the base (the checkpoint folds every
+    * insert AND delete at or before its `asof` version — see
+    * [[OccCommitLog.readTriples]]), plus
     * insert deltas in (sv, v], minus delete lists in (sv, v] —
     * [[resolveAsOf]]'s newest-layout-plus-later-tombstones rule,
     * restated for a DELTA log where commits are increments rather than
     * complete layouts. With no checkpoint in range this is exactly
     * [[p23SnapshotAsOf]]'s resolution. */
   def tableAsOfLog(spark: SparkSession, root: String, v: Int): DataFrame =
-    tableAsOfTriples(spark, readCommitLog(spark, root), v, root)
+    tableAsOfTriples(spark, occTriples(spark, root), v, root)
 
   /** The same rule over in-hand (version, kind, path) triples — ONE
-    * resolution body however the log is stored (the p33 parquet log,
-    * the p35/s44 [[graft.operators.OccCommitLog]] logs), so a rule fix
-    * cannot land on one log format and miss the other. */
+    * resolution body for every table log that folds through `snapshot`
+    * commits (p33's owned copy, p35, s44, s47), so a rule fix cannot
+    * land on one of them and miss the others. */
   def tableAsOfTriples(spark: SparkSession, triples: Seq[(Int, String, String)],
       v: Int, label: String): DataFrame = {
     val log = triples.filter(_._1 <= v)
@@ -793,50 +792,53 @@ object PipelineQueries {
   }
 
   /** TABLE CHECKPOINT: materialize the as-of-`v` snapshot as ONE
-    * `snapshot` commit SHARING version v — Delta's `N.checkpoint`
+    * `snapshot` commit that reads AT version v — Delta's `N.checkpoint`
     * pattern applied to DATA files instead of log files (public;
     * Hudi's compaction of a merge-on-read table is the same move). A
     * delta log's as-of cost is O(all deltas ≤ v) and its storage can
     * never shrink — every delta is load-bearing for some snapshot —
     * until a checkpoint folds the prefix: afterwards as-of reads plan
     * O(snapshot + deltas since), and everything at or before the
-    * checkpoint becomes reclaimable ([[p33VacuumRun]]). Idempotent: a
-    * log already checkpointed at `v` is returned as-is (the log row is
-    * the marker). Derived data — identical content from any writer at
-    * the same version. */
+    * checkpoint becomes reclaimable ([[p33VacuumRun]]). A version is
+    * never claimed twice, so the snapshot commits at the log's tail
+    * with an `asof=v` token ([[OccCommitLog.readTriples]] reads it at
+    * v) and the writer transaction `("p33-checkpoint", v)`.
+    * Idempotent: a log already checkpointed at `v` is returned as-is
+    * (the commit is the marker). Derived data — identical content from
+    * any writer at the same version. */
   def p33CheckpointRun(spark: SparkSession, root: String, v: Int): String = {
-    import spark.implicits._
-    val existing = readCommitLog(spark, root)
-      .find(t => t._2 == "snapshot" && t._1 == v)
-    existing.map(_._3).getOrElse {
+    val triples = occTriples(spark, root)
+    triples.find(t => t._2 == "snapshot" && t._1 == v).map(_._3).getOrElse {
       val snap = s"$root/snapshot_v$v"
-      tableAsOfLog(spark, root, v)
+      tableAsOfTriples(spark, triples, v, root)
         .repartitionByRange(2, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
         .write.mode("overwrite").parquet(snap)
-      Seq((v, "snapshot", snap)).toDF("version", "kind", "path")
-        .write.mode("append").parquet(s"$root/commit_log")
+      OccCommitLog.commitMeta(new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sessionState.newHadoopConf()), s"$root/log",
+        "snapshot", snap, Map("asof" -> v.toString),
+        txn = Some(("p33-checkpoint", v.toLong)))
       snap
     }
   }
 
   /** TABLE VACUUM: physically reclaim every insert delta and delete
     * list already FOLDED into the newest checkpoint (version ≤ its
-    * version) — the table-side twin of [[graft.queries.AnalyticsQueries.p28VacuumRun]],
+    * version) — the table-side twin of [[OccCommitLog.vacuum]],
     * with the horizon defined by the `snapshot` commit instead of a
     * retained-layouts window, because on a delta log every delta below
     * the checkpoint is superseded BY it while everything above it is
-    * still load-bearing for the head. The log rows stay (history
+    * still load-bearing for the head. The commit files stay (history
     * enumerable as metadata; an as-of read into a reclaimed epoch
     * fails at planning); the snapshot and all later commits are never
     * touched; a path also named by a retained commit is live (same
     * set-membership rule as p28/OccCommitLog). Ownership guard
     * separator-checked. Idempotent. Returns reclaimed paths. */
   def p33VacuumRun(spark: SparkSession, root: String): Seq[String] =
-    tableVacuumTriples(spark, readCommitLog(spark, root), root)
+    tableVacuumTriples(spark, occTriples(spark, root), root)
 
-  /** The same reclaim over in-hand triples — shared with the OCC table
-    * logs (p35/s44) the way [[tableAsOfTriples]] shares resolution.
+  /** The same reclaim over in-hand triples — shared with the other
+    * table logs (p35/s44) the way [[tableAsOfTriples]] shares resolution.
     * Parameterized on the fold semantics: `horizonKind` is the commit
     * kind that supersedes older increments (the newest such commit is
     * the horizon), `preserveKinds` are never reclaimed however old —
@@ -875,7 +877,7 @@ object PipelineQueries {
     * p28/p30). Build the owned copy of the p23 versioned table,
     * CHECKPOINT it at version 2 (materialize that snapshot as a
     * `snapshot` commit — the first run pays one table-scale write,
-    * after which the log row is the marker), VACUUM the folded prefix
+    * after which the commit is the marker), VACUUM the folded prefix
     * (the three insert deltas are physically reclaimed; the v3
     * tombstone list is newer than the checkpoint and survives), then
     * serve the HEAD — resolved through the checkpoint with the v3

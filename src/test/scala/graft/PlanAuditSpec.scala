@@ -930,6 +930,33 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(jobs <= 9, s"p38 end to end started $jobs Spark jobs")
   }
 
+  /** Building `key`'s plan on a warm call (staged fixtures already
+    * in place) starts at most `max` Spark jobs. */
+  private def planJobsAtMost(key: String, max: Int): Unit = {
+    val query = SparkEntry.queries(key)
+    query(spark, dir).collect() // stage once
+    val jobs = jobsStartedBy(query(spark, dir))
+    assert(jobs <= max, s"building $key's plan started $jobs Spark jobs")
+  }
+
+  // the commit logs below are listings: the jobs left are the index
+  // and table reads' own schema inference, none for reading a log
+  test("a40: building the four-epoch plan starts at most 29 jobs") {
+    planJobsAtMost("a40_index_time_travel", 29)
+  }
+
+  test("p33: building the checkpointed head plan starts at most 2 jobs") {
+    planJobsAtMost("p33_table_checkpoint_vacuum", 2)
+  }
+
+  test("p34: building the stats-pruned plan starts at most 1 job") {
+    planJobsAtMost("p34_stats_skipping", 1)
+  }
+
+  test("p40: building the bloom-pruned plan starts at most 1 job") {
+    planJobsAtMost("p40_bloom_skipping", 1)
+  }
+
   test("staging a replay stream starts at most 6 jobs") {
     import graft.streaming.ReplayMicroBatchStream
     val sp = spark

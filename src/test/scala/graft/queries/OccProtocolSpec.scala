@@ -162,6 +162,37 @@ class OccProtocolSpec extends AnyFunSuite {
     }
   }
 
+  test("readTriples: a snapshot reads at its asof version; a bad asof fails naming its commit") {
+    val root = freshRoot("occspec10")
+    val logDir = s"$root/log"
+    val hfs = fs(root)
+    (0 to 3).foreach(k => OccCommitLog.commit(hfs, logDir, "insert", s"$root/d$k"))
+    // a checkpoint of version 2 taken after version 3 committed: the
+    // version is never reused, so it lands at 4 and reads at 2
+    OccCommitLog.commitMeta(hfs, logDir, "snapshot", s"$root/snap2",
+      Map("asof" -> "2"))
+    // a snapshot with no token keeps its commit version
+    OccCommitLog.commit(hfs, logDir, "snapshot", s"$root/snap5")
+    assert(OccCommitLog.readTriples(hfs, logDir).toSet ==
+      ((0 to 3).map(k => (k, "insert", s"$root/d$k")).toSet +
+        ((2, "snapshot", s"$root/snap2")) + ((5, "snapshot", s"$root/snap5"))))
+    // log content comes from outside the program: a damaged asof fails
+    // loudly, naming the commit that carries it
+    Seq("two" -> "non-integer asof 'two'",
+        "7" -> "asof=7, a version after its own commit").foreach {
+      case (asOf, why) =>
+        val bad = s"$root/bad_$asOf"
+        OccCommitLog.commitMeta(hfs, bad, "insert", s"$root/d0", Map.empty)
+        OccCommitLog.commitMeta(hfs, bad, "snapshot", s"$root/snapX",
+          Map("asof" -> asOf))
+        val ex = intercept[IllegalStateException] {
+          OccCommitLog.readTriples(hfs, bad)
+        }
+        assert(ex.getMessage.contains("snapshot at version 1 ") &&
+          ex.getMessage.contains(why), ex.getMessage)
+    }
+  }
+
   test("txn identity: a checkpoint-replayed writer lands exactly one commit per batch") {
     // the exactly-once contract for a streaming sink (Delta's `txn`
     // action): a foreachBatch writer commits with (appId, batchId);

@@ -164,7 +164,7 @@ class StagingProtocolSpec extends AnyFunSuite {
     // later copies and the marker never landed. A rebuild that trusted
     // the orphaned partial copies would serve a hole in history.
     truncateToOneRow(s"$stage/v1/postings")
-    Seq("v3", "commit_log", "done").foreach(d =>
+    Seq("v3", "log", "done").foreach(d =>
       fs.delete(new Path(s"$stage/$d"), true))
     AnalyticsQueries.p28OwnedLogStageTagged(spark, dir, tag)
     assert(fs.exists(new Path(s"$stage/done")),

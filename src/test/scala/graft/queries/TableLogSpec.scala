@@ -21,11 +21,14 @@ class TableLogSpec extends AnyFunSuite {
   private def fs(p: String) =
     new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** A stats table's commits, read straight from its OCC log. */
+  private def statsLog(root: String) =
+    graft.operators.OccCommitLog.read(fs(root), s"$root/log")
+
   test("p34: the pruned scan plans ONLY the stats-intersecting deltas") {
     val root = AnalyticsQueries.stageP34StatsTable(spark, dir)
-    val log = spark.read.parquet(s"$root/commit_log").collect()
-      .map(r => (r.getAs[String]("path"),
-        r.getAs[Long]("min_id"), r.getAs[Long]("max_id"))).toSeq
+    val log = statsLog(root)
+      .map(c => (c.path, c.meta("min_id").toLong, c.meta("max_id").toLong))
     val (lo, hi) = (100L, 299L)
     val hit = log.filter(c => c._3 >= lo && c._2 <= hi).map(_._1).toSet
     val miss = log.map(_._1).toSet -- hit
@@ -44,9 +47,8 @@ class TableLogSpec extends AnyFunSuite {
 
   test("p39: the post-OPTIMIZE serve plans ONLY the stats-intersecting rewrites, and no pre-optimize file") {
     val root = AnalyticsQueries.stageP39OptimizedStatsTable(spark, dir)
-    val log = spark.read.parquet(s"$root/commit_log").collect()
-      .map(r => (r.getAs[String]("kind"), r.getAs[String]("path"),
-        r.getAs[Long]("min_id"), r.getAs[Long]("max_id"))).toSeq
+    val log = statsLog(root).map(c => (c.kind, c.path,
+      c.meta("min_id").toLong, c.meta("max_id").toLong))
     assert(log.count(_._1 == "insert") == 8 && log.count(_._1 == "optimize") == 3,
       s"fixture shape moved: $log")
     // every folded delta is physically reclaimed; every rewrite exists
@@ -70,9 +72,8 @@ class TableLogSpec extends AnyFunSuite {
 
   test("p40: blooms prune the point lookup the ranges cannot, and the plan holds only bloom-hit files") {
     val root = AnalyticsQueries.stageP40BloomTable(spark, dir)
-    val log = spark.read.parquet(s"$root/commit_log").collect()
-      .map(r => (r.getAs[String]("path"), r.getAs[Long]("min_id"),
-        r.getAs[Long]("max_id"), r.getAs[Array[Byte]]("bloom"))).toSeq
+    val log = statsLog(root).map(c => (c.path, c.meta("min_id").toLong,
+      c.meta("max_id").toLong, java.util.Base64.getDecoder.decode(c.meta("bloom"))))
     assert(log.size == 8)
     val probes = AnalyticsQueries.P40Probes
     // the motivating contrast, recomputed independently of the serve:

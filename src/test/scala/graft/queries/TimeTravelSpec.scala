@@ -3,6 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.fs.Path
 import graft.GraftSession
+import graft.operators.OccCommitLog
 
 /** Pins on the index commit log (a40) and its vacuum (p28) that the
   * DuckDB oracles cannot see: the log stage owning zero index bytes,
@@ -18,11 +19,18 @@ class TimeTravelSpec extends AnyFunSuite {
   private def fs(p: String) =
     new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** p28/p30's reclaim: the OCC vacuum over the stage's own log. */
+  private def vacuum(stage: String, retainLayouts: Int = 1): Seq[String] =
+    OccCommitLog.vacuum(fs(stage), s"$stage/log", stage, retainLayouts)
+
+  private def logCommits(stage: String): Int =
+    OccCommitLog.read(fs(stage), s"$stage/log").size
+
   test("a40: the commit log owns ZERO index bytes — metadata plus marker only") {
     val stage = AnalyticsQueries.a40CommitLogStage(spark, dir)
     val entries = fs(stage).listStatus(new Path(stage))
       .map(_.getPath.getName).toSet
-    assert(entries == Set("commit_log", "done"),
+    assert(entries == Set("log", "done"),
       s"a40's stage must only NAME the lifecycle's artifacts, never copy " +
         s"them — found: $entries")
   }
@@ -70,7 +78,7 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(serve(0).count() > 0 && serve(1).count() > 0,
       "pre-vacuum: every epoch must be readable from the owned log")
 
-    val reclaimed = AnalyticsQueries.p28VacuumRun(spark, stage)
+    val reclaimed = vacuum(stage)
     assert(reclaimed.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet ==
       Set("v0", "v1", "tomb2"),
       s"vacuum must reclaim exactly the superseded epochs: $reclaimed")
@@ -85,11 +93,11 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(after == before, "vacuum perturbed the CURRENT snapshot")
     // history: the log still ENUMERATES four commits (metadata
     // survives), but an as-of read into a vacuumed epoch fails at read
-    assert(spark.read.parquet(s"$stage/commit_log").count() == 4,
+    assert(logCommits(stage) == 4,
       "vacuum must not rewrite the log's history rows")
     intercept[Exception] { serve(1).count() }
     // idempotence: a second vacuum finds nothing to reclaim
-    assert(AnalyticsQueries.p28VacuumRun(spark, stage).isEmpty,
+    assert(vacuum(stage).isEmpty,
       "second vacuum must be a no-op")
   }
 
@@ -146,7 +154,7 @@ class TimeTravelSpec extends AnyFunSuite {
     val at1 = serve(1).collect().map(_.toString).toSeq
     val at2 = serve(2).collect().map(_.toString).toSeq
     // keep the newest TWO layouts (v1 and v3): only v0 is reclaimable
-    val first = AnalyticsQueries.p28VacuumRun(spark, stage, retainLayouts = 2)
+    val first = vacuum(stage, retainLayouts = 2)
     assert(first.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("v0"),
       s"retain=2 must reclaim exactly v0: $first")
     // epochs at/after the horizon still serve — including the
@@ -157,17 +165,17 @@ class TimeTravelSpec extends AnyFunSuite {
       "epoch 2 (merge-on-read) must survive a retain=2 vacuum")
     intercept[Exception] { serve(0).count() }
     // tightening the window to 1 reclaims the rest (v1 + tombstones)
-    val second = AnalyticsQueries.p28VacuumRun(spark, stage)
+    val second = vacuum(stage)
     assert(second.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet ==
       Set("v1", "tomb2"), s"retain=1 must reclaim v1 + tomb2: $second")
     assert(serve(3).count() > 0, "the present must survive every vacuum")
     // a retention wider than history is a no-op
-    assert(AnalyticsQueries.p28VacuumRun(spark, stage, retainLayouts = 10).isEmpty,
+    assert(vacuum(stage, retainLayouts = 10).isEmpty,
       "retention wider than history must reclaim nothing")
   }
 
   test("p30: the VECTOR vacuum reclaims history, preserves the present, is idempotent") {
-    // p28VacuumRun reused verbatim on the vector channel's owned log —
+    // p28's vacuum reused verbatim on the vector channel's owned log —
     // the reclaim operator must neither know nor care that the layouts
     // under it are code tables instead of postings
     val stage = AnalyticsQueries.p30OwnedVecLogStageTagged(spark, dir,
@@ -176,7 +184,7 @@ class TimeTravelSpec extends AnyFunSuite {
     val before = serve(3).collect().map(_.toString).toSeq
     assert(serve(0).count() > 0 && serve(2).count() > 0,
       "pre-vacuum: every vector epoch must be readable from the owned log")
-    val reclaimed = AnalyticsQueries.p28VacuumRun(spark, stage)
+    val reclaimed = vacuum(stage)
     assert(reclaimed.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet ==
       Set("v0", "v1", "tomb2"),
       s"vacuum must reclaim exactly the superseded vector epochs: $reclaimed")
@@ -185,10 +193,10 @@ class TimeTravelSpec extends AnyFunSuite {
         s"$d must be physically gone"))
     assert(serve(3).collect().map(_.toString).toSeq == before,
       "vacuum perturbed the CURRENT vector snapshot")
-    assert(spark.read.parquet(s"$stage/commit_log").count() == 4,
+    assert(logCommits(stage) == 4,
       "vacuum must not rewrite the vector log's history rows")
     intercept[Exception] { serve(1).count() }
-    assert(AnalyticsQueries.p28VacuumRun(spark, stage).isEmpty,
+    assert(vacuum(stage).isEmpty,
       "second vector vacuum must be a no-op")
     // the codebooks are serving state OUTSIDE the log: the a12 stage
     // must be untouched by however much vector history was reclaimed
@@ -270,7 +278,7 @@ class TimeTravelSpec extends AnyFunSuite {
     // serve from — deleting those would be cross-query corruption
     val shared = AnalyticsQueries.a40CommitLogStage(spark, dir)
     intercept[IllegalArgumentException] {
-      AnalyticsQueries.p28VacuumRun(spark, shared)
+      vacuum(shared)
     }
   }
 
@@ -285,14 +293,13 @@ class TimeTravelSpec extends AnyFunSuite {
       PipelineQueries.staging("s32m", dir)).toString
     val tomb = java.nio.file.Paths.get(
       PipelineQueries.staging("s32b", dir)).resolve("cdc/tomb").toString
-    // the daemon's commit log: one metadata row per retained artifact
+    // the daemon's commit log: one commit per retained artifact
     val logStage = s"${sys.props("java.io.tmpdir")}/graft_ttspec_streamlog"
     fs(logStage).delete(new Path(logStage), true)
-    import spark.implicits._
-    Seq((0, "layout", base), (1, "layout", s"$s32m/gen1"),
-        (2, "tombstones", tomb), (3, "layout", s32m))
-      .toDF("version", "kind", "path")
-      .coalesce(1).write.mode("overwrite").parquet(s"$logStage/commit_log")
+    Seq(("layout", base), ("layout", s"$s32m/gen1"),
+        ("tombstones", tomb), ("layout", s32m)).foreach { case (kind, path) =>
+      OccCommitLog.commit(fs(logStage), s"$logStage/log", kind, path)
+    }
     // every epoch's as-of serve off the stream-written log must be
     // row-identical to a40's serve off the batch cycle's log: the
     // stream's retained state IS time-travelable history
@@ -313,7 +320,7 @@ class TimeTravelSpec extends AnyFunSuite {
     // silent skip that desynchronizes the replica forever
     val stage = AnalyticsQueries.p28OwnedLogStageTagged(spark, dir,
       "p28horiz", force = true)
-    AnalyticsQueries.p28VacuumRun(spark, stage) // horizon = newest layout
+    vacuum(stage) // horizon = newest layout
     // the feed READ itself stays metadata-scale and succeeds — events
     // are (version, kind, path) rows, no artifact bytes planned — even
     // though the artifacts behind the horizon are physically gone
@@ -348,7 +355,7 @@ class TimeTravelSpec extends AnyFunSuite {
     // never skip the epoch and serve a hole
     val stage = AnalyticsQueries.p28OwnedLogStageTagged(spark, dir,
       "p28horizrep", force = true)
-    AnalyticsQueries.p28VacuumRun(spark, stage)
+    vacuum(stage)
     val ex = intercept[Exception] {
       StreamingQueries.streamedIndexReplica(spark, dir, "s38horiz") { staged =>
         (0 to 3).foreach { v =>
@@ -376,18 +383,18 @@ class TimeTravelSpec extends AnyFunSuite {
     val at3 = rows(asOf(3))
     assert(asOf(1).count() > 0,
       "pre-checkpoint: every epoch must be readable from the owned log")
-    val feedPre = PipelineQueries.p29ChangesFromRoot(spark, root, 0, 3)
+    val feedPre = PipelineQueries.p29ChangesFromLog(spark, root, 0, 3)
       .collect().map(_.toString).toSeq
-    // CHECKPOINT at v2: one snapshot commit sharing the version, and
+    // CHECKPOINT at v2: one snapshot commit that reads at v2, and
     // idempotent — the log row is the marker
     val snap = PipelineQueries.p33CheckpointRun(spark, root, 2)
     assert(PipelineQueries.p33CheckpointRun(spark, root, 2) == snap,
       "a second checkpoint at the same version must be a no-op")
-    assert(spark.read.parquet(s"$root/commit_log").count() == 5,
+    assert(logCommits(root) == 5,
       "the checkpoint must add exactly one log row")
     // the feed SKIPS the checkpoint commit (derived data, not a
     // change): the checkpointed log feeds identically to the raw one
-    assert(PipelineQueries.p29ChangesFromRoot(spark, root, 0, 3)
+    assert(PipelineQueries.p29ChangesFromLog(spark, root, 0, 3)
       .collect().map(_.toString).toSeq == feedPre,
       "a checkpoint commit must be invisible in the change feed")
     // as-of resolves THROUGH the checkpoint: same rows, and the head
@@ -406,17 +413,17 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(fs(root).exists(new Path(s"$root/tombstones_v3")),
       "an above-horizon tombstone list must survive the table vacuum")
     assert(rows(asOf(3)) == at3, "vacuum perturbed the head snapshot")
-    assert(spark.read.parquet(s"$root/commit_log").count() == 5,
+    assert(logCommits(root) == 5,
       "vacuum must not rewrite the log's history rows")
     // behind the horizon: as-of fails at planning, the feed pull fails
     // with the NAMED contract error; above it, the feed still serves
     intercept[Exception] { asOf(1).count() }
     val ex = intercept[IllegalStateException] {
-      PipelineQueries.p29ChangesFromRoot(spark, root, 0, 3).collect()
+      PipelineQueries.p29ChangesFromLog(spark, root, 0, 3).collect()
     }
     assert(ex.getMessage.contains("retention horizon"),
       s"the behind-horizon feed must name the contract: $ex")
-    val tail = PipelineQueries.p29ChangesFromRoot(spark, root, 2, 3)
+    val tail = PipelineQueries.p29ChangesFromLog(spark, root, 2, 3)
       .select(col("kind")).distinct().collect().map(_.getString(0)).toSeq
     assert(tail == Seq("delete"),
       s"the in-retention feed must still serve the v3 delete: $tail")
