@@ -9,6 +9,23 @@ import org.apache.spark.sql.SparkSession
   * scale out because nothing here hard-codes a partition count into the
   * plans — shuffle parallelism is a config, skew handling is delegated
   * to AQE, and small-dimension joins are explicitly broadcast.
+  *
+  * Every session also runs `file://` through [[graft.io.ForkFreeLocalFs]]
+  * (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`). With no native
+  * `libhadoop`, Hadoop's local filesystem starts a `chmod` process for
+  * each file or directory it creates and several `readlink` processes
+  * per `FileContext.rename`, so each streaming trigger's offset-WAL and
+  * commit-log write, each sink part file and each staged fixture paid
+  * for process starts. The override keeps `.crc` files, permission bits
+  * and rename semantics as Hadoop's.
+  *
+  * Caveat: `FileSystem.get` caches one instance per scheme, authority
+  * and user for the JVM's life, whatever conf later asks. In a JVM whose
+  * first `file://` lookup came from a conf without these keys,
+  * `FileSystem.get` keeps returning Hadoop's stock `LocalFileSystem`
+  * (correct, but starting processes) until the cache is closed.
+  * `FileContext`, which Spark's checkpoint manager uses, builds its
+  * filesystem per call and always follows the conf.
   */
 object GraftSession {
 
@@ -23,7 +40,9 @@ object GraftSession {
     "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString,
     "spark.sql.files.maxPartitionBytes" -> (128L << 20).toString,
     "spark.sql.parquet.filterPushdown" -> "true",
-    "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
+    "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.ForkFreeLocalFs].getName)
 
   /** Apply engine defaults to an arbitrary builder. */
   def tune(b: SparkSession.Builder): SparkSession.Builder = {

@@ -1,19 +1,41 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish testdata
-  * (see /root/repo/TESTDATA.md). One parquet file per table under the
+  * (see TESTDATA.md). One parquet file per table under the
   * scale-factor directory. Reads go through `spark.read.parquet` so
-  * column pruning and predicate pushdown reach the scan.
+  * column pruning and predicate pushdown reach the scan; the schema is
+  * read from the file's footer on the driver, so a load starts no
+  * schema-inference job.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema Spark's parquet inference gives the one-file table at
+    * `path`, converted as Spark converts a footer: the schema Spark
+    * wrote into the file's metadata if there is one, else the parquet
+    * schema under the session's SQL conf (`nanosAsLong` included). */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val file = new Path(path)
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf()))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -921,13 +921,25 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(jobs == 0, s"building p38's head plan started $jobs Spark jobs")
   }
 
-  test("p38 end to end starts at most 9 jobs") {
+  test("loading every source table reads its schema from the footer: Spark's inferred schema, no job") {
+    // events' nanos encoding needs nanosAsLong, which Tables.events sets
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for (name <- Tables.all) {
+      val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      var loaded: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsStartedBy { loaded = Tables.load(spark, dir, name) }
+      assert(loaded.schema == inferred, s"$name: footer schema differs from Spark's inference")
+      assert(jobs == 0, s"loading $name started $jobs Spark jobs")
+    }
+  }
+
+  test("p38 end to end starts at most 8 jobs") {
     import graft.queries.AnalyticsQueries
     AnalyticsQueries.p38AtomicUpdate(spark, dir).collect() // warm
-    // one documents read, four artifact writes (landed together), and
-    // the head's collect
+    // four artifact writes (landed together) and the head's collect;
+    // the documents read takes its schema from the footer, no job
     val jobs = jobsStartedBy(AnalyticsQueries.p38AtomicUpdate(spark, dir).collect())
-    assert(jobs <= 9, s"p38 end to end started $jobs Spark jobs")
+    assert(jobs <= 8, s"p38 end to end started $jobs Spark jobs")
   }
 
   /** Building `key`'s plan on a warm call (staged fixtures already
