@@ -10,14 +10,18 @@ import org.apache.spark.sql.SparkSession
   * plans — shuffle parallelism is a config, skew handling is delegated
   * to AQE, and small-dimension joins are explicitly broadcast.
   *
-  * Every session also runs `file://` through [[graft.io.ForkFreeLocalFs]]
-  * (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`). With no native
-  * `libhadoop`, Hadoop's local filesystem starts a `chmod` process for
-  * each file or directory it creates and several `readlink` processes
-  * per `FileContext.rename`, so each streaming trigger's offset-WAL and
+  * Every session built through [[tune]] also runs `file://` through
+  * [[graft.io.ForkFreeLocalFs]] (`fs.file.impl`,
+  * `fs.AbstractFileSystem.file.impl`). With no native `libhadoop`,
+  * Hadoop's local filesystem starts a `chmod` process for each file or
+  * directory it creates and several `readlink` processes per
+  * `FileContext.rename`, so each streaming trigger's offset-WAL and
   * commit-log write, each sink part file and each staged fixture paid
   * for process starts. The override keeps `.crc` files, permission bits
-  * and rename semantics as Hadoop's.
+  * and rename semantics as Hadoop's. It is not in [[baseConf]], so
+  * [[clusterConfTemplate]] leaves `file://` to Hadoop: spark-submit
+  * resolves `file://` jars and globs before the application jar is on
+  * its classpath, and a cluster with `libhadoop` gains nothing from it.
   *
   * Caveat: `FileSystem.get` caches one instance per scheme, authority
   * and user for the JVM's life, whatever conf later asks. In a JVM whose
@@ -40,14 +44,14 @@ object GraftSession {
     "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString,
     "spark.sql.files.maxPartitionBytes" -> (128L << 20).toString,
     "spark.sql.parquet.filterPushdown" -> "true",
-    "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
-    "spark.hadoop.fs.file.impl" -> classOf[graft.io.ForkFreeLocalFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.ForkFreeLocalFs].getName)
+    "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
 
   /** Apply engine defaults to an arbitrary builder. */
   def tune(b: SparkSession.Builder): SparkSession.Builder = {
     baseConf.foreach { case (k, v) => b.config(k, v) }
     b.config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
   }
 
   /** Cluster-deployment template: the engine-relevant confs a real

@@ -585,56 +585,13 @@ class StreamingSpec extends AnyFunSuite {
     val afterB = SharedStub.replayed.toArray.map(_.toString).toVector
     assert(afterB.sorted == (0 until 20).map(i => f"p$i%02d").toVector,
       s"restart must add exactly the new groups, got $afterB")
-  }
-
-  test("paced replay: checkpoint offsets and commits carry .crc files, and a restart resumes from them") {
-    import spark.implicits._
-    val dataDir = java.nio.file.Files.createTempDirectory("graft_rs_paced_data").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rs_paced_ckpt").toString
-    def run(want: Int): Unit = {
-      val q = spark.readStream.format("graft-replay")
-        .option("path", dataDir).option("tsMillisExpr", "ts")
-        .option("keyExpr", "key").option("payloadExpr", "payload")
-        .option("timeScale", "1.0")
-        .load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreach(SharedStub.pacedCollector)
-        .start()
-      try {
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        while (SharedStub.paced.size < want && System.nanoTime() < deadline) Thread.sleep(20)
-        q.processAllAvailable() // every group is due: the last batch commits
-      } finally q.stop()
-    }
-    /** Checkpoint log entries (batch ids) and the ids that carry a `.crc`. */
-    def logged(log: String): (Set[Long], Set[Long]) = {
+    // every offset-WAL and commit-log entry the restart read back carries
+    // its checksum
+    for (log <- Seq("offsets", "commits")) {
       val names = new java.io.File(s"$ckpt/$log").list().toSet
-      (names.filter(_.forall(_.isDigit)).map(_.toLong),
-        names.collect { case n if n.startsWith(".") && n.endsWith(".crc") =>
-          n.stripPrefix(".").stripSuffix(".crc") }.filter(_.forall(_.isDigit)).map(_.toLong))
+      val ids = names.filter(_.forall(_.isDigit))
+      assert(ids.size >= 2 && ids.forall(id => names(s".$id.crc")), s"$log: $names")
     }
-    // groups 40 ms apart at timeScale 1: admitted over several triggers
-    (0 until 8).map(i => (i * 40L, "k", f"p$i%02d")).toDF("ts", "key", "payload")
-      .write.mode("append").parquet(dataDir)
-    run(8)
-    val (offsetsA, offsetsCrcA) = logged("offsets")
-    val (commitsA, commitsCrcA) = logged("commits")
-    assert(offsetsA.size >= 2, s"expected a paced run of several triggers, got offsets $offsetsA")
-    assert(offsetsCrcA == offsetsA && commitsCrcA == commitsA && commitsA == offsetsA,
-      s"offsets $offsetsA (.crc $offsetsCrcA), commits $commitsA (.crc $commitsCrcA)")
-    // the restart reads those entries back through the checksummed
-    // filesystem and must emit only the groups recorded since
-    (8 until 12).map(i => (i * 40L, "k", f"p$i%02d")).toDF("ts", "key", "payload")
-      .write.mode("append").parquet(dataDir)
-    run(12)
-    val got = SharedStub.paced.toArray.map(_.toString).toVector
-    assert(got.sorted == (0 until 12).map(i => f"p$i%02d").toVector,
-      s"restart must add exactly the new groups, got $got")
-    val (offsetsB, offsetsCrcB) = logged("offsets")
-    val (commitsB, commitsCrcB) = logged("commits")
-    assert(offsetsB.size > offsetsA.size && offsetsCrcB == offsetsB &&
-      commitsCrcB == commitsB && commitsB == offsetsB,
-      s"offsets $offsetsB (.crc $offsetsCrcB), commits $commitsB (.crc $commitsCrcB)")
   }
 
   test("replay source: row cap bounds every batch under a backlog; lag metrics drain") {
@@ -770,14 +727,6 @@ object SharedStub {
       def open(partitionId: Long, epochId: Long): Boolean = true
       def process(r: org.apache.spark.sql.Row): Unit =
         replayed.add(r.getAs[String]("payload"))
-      def close(errorOrNull: Throwable): Unit = ()
-    }
-  val paced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  val pacedCollector: org.apache.spark.sql.ForeachWriter[org.apache.spark.sql.Row] =
-    new org.apache.spark.sql.ForeachWriter[org.apache.spark.sql.Row] {
-      def open(partitionId: Long, epochId: Long): Boolean = true
-      def process(r: org.apache.spark.sql.Row): Unit =
-        paced.add(r.getAs[String]("payload"))
       def close(errorOrNull: Throwable): Unit = ()
     }
   // every record's FIRST putRecords attempt fails, later ones succeed —

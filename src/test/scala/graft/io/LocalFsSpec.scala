@@ -191,5 +191,8 @@ class LocalFsSpec extends AnyFunSuite {
     val written = Paths.get(entry.toUri).getParent
     assert(Files.list(written).iterator.asScala.map(_.getFileName.toString).toSet ==
       Set("0", ".0.crc"))
+    // the deployment template leaves file:// to the cluster's Hadoop
+    assert(Seq("spark.hadoop.fs.file.impl", "spark.hadoop.fs.AbstractFileSystem.file.impl")
+      .forall(k => !GraftSession.clusterConfTemplate.contains(k)))
   }
 }
