@@ -1,12 +1,16 @@
 package graft.expressions
 
+import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.operators.{Flattener, Tokenizer}
+import graft.operators.{Flattener, LambdaTransform, Tokenizer}
+import graft.xml.XmlShapeException
 
 /** SQL front door for the XML path (reference dispatch:
   * file_flattener.py:156) — `spark.sql` users get the same tokenizer
@@ -110,5 +114,54 @@ object GraftFlatten {
         .map(v => if (v == null) null else UTF8String.fromString(v)).toArray[Any])
       new ArrayBasedMapData(keys, values): Any
     }.toArray[Any])
+  }
+}
+
+/** `LambdaRecord(unbase64(data))` → the lambda's declared record as one
+  * STRUCT of [[graft.operators.LambdaTransform.Columns]] strings: the
+  * Firehose-lambda parse ([[graft.operators.LambdaTransform]]) as a
+  * codegen-able expression, so `transform` plans as one `Project` over
+  * the source instead of a typed `mapPartitions` round trip. The input
+  * is the decoded record body (UTF-8 XML bytes). Strict like the
+  * reference: a contract violation, or a null body, fails the query. */
+case class LambdaRecord(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = LambdaRecord.Type
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_lambda_record"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires binary, got ${child.dataType.simpleString}")
+
+  override def eval(input: InternalRow): Any =
+    LambdaRecord.kernel(child.eval(input).asInstanceOf[Array[Byte]])
+
+  // a null body reaches the kernel (and fails there) instead of
+  // short-circuiting to a null record, so no null-safe template
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.expressions.LambdaRecord.kernel(${c.isNull} ? null : ${c.value});""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LambdaRecord =
+    copy(child = newChild)
+}
+
+object LambdaRecord {
+  val Type: StructType = StructType(LambdaTransform.Columns.map(
+    StructField(_, StringType, nullable = true)))
+
+  /** Static kernel shared by eval and generated code. */
+  def kernel(data: Array[Byte]): InternalRow = {
+    if (data == null) throw new XmlShapeException("missing record data")
+    val out = new Array[Any](LambdaTransform.Columns.length)
+    LambdaTransform.parseXmlInto(new String(data, StandardCharsets.UTF_8), out)
+    new GenericInternalRow(out)
   }
 }

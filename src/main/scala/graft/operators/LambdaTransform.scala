@@ -3,6 +3,9 @@ package graft.operators
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.unsafe.types.UTF8String
+import graft.expressions.LambdaRecord
 import graft.xml.{XmlShapeException, XmlTree}
 
 /** P3/E3/T5 — the Firehose-lambda-equivalent stateless transform: a
@@ -70,19 +73,21 @@ object LambdaTransform {
 
   /** [[parseXml]]'s projection twin: the same walk and the same
     * required/optional contract (identical exceptions in identical
-    * order), but values land directly in a fixed-width array slice in
-    * [[Columns]] order instead of a per-record string map — unknown
-    * reading names are validated (attributeValue required, UoM rules)
-    * and then dropped, exactly what the map form fed to the fixed
-    * projection did. Readings are null-seeded by the array itself. */
-  private def parseXmlInto(xml: String, out: Array[Any], off: Int): Unit = {
+    * order), but values land directly in `out`, one `UTF8String` per
+    * [[Columns]] entry in declared order (the fields of
+    * [[graft.expressions.LambdaRecord]]'s struct), instead of a
+    * per-record string map — unknown reading names are validated
+    * (attributeValue required, UoM rules) and then dropped, exactly
+    * what the map form fed to the fixed projection did. Readings are
+    * null-seeded by the array itself. */
+  private[graft] def parseXmlInto(xml: String, out: Array[Any]): Unit = {
     val root = XmlTree.parse(xml)
     val payload = root.find(s"${Ns}messagePayload").getOrElse(
       throw new XmlShapeException("missing messagePayload"))
     var i = 0
     while (i < Attrs.length) {
-      out(off + i) = payload.find(Ns + Attrs(i)).getOrElse(
-        throw new XmlShapeException(s"missing required attribute ${Attrs(i)}")).text
+      out(i) = UTF8String.fromString(payload.find(Ns + Attrs(i)).getOrElse(
+        throw new XmlShapeException(s"missing required attribute ${Attrs(i)}")).text)
       i += 1
     }
     payload.find(s"${Ns}readingCollection").foreach { rc =>
@@ -92,12 +97,12 @@ object LambdaTransform {
           val v = r.find(s"${Ns}attributeValue").getOrElse(
             throw new XmlShapeException(s"reading $name missing attributeValue")).text
           val j = ColumnIndex.getOrElse(name, -1)
-          if (j >= 0) out(off + j) = v
+          if (j >= 0) out(j) = UTF8String.fromString(v)
           if (ReadingsWithUom.contains(name)) {
             val u = r.find(s"${Ns}attributeUoM").getOrElse(
               throw new XmlShapeException(s"reading $name missing attributeUoM")).text
             val ju = ColumnIndex.getOrElse(name + "_UoM", -1)
-            if (ju >= 0) out(off + ju) = u
+            if (ju >= 0) out(ju) = UTF8String.fromString(u)
           }
         }
       }
@@ -107,36 +112,36 @@ object LambdaTransform {
   private val ColumnIndex: Map[String, Int] = Columns.zipWithIndex.toMap
 
   /** Spark operator: `dataCol` holds base64-encoded XML (the Firehose
-    * record body). Output = pass-through `keep` columns + the fixed
+    * record body). Output = pass-through `keep` columns cast to
+    * STRING (for the integral and string keys callers keep, the
+    * `String.valueOf` of the value; null stays null) + the fixed
     * 38-column projection. 1:1 record mapping, stateless (T5/K4).
-    * r17: rows are emitted as fixed-width string arrays in declared
-    * column order rather than a per-record Map — the map form cost a
-    * hash table + MapData conversion + 38 map probes per record on a
-    * path whose projection is statically known (guide §4: per-task
-    * work after the job shape is right). Same parse, same errors,
-    * same output columns. */
+    *
+    * The parse is ONE Catalyst expression,
+    * [[graft.expressions.LambdaRecord]]`(unbase64(data))`, a static
+    * kernel over [[parseXmlInto]] returning a 38-field string struct;
+    * one `Project` expands it into [[Columns]]. A typed
+    * `mapPartitions` with a 39-field row encoder planned as
+    * deserialize → map → serialize across two codegen stages, and
+    * Catalyst optimized, generated and printed that encoder plan again
+    * in every streaming trigger. The struct is referenced once per
+    * column it feeds, which keeps `CollapseProject` from copying the
+    * parse into each column: it runs once per record.
+    *
+    * Contract: every strict-contract violation fails the query with
+    * [[parseXml]]'s `XmlShapeException` message whenever a lambda
+    * column is read. Being an expression, the parse is pruned like
+    * one: over a scan or a stream, a projection that reads no lambda
+    * column (only `keep` columns, or a bare `count()`) skips it and
+    * cannot fail on a bad record. (Spark's optimizer evaluates a
+    * local relation's projections eagerly, before pruning.) */
   def transform(df: DataFrame, dataCol: Column, keep: Seq[Column] = Nil): DataFrame = {
-    val decoded = df.withColumn("_xml", unbase64(dataCol).cast("string"))
-    val keepNames = keep.map(c => decoded.select(c).columns.head)
-    val keyIdx = keepNames.map(decoded.schema.fieldIndex).toArray
-    val xmlIdx = decoded.schema.fieldIndex("_xml")
-    val outSchema = org.apache.spark.sql.types.StructType(
-      (keepNames ++ Columns).map(n =>
-        org.apache.spark.sql.types.StructField(
-          n, org.apache.spark.sql.types.StringType, nullable = true)))
-    val nKeep = keyIdx.length
-    val nCols = Columns.length
-    decoded.mapPartitions { rows =>
-      rows.map { row =>
-        val out = new Array[Any](nKeep + nCols)
-        var i = 0
-        while (i < nKeep) {
-          out(i) = Option(row.get(keyIdx(i))).map(String.valueOf).orNull
-          i += 1
-        }
-        parseXmlInto(row.getString(xmlIdx), out, nKeep)
-        org.apache.spark.sql.Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+    val keepNames = keep.map(c => df.select(c).columns.head)
+    val record = Bridge.column(LambdaRecord(Bridge.expression(unbase64(dataCol))))
+    val parsed = df.select(
+      keep.zip(keepNames).map { case (c, n) => c.cast("string").as(n) } :+ record.as("_lambda"): _*)
+    parsed.select(
+      keepNames.map(n => col(s"`${n.replace("`", "``")}`")) ++
+        Columns.map(c => col("_lambda").getField(c).as(c)): _*)
   }
 }

@@ -5,7 +5,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
@@ -231,10 +230,7 @@ class LogFeedPartitionReader(p: LogFeedInputPartition, conf: Configuration)
     if (reader != null) { reader.close(); reader = null }
     fileIdx += 1
     if (fileIdx >= p.files.length) return false
-    reader = ParquetReader
-      .builder(new GroupReadSupport(), new HPath(p.files(fileIdx)))
-      .withConf(conf)
-      .build()
+    reader = GroupFiles.open(p.files(fileIdx), conf)
     true
   }
 

@@ -8,8 +8,10 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
@@ -58,7 +60,10 @@ import org.apache.spark.util.SerializableConfiguration
   *      staged file whose footer ts bounds overlap it, carrying
   *      `(file, lastTs, hiTs)`; the `PartitionReader`s scan the staged
   *      parquet EXECUTOR-side with that range predicate (row groups
-  *      outside the range are skipped via footer statistics). Task
+  *      outside the range are skipped via footer statistics). Readers
+  *      open their file with the broadcast conf of step 5 only: no task
+  *      builds a `Configuration` of its own, so none re-reads Hadoop's
+  *      default resources from the classpath ([[GroupFiles]]). Task
   *      count is the number of overlapping staged files, at most the
   *      core count the snapshot was staged with: a paced trigger
   *      usually reads one file with one task, a full drain every file
@@ -248,6 +253,23 @@ private[streaming] final class StreamHadoopConf {
   }
 }
 
+/** Opens a parquet file as example-model `Group` records with a given
+  * Hadoop conf — the stream's broadcast one. `ParquetReader.builder(
+  * readSupport, path)` builds a fresh default-loading `Configuration`
+  * (a classpath scan for `core-default.xml`/`core-site.xml`) in every
+  * call, even when `withConf` replaces it; the `InputFile` builder
+  * takes its conf from the `HadoopInputFile` and builds none. Shared
+  * by [[ReplayPartitionReader]] and [[LogFeedPartitionReader]]. */
+private[streaming] object GroupFiles {
+  private final class Builder(file: InputFile) extends ParquetReader.Builder[Group](file) {
+    override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+  }
+
+  def open(file: String, conf: Configuration,
+      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetReader[Group] =
+    new Builder(HadoopInputFile.fromPath(new HPath(file), conf)).withFilter(filter).build()
+}
+
 class ReplayReaderFactory(conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -257,25 +279,36 @@ class ReplayReaderFactory(conf: Broadcast[SerializableConfiguration])
 /** Scans one staged file with a `ts_ms` range predicate. The filter
   * is pushed to parquet-mr, which drops whole row groups via footer
   * statistics and filters records inside surviving groups; bounds are
-  * re-checked here anyway (defense, not correctness-critical). */
+  * re-checked here anyway (defense, not correctness-critical). The
+  * file is opened with the stream's broadcast conf ([[GroupFiles]]),
+  * and the three field indices are resolved once, from the first
+  * record's schema (every record of one file shares it). */
 class ReplayPartitionReader(p: ReplayInputPartition, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
-  private val reader: ParquetReader[Group] = ParquetReader
-    .builder(new GroupReadSupport(), new HPath(p.file))
-    .withConf(conf)
-    .withFilter(FilterCompat.get(FilterApi.and(
+  private val reader: ParquetReader[Group] = GroupFiles.open(p.file, conf,
+    FilterCompat.get(FilterApi.and(
       FilterApi.gt(FilterApi.longColumn("ts_ms"), java.lang.Long.valueOf(p.tsLoExclusive)),
       FilterApi.ltEq(FilterApi.longColumn("ts_ms"), java.lang.Long.valueOf(p.tsHiInclusive)))))
-    .build()
   private var current: Group = _
+  private var currentTs = 0L
+  private var tsIdx = -1
+  private var keyIdx = -1
+  private var payloadIdx = -1
 
   override def next(): Boolean = {
     var g = reader.read()
     while (g != null) {
-      val ts = g.getLong("ts_ms", 0)
+      if (tsIdx < 0) {
+        val schema = g.getType
+        tsIdx = schema.getFieldIndex("ts_ms")
+        keyIdx = schema.getFieldIndex("partition_key")
+        payloadIdx = schema.getFieldIndex("payload")
+      }
+      val ts = g.getLong(tsIdx, 0)
       if (ts > p.tsLoExclusive && ts <= p.tsHiInclusive) {
         current = g
+        currentTs = ts
         return true
       }
       g = reader.read()
@@ -283,16 +316,12 @@ class ReplayPartitionReader(p: ReplayInputPartition, conf: Configuration)
     false
   }
 
-  override def get(): InternalRow = {
-    val schema = current.getType
-    def str(field: String): UTF8String = {
-      val i = schema.getFieldIndex(field)
-      if (current.getFieldRepetitionCount(i) == 0) null
-      else UTF8String.fromBytes(current.getBinary(i, 0).getBytes)
-    }
-    new GenericInternalRow(Array[Any](
-      current.getLong("ts_ms", 0), str("partition_key"), str("payload")))
-  }
+  private def str(i: Int): UTF8String =
+    if (current.getFieldRepetitionCount(i) == 0) null
+    else UTF8String.fromBytes(current.getBinary(i, 0).getBytes)
+
+  override def get(): InternalRow =
+    new GenericInternalRow(Array[Any](currentTs, str(keyIdx), str(payloadIdx)))
 
   override def close(): Unit = reader.close()
 }

@@ -137,6 +137,101 @@ class OperatorSparkSpec extends AnyFunSuite {
     }
   }
 
+  private val SensorNs = """xmlns:NS1="http://uptake.com/bhp/1/sensors""""
+
+  /** A signal message: the seven required attributes (or `attrs`),
+    * then `body` inside the payload. */
+  private def signalDoc(body: String,
+      attrs: Seq[String] = LambdaTransform.Attrs, tag: String = "1"): String =
+    s"<NS1:message $SensorNs><NS1:messagePayload>" +
+      attrs.map(a => s"<NS1:$a>$a-$tag</NS1:$a>").mkString + body +
+      "</NS1:messagePayload></NS1:message>"
+
+  private def reading(name: String, value: String, uom: Option[String] = None): String =
+    s"<NS1:reading><NS1:attributeName>$name</NS1:attributeName>" +
+      s"<NS1:attributeValue>$value</NS1:attributeValue>" +
+      uom.map(u => s"<NS1:attributeUoM>$u</NS1:attributeUoM>").getOrElse("") + "</NS1:reading>"
+
+  private def b64(xml: String): String =
+    java.util.Base64.getEncoder.encodeToString(xml.getBytes("UTF-8"))
+
+  /** `rows` as a local relation (interpreted eval) and as a parquet
+    * scan (whole-stage codegen). */
+  private def bothPaths(rows: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.DataFrame] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lambda").toString
+    rows.write.mode("overwrite").parquet(dir)
+    Seq(rows, spark.read.parquet(dir))
+  }
+
+  /** The XmlShapeException message in `e`'s cause chain, if any. */
+  private def shapeMessage(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: graft.xml.XmlShapeException => x.getMessage }
+
+  test("lambda transform: row-for-row equal to parseXml's projection, keep columns first") {
+    import spark.implicits._
+    val docs = Seq(
+      // declared, UoM and undeclared readings; an explicit *_UoM reading
+      // later overwritten by its value reading's unit
+      (1L, "a", signalDoc("<NS1:readingCollection>" +
+        reading("RMSTotalDB", "1.5") + reading("weight_UoM", "lb") +
+        reading("weight", "10", Some("kg")) + reading("speed", "55", Some("km/h")) +
+        reading("vertical_peak", "3", Some("g")) + reading("NotDeclared", "42") +
+        "</NS1:readingCollection>", tag = "1")),
+      // no readingCollection: every reading stays null
+      (9876543210123L, null, signalDoc("", tag = "2")),
+      // a reading without attributeName is skipped; an empty value
+      (-7L, "c", signalDoc("<NS1:readingCollection>" +
+        "<NS1:reading><NS1:attributeValue>x</NS1:attributeValue></NS1:reading>" +
+        reading("BrokenSpringDefect", "") + "</NS1:readingCollection>", tag = "3")))
+    val want = docs.map { case (id, tag, xml) =>
+      val m = LambdaTransform.parseXml(xml)
+      Seq(String.valueOf(id), tag) ++ LambdaTransform.Columns.map(m(_))
+    }
+    val rows = docs.map { case (id, tag, xml) => (id, tag, b64(xml)) }.toDF("id", "tag", "data")
+    bothPaths(rows).foreach { df =>
+      val out = LambdaTransform.transform(df, col("data"), Seq(col("id"), col("tag")))
+      assert(out.columns.toSeq == Seq("id", "tag") ++ LambdaTransform.Columns)
+      assert(out.schema.forall(_.dataType == org.apache.spark.sql.types.StringType))
+      val got = out.collect().map(_.toSeq.map(v => v.asInstanceOf[String])).sortBy(_.head)
+      assert(got.toSeq == want.sortBy(_.head))
+    }
+  }
+
+  test("lambda transform: every strict-contract violation fails a query that reads a lambda column") {
+    import spark.implicits._
+    val bad = Seq(
+      "<NS1:message " + SensorNs + "><NS1:other/></NS1:message>",
+      signalDoc("", attrs = LambdaTransform.Attrs.take(3)),
+      signalDoc("<NS1:readingCollection><NS1:reading><NS1:attributeName>RollerDB" +
+        "</NS1:attributeName></NS1:reading></NS1:readingCollection>"),
+      signalDoc("<NS1:readingCollection>" + reading("speed", "55") + "</NS1:readingCollection>"))
+    bad.foreach { xml =>
+      val want = intercept[graft.xml.XmlShapeException](LambdaTransform.parseXml(xml)).getMessage
+      val rows = Seq((1L, b64(xml)), (2L, b64(signalDoc("")))).toDF("id", "data")
+      val Seq(local, scan) = bothPaths(rows)
+      Seq(local, scan).foreach { df =>
+        val out = LambdaTransform.transform(df, col("data"), Seq(col("id")))
+        Seq(out, out.select(col("id"), col("sourceSystem")),
+            out.select(col("speed"), col("RollerDB"), col("vehicleIdentifier"))).foreach { q =>
+          val e = intercept[Exception](q.collect())
+          assert(shapeMessage(e).contains(want), s"want '$want', got: $e")
+        }
+      }
+      // documented: over a scan, a projection reading no lambda column
+      // skips the parse (the optimizer evaluates a local relation's
+      // projections eagerly, before pruning)
+      assert(LambdaTransform.transform(scan, col("data"), Seq(col("id"))).select(col("id"))
+        .collect().map(_.getString(0)).sorted.toSeq == Seq("1", "2"))
+    }
+    val nullData = Seq((1L, null: String)).toDF("id", "data")
+    bothPaths(nullData).foreach { df =>
+      val e = intercept[Exception](
+        LambdaTransform.transform(df, col("data")).select(col("sourceSystem")).collect())
+      assert(shapeMessage(e).contains("missing record data"), e.toString)
+    }
+  }
+
   test("PCM frame energy: int16 sign extension, exact sums, silence verdicts") {
     import spark.implicits._
     // hand-built little-endian payload: frame size 2, samples

@@ -1274,4 +1274,63 @@ class PlanAuditSpec extends AnyFunSuite {
       df.queryExecution.executedPlan.exists(_.getClass.getSimpleName.startsWith("WholeStageCodegen")),
       s"native expression not in codegen stage:\n$p")
   }
+
+  /** LambdaRecord occurrences across every node of `plan`. */
+  private def lambdaRecords[P <: org.apache.spark.sql.catalyst.plans.QueryPlan[P]](plan: P): Int =
+    plan.collect { case n => n.expressions.map(_.collect {
+      case l: graft.expressions.LambdaRecord => l }.size).sum }.sum
+
+  private val ObjectNodes = Seq("MapPartitions", "DeserializeToObject", "SerializeFromObject")
+
+  test("replay → lambda → to_json stream: one LambdaRecord, no object round trip, in codegen") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.operators.LambdaTransform
+    import spark.implicits._
+    val doc = "<NS1:message xmlns:NS1=\"http://uptake.com/bhp/1/sensors\"><NS1:messagePayload>" +
+      LambdaTransform.Attrs.map(a => s"<NS1:$a>x</NS1:$a>").mkString +
+      "</NS1:messagePayload></NS1:message>"
+    val payload = java.util.Base64.getEncoder.encodeToString(doc.getBytes("UTF-8"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_lambda_stream").toString
+    (0 until 20).map(i => (i.toLong, s"k$i", payload)).toDF("ts", "key", "payload")
+      .write.mode("overwrite").parquet(dir)
+    // perfbench's paced shape
+    val src = spark.readStream.format("graft-replay").option("path", dir)
+      .option("tsMillisExpr", "ts").option("keyExpr", "key").option("payloadExpr", "payload")
+      .option("stagingDir", java.nio.file.Files.createTempDirectory("graft_lambda_stage").toString)
+      .load()
+    val records = LambdaTransform.transform(src, col("payload"), keep = Seq(col("partition_key")))
+      .select(col("partition_key"),
+        to_json(struct(LambdaTransform.Columns.map(col): _*)).cast("binary"))
+      .as[(String, Array[Byte])]
+    val q = records.writeStream
+      .foreach(new graft.streaming.KinesisSink.Writer(
+        () => new graft.streaming.InMemoryRecordProducer(), "plan"))
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_lambda_ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(q.recentProgress.map(_.numInputRows).sum == 20)
+    val ex = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+    val opt = ex.optimizedPlan
+    val phys = ex.executedPlan
+    ObjectNodes.foreach { n =>
+      assert(!opt.exists(_.nodeName.contains(n)), s"$n in the optimized plan:\n$opt")
+      assert(!phys.exists(_.nodeName.contains(n)), s"$n in the executed plan:\n$phys")
+    }
+    assert(lambdaRecords(opt) == 1, s"the parse must appear exactly once:\n$opt")
+    assert(phys.collect { case w: WholeStageCodegenExec => lambdaRecords(w.child) }.sum == 1,
+      s"the parse must run inside whole-stage codegen:\n$phys")
+  }
+
+  test("x06: the 13-column lambda select parses once — CollapseProject keeps the struct") {
+    val df = graft.queries.XmlQueries.x06LambdaProjection(spark, dir)
+    val opt = df.queryExecution.optimizedPlan
+    assert(lambdaRecords(opt) == 1, s"the parse must appear exactly once:\n$opt")
+    ObjectNodes.foreach { n =>
+      assert(!opt.exists(_.nodeName.contains(n)), s"$n in the optimized plan:\n$opt")
+    }
+  }
 }

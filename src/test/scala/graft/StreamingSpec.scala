@@ -517,6 +517,50 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("replay and log-feed readers open their files without loading Hadoop default resources") {
+    import spark.implicits._
+    val (dir, stageRoot) = thousandRows()
+    val feedDir = java.nio.file.Files.createTempDirectory("graft_lf_conf").toString
+    Seq((1L, "en", 5L), (2L, "de", 7L)).toDF("doc_id", "lang", "n_chars")
+      .write.mode("overwrite").parquet(feedDir)
+    val s = new ReplayMicroBatchStream(replayOptions(dir, "stagingDir" -> stageRoot))
+    try {
+      val end = s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
+      val parts = s.planInputPartitions(ReplayOffset.Start, end).toSeq
+        .map(_.asInstanceOf[ReplayInputPartition])
+      val feed = LogFeedInputPartition(3, "insert", stagedFiles(feedDir).toArray)
+      // the executor's conf, loaded before the counting window opens
+      val conf = spark.sessionState.newHadoopConf()
+      conf.size()
+      // a Configuration reads its default resources through the context
+      // class loader it was built under
+      val loader = new DefaultResourceCounter(Thread.currentThread().getContextClassLoader)
+      val prev = Thread.currentThread().getContextClassLoader
+      Thread.currentThread().setContextClassLoader(loader)
+      val (payloads, changes) = try {
+        val payloads = parts.flatMap { p =>
+          val r = new ReplayPartitionReader(p, conf)
+          val buf = ArrayBuffer.empty[String]
+          try while (r.next()) buf += r.get().getUTF8String(2).toString
+          finally r.close()
+          buf
+        }
+        val r = new LogFeedPartitionReader(feed, conf)
+        val buf = ArrayBuffer.empty[(Long, String, Long)]
+        try while (r.next()) {
+          val row = r.get()
+          buf += ((row.getLong(2), row.getUTF8String(3).toString, row.getLong(4)))
+        } finally r.close()
+        (payloads, buf.toSeq)
+      } finally Thread.currentThread().setContextClassLoader(prev)
+      assert(payloads.sorted == (0 until 1000).map(i => s"p$i").sorted)
+      assert(changes.sorted == Seq((1L, "en", 5L), (2L, "de", 7L)))
+      assert(loader.hits.get == 0,
+        s"readers looked up Hadoop default resources ${loader.hits.get} times: " +
+          "some reader built a Configuration of its own")
+    } finally s.stop()
+  }
+
   test("upsert sink: batch replay after a crash is absorbed, not double-counted") {
     import spark.implicits._
     import graft.streaming.UpsertSink
@@ -713,6 +757,15 @@ class StreamingSpec extends AnyFunSuite {
     val expected = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id")).as[Long].collect().sorted.toSeq
     assert(ids == expected, "streamed export must cover the corpus exactly once")
+  }
+}
+
+/** Counts lookups of Hadoop's default resource files. */
+final class DefaultResourceCounter(parent: ClassLoader) extends ClassLoader(parent) {
+  val hits = new java.util.concurrent.atomic.AtomicInteger()
+  override def getResource(name: String): java.net.URL = {
+    if (name == "core-default.xml" || name == "core-site.xml") hits.incrementAndGet()
+    super.getResource(name)
   }
 }
 
