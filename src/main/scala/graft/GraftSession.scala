@@ -4,11 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Local-mode defaults are tuned for the test harness (local[32],
-  * 32 shuffle partitions, AQE on); on a real cluster the same settings
-  * scale out because nothing here hard-codes a partition count into the
-  * plans — shuffle parallelism is a config, skew handling is delegated
-  * to AQE, and small-dimension joins are explicitly broadcast.
+  * Local sessions run one shuffle partition per core with AQE on; on
+  * a real cluster the same settings scale out because nothing here
+  * hard-codes a partition count into the plans — shuffle parallelism
+  * is a config, skew handling is delegated to AQE, and
+  * small-dimension joins are explicitly broadcast.
   *
   * Every session built through [[tune]] also runs `file://` through
   * [[graft.io.ForkFreeLocalFs]] (`fs.file.impl`,
@@ -70,13 +70,15 @@ object GraftSession {
     "spark.sql.parquet.compression.codec" -> "zstd",
     "spark.sql.extensions" -> "graft.GraftExtensions")
 
-  /** Local session for tests / benches. */
-  def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
+  /** Local session for the tests and the entry mains (Bench, RunOne,
+    * Verify, ProfileOne): `local[cores]`, one shuffle partition per
+    * core, WARN logs. */
+  def local(cores: Int): SparkSession = {
     val spark = tune(
       SparkSession.builder()
         .master(s"local[$cores]")
         .appName("graft")
-        .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+        .config("spark.sql.shuffle.partitions", cores.toString)
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -7,15 +7,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the bench's session (GraftSession.tune, as RunOne and perfbench
-    // build it), so the gate checks the config that is timed
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the GraftSession.tune conf RunOne, Bench and perfbench run
+    // under, so the gate checks the config that is timed
+    val spark = GraftSession.local(cpus)
     // SPARK_GRAFT_VERIFY_ONLY=q32,t10 (name-prefix filter) restricts the
     // dump for local bisection — same contract as Bench's BENCH_ONLY;
     // the driver never sets it, so the gate output is unchanged

@@ -38,10 +38,6 @@ object TextFunctions {
   def wordShingles(text: Column, n: Int): Column =
     array_distinct(wordShinglesAll(text, n))
 
-  /** Shingle hash set: polyHash of each distinct shingle. */
-  def shingleHashes(text: Column, n: Int): Column =
-    transform(wordShingles(text, n), s => polyHash(s))
-
   def tokenCount(text: Column): Column = size(words(text))
 
   /** Marker-word tables for the language-ID heuristic. */

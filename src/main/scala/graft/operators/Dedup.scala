@@ -25,13 +25,6 @@ object Dedup {
       .agg(min(idCol).as("canonical_id"), count(lit(1)).as("n_copies"))
       .drop("_norm")
 
-  /** Per-doc distinct shingle sets (id, shingles, n_shingles) — native
-    * one-pass string shingling. */
-  def shingleSets(df: DataFrame, idCol: Column, textCol: Column, n: Int): DataFrame =
-    df.select(idCol.as("id"),
-        graft.expressions.WordShingleStrings(textCol, n).as("shingles"))
-      .withColumn("n_shingles", size(col("shingles")))
-
   /** Candidate pairs via a shared-shingle join, verified with exact
     * Jaccard ≥ `minJaccard` over the string shingle sets. Output:
     * (i, j, shared, ni, nj).

@@ -164,9 +164,8 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * docs, so fetch cost tracks the CANDIDATE count, not the corpus.
     * `meta` is the completeness marker; keyed by a content fingerprint
     * of documents.parquet. */
-  private[queries] def stageTokenHashIndex(spark: SparkSession, dir: String,
-      force: Boolean = false): String =
-    stageTokenTable(spark, dir, "a28th", lit(true), partitions = 4, force)
+  private[queries] def stageTokenHashIndex(spark: SparkSession, dir: String): String =
+    stageTokenTable(spark, dir, "a28th", lit(true), partitions = 4, force = false)
 
   /** ONE staging protocol for every persisted token-hash layout (a28
     * full table, a30 even-half base, a32 odd-half segment): tokenize
@@ -180,7 +179,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * once. */
   private[queries] def stageTokenTable(spark: SparkSession, dir: String, tag: String,
       docFilter: Column, partitions: Int, force: Boolean): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging(tag, s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -196,14 +195,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Stress hook: rebuild the persisted token-hash index
-    * unconditionally — isolates tokenize+hash ingest cost from the
-    * searches it amortizes (a build-if-missing call on a warm /tmp
-    * would time a fingerprint check, not the build). */
-  def rebuildTokenHashStage(spark: SparkSession, dir: String): String =
-    stageTokenHashIndex(spark, dir, force = true)
-
-  /** Stress/test hook: the persisted a28 token-hash index path,
+  /** Test hook: the persisted a28 token-hash index path,
     * build-if-missing. */
   def tokenHashStage(spark: SparkSession, dir: String): String =
     stageTokenHashIndex(spark, dir)
@@ -376,14 +368,11 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
       ordered = false) // batch landing: the post-stream readback re-sorts
   }
 
-  /** The COMPOSED modern serving stack, staged for stress
-    * measurement: keyword shortlist (stored inverted index, depth
-    * [[MaxSimShortlist]]) → reciprocal-rank fusion with the stored
-    * IVF-PQ vector ranks → MMR diversification over the fused head →
-    * MaxSim re-rank of the diversified picks from the stored
-    * token-hash table. Every channel is priced in isolation by
-    * RetrievalStress; this exposes the COMPOSITION's stage boundaries
-    * so the harness can price each hop and its materialization.
+  /** The COMPOSED modern serving stack, hop by hop: keyword
+    * shortlist (stored inverted index, depth [[MaxSimShortlist]]) →
+    * reciprocal-rank fusion with the stored IVF-PQ vector ranks → MMR
+    * diversification over the fused head → MaxSim re-rank of the
+    * diversified picks from the stored token-hash table.
     * Each stage localCheckpoints its output — the materialization
     * choice a production stack makes between stages: every
     * intermediate frame is RESULT-scale (≤ queries×50 rows, corpus-
@@ -513,10 +502,9 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * approximation (no idf drift, no segment-local dictionary): base ∪
     * increment is EXACTLY the full-corpus index, which is why a30
     * hash-gates against a27's inline oracle. */
-  private[queries] def stageA30TokenBase(spark: SparkSession, dir: String,
-      force: Boolean = false): String =
+  private[queries] def stageA30TokenBase(spark: SparkSession, dir: String): String =
     stageTokenTable(spark, dir, "a30th", col("doc_id") % 2 === 0,
-      partitions = 4, force)
+      partitions = 4, force = false)
 
   /** Test hook: the a30 frozen token-hash base staging path. */
   def a30TokenBaseStage(spark: SparkSession, dir: String): String =
@@ -555,10 +543,9 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * increment inline to gate the layout algebra, this stage is the
     * persisted artifact serving reads). Keyed by a content
     * fingerprint of documents.parquet. */
-  private[queries] def stageA32IncrementSegment(spark: SparkSession, dir: String,
-      force: Boolean = false): String =
+  private[queries] def stageA32IncrementSegment(spark: SparkSession, dir: String): String =
     stageTokenTable(spark, dir, "a32seg", col("doc_id") % 2 === 1,
-      partitions = 2, force)
+      partitions = 2, force = false)
 
   /** a32 — the shortlist re-rank SERVED FROM THE APPENDED token
     * index: a29's exact composition reading base ∪ increment segment
@@ -592,13 +579,13 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * files, larger row groups, and one scan instead of a union.
     * File counts before/after recorded in meta (written LAST — the
     * completeness-marker protocol, StagingProtocolSpec). */
-  private[queries] def stageA33Compacted(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageA33Compacted(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a33th", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val basePath = s"${stageA30TokenBase(spark, dir)}/tokens"
       val segPath = s"${stageA32IncrementSegment(spark, dir)}/tokens"
       def dataFiles(p: String): Long = {
@@ -646,13 +633,13 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * delete-applying compaction produces (compacted tokens minus
     * tombstoned rows, re-range-partitioned). Meta written last;
     * live/deleted counts recorded so the spec can pin coverage. */
-  private[queries] def stageA34Tombstones(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageA34Tombstones(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a34del", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/tombstones")
@@ -716,16 +703,15 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * IVF-PQ ranks (a21's integer RRF) → MMR diversification over the
     * fused top-[[MmrShortlist]] (a25/a26's greedy, λ=0.5) → MaxSim
     * re-rank of the [[MmrSelect]] picks from the stored token-hash
-    * table. This is exactly [[servingStackStages]] run hop by hop —
-    * the measured ServingStress composition promoted to a gated
-    * query: the oracle replays the ENTIRE stack inline (a19's pruned
-    * tf/df/impact chain at depth 50, a13's full IVF-PQ CTE chain,
-    * the RRF fusion, the unrolled 4-step greedy over exact cosines,
-    * and the MaxSim arithmetic on the picks), so four stored indexes
+    * table. This is exactly [[servingStackStages]] run hop by hop,
+    * promoted to a gated query: the oracle replays the ENTIRE stack
+    * inline (a19's pruned tf/df/impact chain at depth 50, a13's full
+    * IVF-PQ CTE chain, the RRF fusion, the unrolled 4-step greedy over
+    * exact cosines, and the MaxSim arithmetic on the picks), so four stored indexes
     * + three materialization hops + two driver-built IN-list probes
     * must together be output-indistinguishable from the composition
     * of the definitions. Scale: every stage past the keyword probe
-    * shuffles candidate-scale rows (RetrievalStress's per-stage
+    * shuffles candidate-scale rows (PERF.md's per-stage
     * shuffle-record table); nothing here is corpus-coupled except
     * the probe's Σ df(kept terms). */
   def a31StackServed(spark: SparkSession, dir: String): DataFrame = {

@@ -57,7 +57,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * merge semantics. Meta (n_live, n_tomb) written LAST. */
   private[queries] def stageA37KwCycle(spark: SparkSession, dir: String,
       force: Boolean = false, tag: String = "a37kw"): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging(tag, s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -117,21 +117,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
       force: Boolean = false): String =
     stageA37KwCycle(spark, dir, force, tag)
 
-  /** Stress hook: pre-build the cycle's INPUTS (base + both segments,
-    * each priced as ingest elsewhere) so a forced cycle rebuild times
-    * exactly the two re-stat merges + the tombstone landing — the
-    * steady-state loop's recurring cost, index bytes only. */
-  def a37CycleInputsStage(spark: SparkSession, dir: String): Unit = {
-    stageA20CorpusKwIndex(spark, dir)
-    stageKwIndexTable(spark, dir, "a37s1", col("doc_id") % 4 === 1, force = false)
-    stageKwIndexTable(spark, dir, "a37s2", col("doc_id") % 4 === 3, force = false)
-  }
-
-  /** Stress hook: re-run the two-merge cycle unconditionally (inputs
-    * build-if-missing — pre-stage via [[a37CycleInputsStage]]). */
-  def rebuildA37CycleStage(spark: SparkSession, dir: String): String =
-    stageA37KwCycle(spark, dir, force = true)
-
   /** Test hook: a fresh single-pass keyword build over the surviving
     * corpus — the ground truth the cycle's final layout is pinned
     * against (terms, postings AND served search). */
@@ -161,13 +146,13 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * run). Merge 2's input is merge 1's output ∪ segment 2, tombstoned
     * rows dropped during the merge — the delete-applying compaction
     * a34's purged table previews, here produced by the actual loop. */
-  private[queries] def stageA38TokenCycle(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageA38TokenCycle(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a38th", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val base = stageA30TokenBase(spark, dir)
       val seg1 = stageTokenTable(spark, dir, "a38s1",
         col("doc_id") % 4 === 1, partitions = 2, force = false)
@@ -200,25 +185,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   def a38TokenCycleStage(spark: SparkSession, dir: String): String =
     stageA38TokenCycle(spark, dir)
 
-  /** Stress hook: pre-build the a38 cycle's INPUTS (base + both token
-    * segments — each segment's tokenize+hash is ingest, priced by the
-    * a28 build row) so a forced cycle rebuild times exactly the two
-    * layout merges + the tombstone landing — the token loop's
-    * recurring cost, ~72 B/doc index bytes, no tokenize anywhere. */
-  def a38CycleInputsStage(spark: SparkSession, dir: String): Unit = {
-    stageA30TokenBase(spark, dir)
-    stageTokenTable(spark, dir, "a38s1", col("doc_id") % 4 === 1,
-      partitions = 2, force = false)
-    stageTokenTable(spark, dir, "a38s2", col("doc_id") % 4 === 3,
-      partitions = 2, force = false)
-  }
-
-  /** Stress hook: re-run the a38 two-merge cycle unconditionally
-    * (inputs build-if-missing — pre-stage via
-    * [[a38CycleInputsStage]]). */
-  def rebuildA38CycleStage(spark: SparkSession, dir: String): String =
-    stageA38TokenCycle(spark, dir, force = true)
-
   /** a38 — the late-interaction re-rank served after the full token
     * cycle (two generations appended, deletes interleaved, both
     * compacted away): a29's serving composition reads ONE
@@ -233,12 +199,11 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   /** A segment's code rows encoded against the FROZEN a12 codebooks
     * (FAISS add), fingerprint-keyed build-if-missing: encoding is the
     * segment's INGEST cost — paid once when the segment arrives
-    * (a12's append path prices it), never re-paid by a merge. Staged
-    * separately from the cycle so a forced cycle rebuild times the
-    * merges alone. Meta (n) written LAST. */
+    * (a12's append path prices it), never re-paid by a merge. Meta
+    * (n) written LAST. */
   private[queries] def stageA39Delta(spark: SparkSession, dir: String,
       tag: String, residue: Int): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging(tag, s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -262,15 +227,14 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * with the codebooks untouched (a16's purged-codes-same-codebooks,
     * produced here by the actual loop). Segment encodes live in their
     * own stages ([[stageA39Delta]] — ingest cost, paid at arrival),
-    * so a forced rebuild here prices exactly the loop's recurring
-    * work: two merges + the tombstone landing. */
-  private[queries] def stageA39VecCycle(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+    * so the cycle's own work is two merges + the tombstone landing. */
+  private[queries] def stageA39VecCycle(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a39pq", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val a12 = stageA12Index(spark, dir)
       val emb = Tables.embeddings(spark, dir)
       // segment 1 arrives pre-encoded (its own ingest stage), then
@@ -305,23 +269,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   def a39VecCycleStage(spark: SparkSession, dir: String): String =
     stageA39VecCycle(spark, dir)
 
-  /** Stress hook: pre-build the a39 cycle's INPUTS (trained index +
-    * both segments pre-ENCODED against the frozen codebooks) so a
-    * forced cycle rebuild times exactly the two layout merges + the
-    * tombstone landing — the vector loop's recurring cost, 4 B/vector
-    * code rows, no encoding anywhere. */
-  def a39CycleInputsStage(spark: SparkSession, dir: String): Unit = {
-    stageA12Index(spark, dir)
-    stageA39Delta(spark, dir, "a39d1", 1)
-    stageA39Delta(spark, dir, "a39d2", 3)
-  }
-
-  /** Stress hook: re-run the a39 two-merge cycle unconditionally
-    * (inputs build-if-missing — pre-stage via
-    * [[a39CycleInputsStage]]). */
-  def rebuildA39CycleStage(spark: SparkSession, dir: String): String =
-    stageA39VecCycle(spark, dir, force = true)
-
   /** a39 — PQ search served after the full vector cycle: the ADC +
     * exact-re-rank algebra over the twice-merged, purged code table
     * with the FROZEN a12 codebooks. Hash-gated with a16's ORACLE —
@@ -344,13 +291,13 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * per-media functions, so both merges are linear rewrites of
     * 24-byte hash rows — ZERO decode anywhere in the loop (each
     * segment paid its own decode once, at its own ingest). */
-  private[queries] def stageM13ImageCycle(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageM13ImageCycle(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("m13ih", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val base = stageM10Generation(spark, dir, "m10ihbase",
         col("media_id") % 2 === 0)
       val seg1 = stageM10Generation(spark, dir, "m13s1",
@@ -409,9 +356,9 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * vacuum because generational merging already keeps every epoch's
     * layout on disk — the log just names them. Marker written LAST;
     * a build without it starts from an empty stage. */
-  private[queries] def stageA40CommitLog(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageA40CommitLog(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a40log", s"$dir#$fp")
     val stagePath = new org.apache.hadoop.fs.Path(stage)
     val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -421,7 +368,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     // warm cost is two marker stats)
     val cyc = stageA37KwCycle(spark, dir)
     val base = stageA20CorpusKwIndex(spark, dir)
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
       fs.delete(stagePath, true)
       Seq(("layout", base), ("layout", s"$cyc/gen1"), ("tombstones",
         s"$cyc/tombstones"), ("layout", cyc)).foreach { case (kind, path) =>
@@ -435,13 +382,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   /** Test hook: the a40 commit-log staging path. */
   def a40CommitLogStage(spark: SparkSession, dir: String): String =
     stageA40CommitLog(spark, dir)
-
-  /** Stress hook: re-land the a40 commit log unconditionally (the
-    * lifecycle artifacts build-if-missing) — prices exactly what
-    * recording an epoch costs at scale: one commit file per retained
-    * artifact, zero index bytes. */
-  def rebuildA40CommitLogStage(spark: SparkSession, dir: String): String =
-    stageA40CommitLog(spark, dir, force = true)
 
   /** The AS-OF snapshot serve over a keyword-index commit log: resolve
     * the newest layout commit with version ≤ v, apply any tombstone
@@ -520,7 +460,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * revalidated outside the marker check (a40's self-heal rule). */
   private[queries] def stageA41VecCommitLog(spark: SparkSession,
       dir: String): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a41log", s"$dir#$fp")
     val stagePath = new org.apache.hadoop.fs.Path(stage)
     val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -612,7 +552,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * wholesale (StagingProtocolSpec's contract). */
   private[queries] def stageP28OwnedLog(spark: SparkSession, dir: String,
       tag: String = "p28vac", force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging(tag, s"$dir#$fp")
     val conf = spark.sessionState.newHadoopConf()
     val stagePath = new org.apache.hadoop.fs.Path(stage)
@@ -647,17 +587,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
   def p28OwnedLogStageTagged(spark: SparkSession, dir: String,
       tag: String, force: Boolean = false): String =
     stageP28OwnedLog(spark, dir, tag, force)
-
-  /** Stress hook: re-copy the owned log unconditionally (lifecycle
-    * artifacts build-if-missing) — prices the one-time ownership
-    * copies: linear in index bytes, no recompute. */
-  def rebuildP28OwnedLogStage(spark: SparkSession, dir: String): String =
-    stageP28OwnedLog(spark, dir, force = true)
-
-  /** Stress/test hook: the current-snapshot serve off an owned log. */
-  def p28ServeCurrent(spark: SparkSession, dir: String,
-      logStage: String): DataFrame =
-    kwServeAsOfLog(spark, dir, logStage, 3)
 
   /** p28 — INDEX VACUUM: storage reclaim as a first-class maintenance
     * operator. Build the owned four-epoch log (copies priced once,
@@ -695,7 +624,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * no marker → wholesale recopy (StagingProtocolSpec's contract). */
   private[queries] def stageP30OwnedVecLog(spark: SparkSession, dir: String,
       tag: String = "p30vac", force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging(tag, s"$dir#$fp")
     val stagePath = new org.apache.hadoop.fs.Path(stage)
     val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())

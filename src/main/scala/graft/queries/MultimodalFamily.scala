@@ -197,22 +197,16 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
   def m07ImageNearDup(spark: SparkSession, dir: String): DataFrame = {
     val payloads = stagedMediaFixture(spark, dir, "mpng16")(
       id => Multimodal.synthPng(id, 16, 16))
-    m07NearDupFrom(payloads)
-  }
-
-  /** m07's decode → exact-cluster → banded-Hamming tail over any
-    * (media_id, payload) frame — split out so MultimodalStress can
-    * drive the identical pipeline over replicated corpora. */
-  def m07NearDupFrom(payloads: DataFrame): DataFrame =
     nearDupFromHashes(Multimodal.aHash8(payloads).toDF()
       .select(col("media_id"), col("hash_hi"), col("hash_lo")))
+  }
 
   /** The banded-cluster frame the near-dup self-join runs over: exact
     * clusters (one row per DISTINCT hash, lowest member id kept, all
     * copies counted) exploded into 4×16-bit bands with the band's key
-    * value. Split out so the skew audit (AnalyticsSpec /
-    * MultimodalStress) can measure per-(band, key) bucket sizes on
-    * the REAL join input: the self-join hash-partitions on
+    * value. Split out so the skew audit (AnalyticsSpec) can measure
+    * per-(band, key) bucket sizes on the REAL join input: the
+    * self-join hash-partitions on
     * (band, key), and the cluster pre-aggregation is what bounds a
     * hot bucket — a billion exact copies of one meme are ONE row per
     * band here, so bucket sizes track per-band DISTINCT-hash
@@ -253,7 +247,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
   /** The m09 image-hash index BUILD stage — the multimodal channel's
     * build/search split (a19's economics replayed on pixels): m07
     * re-decodes the whole corpus on every near-dup call — and decode
-    * IS the cost (MultimodalStress ×100: ~36 s of 45 s is ImageIO,
+    * IS the cost (×100 corpus, PERF.md: ~36 s of 45 s is ImageIO,
     * against a flat sub-second distinct-hash join) — while m09 decodes
     * ONCE at ingest (the S5 whole-object download moment, when the
     * bytes are in hand anyway) and persists the perceptual hashes:
@@ -269,13 +263,13 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * Keyed by a content fingerprint of documents.parquet (the media
     * fixture is a pure function of the doc ids), so an in-place-
     * regenerated corpus invalidates the stage. */
-  private[queries] def stageImageHashIndex(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageImageHashIndex(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("m09ih", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val payloads = stagedMediaFixture(spark, dir, "mpng16")(
         id => Multimodal.synthPng(id, 16, 16))
       Multimodal.aHash8(payloads).toDF()
@@ -287,15 +281,8 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Stress hook: rebuild the persisted image-hash index
-    * unconditionally — isolates decode+hash ingest cost from the
-    * near-dup search it amortizes. */
-  def rebuildImageHashStage(spark: SparkSession, dir: String): String =
-    stageImageHashIndex(spark, dir, force = true)
-
   /** Serving/test hook: the persisted m09 hash-index path,
-    * build-if-missing (read by m09, the streamed s24 gate, and
-    * MultimodalStress's warm-serving measurement). */
+    * build-if-missing (read by m09 and the streamed s24 gate). */
   def imageHashStage(spark: SparkSession, dir: String): String =
     stageImageHashIndex(spark, dir)
 
@@ -322,7 +309,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
   private[queries] def stageM10Generation(spark: SparkSession, dir: String,
       tag: String, memberPred: Column, force: Boolean = false): String =
     synchronized {
-      val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+      val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
       val stage = PipelineQueries.staging(tag, s"$dir#$fp")
       val fs = new org.apache.hadoop.fs.Path(stage)
         .getFileSystem(spark.sessionState.newHadoopConf())
@@ -381,13 +368,13 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * corpus at 100 TB), and buys every subsequent near-dup serve
     * fewer files and one scan instead of a union. File counts
     * before/after in meta (written LAST — StagingProtocolSpec). */
-  private[queries] def stageM11Compacted(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageM11Compacted(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("m11ih", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val basePath = s"${stageM10Generation(spark, dir, "m10ihbase",
         col("media_id") % 2 === 0)}/hashes"
       val segPath = s"${stageM10Generation(spark, dir, "m10ihseg",
@@ -438,13 +425,13 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * base, odd in the segment) persisted beside the index, plus the
     * PURGED hash table the next delete-applying compaction produces.
     * Meta written last; live/deleted counts recorded. */
-  private[queries] def stageM12Tombstones(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageM12Tombstones(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("m12del", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(7)) === 3)
         .select(col("doc_id").as("media_id"))

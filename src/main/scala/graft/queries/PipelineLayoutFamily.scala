@@ -68,22 +68,8 @@ private[queries] trait PipelineLayoutFamily { this: AnalyticsQueries.type =>
     * Every stage is linear or hash-shuffled — nothing quadratic, no
     * driver-side data. The oracle replays the identical pipeline in
     * SQL, so the final mix report is hash-exact. */
-  def p07DataPrep(spark: SparkSession, dir: String): DataFrame =
-    p07Stages(Tables.documents(spark, dir)).report
-
-  /** p07's intermediate frames, exposed for PipelineStress's per-stage
-    * wall + shuffle-byte accounting (every family is stress-measured
-    * in isolation; the COMPOSITE a real corpus build runs is measured
-    * through these). `checkpointSets` materializes the shingle-set
-    * frame that the decontam stage consumes TWICE (probe build + the
-    * verdict join) — the p22-style recompute-vs-checkpoint A/B at the
-    * one reused subtree in the chain. */
-  private[graft] final case class P07Stages(
-      quality: DataFrame, evalVocab: DataFrame, deduped: DataFrame,
-      clean: DataFrame, report: DataFrame)
-
-  private[graft] def p07Stages(docs: DataFrame,
-      checkpointSets: Boolean = false): P07Stages = {
+  def p07DataPrep(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
     val stopwords = array(Seq("the", "and", "of", "is", "a").map(lit): _*)
     // 1. quality gate (inline t09 keep-rules; verdict chain not needed)
     val quality = docs.filter(
@@ -103,23 +89,21 @@ private[queries] trait PipelineLayoutFamily { this: AnalyticsQueries.type =>
     val deduped = train.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
     // 4. decontamination: shingle-overlap rate vs the eval vocabulary
-    val sets0 = deduped.select(col("doc_id"), col("lang"), col("text"),
+    val sets = deduped.select(col("doc_id"), col("lang"), col("text"),
         graft.expressions.WordShingleHashes(col("text"), 4).as("hv"))
       .withColumn("n_sh", size(col("hv")))
-    val sets = if (checkpointSets) sets0.localCheckpoint() else sets0
     val hits = sets.select(col("doc_id"), explode(col("hv")).as("h"))
       .join(evalVocab, Seq("h"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_cont"))
     val clean = sets.join(hits, Seq("doc_id"), "left")
       .filter(coalesce(col("n_cont"), lit(0L)) * 10 < col("n_sh").cast("long") * 8)
     // 5. reproducible 90% sample; 6. per-lang mix report
-    val report = clean
+    clean
       .filter(pmod(TF.polyHash(col("doc_id").cast("string")), lit(100)) < 90)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(TF.tokenCount(col("text")).cast("long")).as("total_tokens"))
       .orderBy(col("lang"))
-    P07Stages(quality, evalVocab, deduped, clean, report)
   }
 
   /** p10 — INCREMENTAL dedup, the production shape: yesterday's corpus
@@ -406,43 +390,6 @@ private[queries] trait PipelineLayoutFamily { this: AnalyticsQueries.type =>
   def p19ShardStage(spark: SparkSession, dir: String): String =
     PipelineQueries.staging("p19", dir)
 
-  /** p21 — fixed-point PageRank over the customer⇄supplier trade
-    * graph: the crawl-frontier prioritization op of a web-scale data
-    * pipeline (crawlers rank hosts exactly like this to decide what to
-    * fetch next; centrality over a bipartite interaction graph is the
-    * same computation). All arithmetic is scaled integer (ranks in
-    * 10⁻⁹ units, per-edge contribution `r DIV outdeg`, damping
-    * `0.15 + 0.85·inflow` as `150e6 + (85·inflow) DIV 100`), so three
-    * Jacobi iterations are bit-identical in both engines and the
-    * oracle unrolls them as three CTEs — no float mass anywhere.
-    * Node ids disambiguate the two id spaces arithmetically (customer
-    * c → 2c, supplier s → 2s+1). Scale shape: the canonical
-    * distributed PageRank — per iteration one equi-join of the rank
-    * table (1 row/node) onto the edge list plus one map-side-combined
-    * sum; edges never leave their partitioning, no driver-side state,
-    * rounds = a constant. Output: top-10 nodes per kind — the frontier
-    * a scheduler would actually consume. */
-  /** The p21 Jacobi core over an arbitrary (src, dst) edge list —
-    * extracted so GraphStress can replicate the edge set ×N and time
-    * the iteration loop in isolation. Returns (id, r) scaled-integer
-    * ranks after `iters` rounds; each round is one equi-join of the
-    * rank table onto the edges plus one map-side-combined sum. */
-  private[graft] def pageRankRanks(edges: DataFrame, iters: Int): DataFrame = {
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    var rank = deg.select(col("src").as("id"), lit(1000000000L).as("r"))
-    for (_ <- 1 to iters) {
-      rank = edges
-        .join(rank, edges("src") === rank("id"))
-        .join(deg, Seq("src"))
-        .select(col("dst"), expr("r DIV d").as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("inflow"))
-        .select(col("dst").as("id"),
-          expr("CAST(150000000 + (85 * inflow) DIV 100 AS BIGINT)").as("r"))
-    }
-    rank
-  }
-
   /** The p26 z-order layout BUILD stage: the events table rewritten
     * ONCE, range-partitioned and sorted by the 32-bit Morton
     * interleave of 16-bit (ts, user_id) buckets
@@ -453,13 +400,13 @@ private[queries] trait PipelineLayoutFamily { this: AnalyticsQueries.type =>
     * dimensions, one metadata-scale aggregate) and doubles as the
     * completeness marker. Keyed by a content fingerprint of
     * events.parquet. */
-  private[queries] def stageZOrderEvents(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/events.parquet")
+  private[queries] def stageZOrderEvents(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/events.parquet")
     val stage = PipelineQueries.staging("p26zo", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       // NO row filter before the bounds or the write: the oracle
       // computes its box bounds over ALL raw rows, and the staged
       // copy must carry the full table (a null user_id gets a null
@@ -491,10 +438,6 @@ private[queries] trait PipelineLayoutFamily { this: AnalyticsQueries.type =>
     }
     stage
   }
-
-  /** Test hook: the staged z-ordered events path, build-if-missing. */
-  def zorderEventsStage(spark: SparkSession, dir: String): String =
-    stageZOrderEvents(spark, dir)
 
   /** p26 — TWO-DIMENSIONAL scan pruning via z-order clustering on the
     * time×entity shape: p14 introduces the curve (8-bit buckets over
@@ -539,13 +482,13 @@ private[queries] trait PipelineLayoutFamily { this: AnalyticsQueries.type =>
     * bounds (the frozen dictionary discipline: an increment reuses
     * the base's normalization so its curve tiles the same key
     * space). meta doubles as the completeness marker. */
-  private[queries] def stageZOrderIncrement(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/events.parquet")
+  private[queries] def stageZOrderIncrement(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/events.parquet")
     val stage = PipelineQueries.staging("p27zi", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val ev = Tables.events(spark, dir).select(col("event_id"),
         expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_us"),
         col("user_id"), col("event_type"), col("value"))
@@ -600,23 +543,45 @@ private[queries] trait PipelineLayoutFamily { this: AnalyticsQueries.type =>
       .orderBy(col("event_type"))
   }
 
-  /** The p21 trade-graph edge list (customer c → 2c, supplier s →
-    * 2s+1, symmetrized) — shared by the gated query and GraphStress. */
-  private[graft] def p21Edges(spark: SparkSession, dir: String): DataFrame = {
+  /** p21 — fixed-point PageRank over the customer⇄supplier trade
+    * graph: the crawl-frontier prioritization op of a web-scale data
+    * pipeline (crawlers rank hosts exactly like this to decide what to
+    * fetch next; centrality over a bipartite interaction graph is the
+    * same computation). All arithmetic is scaled integer (ranks in
+    * 10⁻⁹ units, per-edge contribution `r DIV outdeg`, damping
+    * `0.15 + 0.85·inflow` as `150e6 + (85·inflow) DIV 100`), so three
+    * Jacobi iterations are bit-identical in both engines and the
+    * oracle unrolls them as three CTEs — no float mass anywhere.
+    * Node ids disambiguate the two id spaces arithmetically (customer
+    * c → 2c, supplier s → 2s+1). Scale shape: the canonical
+    * distributed PageRank — per iteration one equi-join of the rank
+    * table (1 row/node) onto the edge list plus one map-side-combined
+    * sum; edges never leave their partitioning, no driver-side state,
+    * rounds = a constant. Output: top-10 nodes per kind — the frontier
+    * a scheduler would actually consume. */
+  def p21PageRank(spark: SparkSession, dir: String): DataFrame = {
     val e0 = Tables.orders(spark, dir)
       .join(Tables.lineitem(spark, dir),
         col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("src"),
         (col("l_suppkey") * 2 + 1).as("dst"))
       .distinct()
-    e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  def p21PageRank(spark: SparkSession, dir: String): DataFrame = {
     // materialize: three iterations + deg all reuse this edge list —
     // at scale it is the persisted graph table, this is the demo analog
-    val edges = p21Edges(spark, dir).localCheckpoint()
-    val rank = pageRankRanks(edges, 3)
+    val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .localCheckpoint()
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    var rank = deg.select(col("src").as("id"), lit(1000000000L).as("r"))
+    for (_ <- 1 to 3) {
+      rank = edges
+        .join(rank, edges("src") === rank("id"))
+        .join(deg, Seq("src"))
+        .select(col("dst"), expr("r DIV d").as("c"))
+        .groupBy(col("dst"))
+        .agg(sum(col("c")).as("inflow"))
+        .select(col("dst").as("id"),
+          expr("CAST(150000000 + (85 * inflow) DIV 100 AS BIGINT)").as("r"))
+    }
     val w = Window.partitionBy(col("kind")).orderBy(col("r").desc, col("orig_id"))
     rank
       .select(when(col("id") % 2 === 0, lit("customer")).otherwise(lit("supplier")).as("kind"),

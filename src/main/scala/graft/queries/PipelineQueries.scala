@@ -62,17 +62,12 @@ object PipelineQueries {
   /** Content fingerprint of an input path: the recursive (name, size,
     * mtime) listing, digested. Folding this into a staging key makes a
     * memoized fixture self-invalidating when its INPUT changes in
-    * place — the "testdata is immutable" assumption is real for
-    * /root/testdata but violated by e.g. AnnStress's rewritten stress
-    * corpus, and a stale persisted index searched against a fresh
-    * oracle is a silent wrong answer. One FS listing per call; no data
-    * is read. */
-  def contentFingerprint(spark: SparkSession, path: String): String =
-    contentFingerprint(path)
-
-  /** SparkSession-free variant — a plain Hadoop conf resolves local and
-    * hdfs/s3a paths the same way here, and stageOnce must be callable
-    * before any session config is inspected. */
+    * place — testdata can be regenerated in place, and a stale
+    * persisted index searched against a fresh oracle is a silent wrong
+    * answer. One FS listing per call; no data is read. It takes no
+    * SparkSession: a plain Hadoop conf resolves local and hdfs/s3a
+    * paths the same way here, and stageOnce must be callable before
+    * any session config is inspected. */
   def contentFingerprint(path: String): String = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(new org.apache.hadoop.conf.Configuration())
@@ -99,9 +94,9 @@ object PipelineQueries {
     * per-run state (s12's upsert ledger) must NOT go through this —
     * only inputs that are deterministic functions of the source dir.
     * The key folds in a content fingerprint of the SOURCE dir, so a
-    * source regenerated in place (new testdata generation, AnnStress's
-    * rewritten corpus) invalidates every fixture derived from it
-    * instead of silently serving the old bytes. */
+    * source regenerated in place (a new testdata generation)
+    * invalidates every fixture derived from it instead of silently
+    * serving the old bytes. */
   private val stagedFixtures = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   def stageOnce(tag: String, dir: String, dataDirs: Seq[String] = Nil)(
       build: => Unit): Unit = {
@@ -552,7 +547,7 @@ object PipelineQueries {
     * of documents.parquet. */
   private def stageVersionedTable(spark: SparkSession, dir: String): String =
     synchronized {
-      val fp = contentFingerprint(spark, s"$dir/documents.parquet")
+      val fp = contentFingerprint(s"$dir/documents.parquet")
       val root = staging("p23tt", s"$dir#$fp")
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val hfs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -737,7 +732,7 @@ object PipelineQueries {
     * own log under `root/log`; marker last. */
   private[queries] def stageP33OwnedTableLog(spark: SparkSession, dir: String,
       tag: String = "p33tt", force: Boolean = false): String = synchronized {
-    val fp = contentFingerprint(spark, s"$dir/documents.parquet")
+    val fp = contentFingerprint(s"$dir/documents.parquet")
     val root = staging(tag, s"$dir#$fp")
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val hfs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())

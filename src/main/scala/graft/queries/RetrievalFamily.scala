@@ -124,9 +124,8 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     *
     * Keyed by a content fingerprint of documents.parquet, so an
     * in-place-regenerated corpus invalidates the stage. */
-  private[queries] def stageKeywordIndex(spark: SparkSession, dir: String,
-      force: Boolean = false): String =
-    stageKwIndexTable(spark, dir, "a19kw", lit(true), force)
+  private[queries] def stageKeywordIndex(spark: SparkSession, dir: String): String =
+    stageKwIndexTable(spark, dir, "a19kw", lit(true), force = false)
 
   /** ONE builder for every persisted keyword-index layout (a19 full
     * table, a20 even-half base, a35's odd-half segment): tokenize the
@@ -137,7 +136,7 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * fingerprint of documents.parquet. */
   private[queries] def stageKwIndexTable(spark: SparkSession, dir: String,
       tag: String, docFilter: Column, force: Boolean): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging(tag, s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -192,11 +191,6 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
       .write.mode("overwrite").parquet(s"$stage/postings")
     terms
   }
-
-  /** Stress hook: rebuild the persisted keyword index unconditionally —
-    * isolates inverted-index build cost from search cost. */
-  def rebuildKeywordIndexStage(spark: SparkSession, dir: String): String =
-    stageKeywordIndex(spark, dir, force = true)
 
   /** Serving/test hook: the persisted a19 index path, build-if-missing
     * (the artifact a19, a21 and the streamed s20 serving loop read). */
@@ -346,9 +340,8 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * inverted index). Same three tables as [[stageKeywordIndex]];
     * meta's max_term_id lets increment-only vocabulary be assigned
     * ids ABOVE the frozen dictionary without renumbering it. */
-  private[queries] def stageA20CorpusKwIndex(spark: SparkSession, dir: String,
-      force: Boolean = false): String =
-    stageKwIndexTable(spark, dir, "a20kw", col("doc_id") % 2 === 0, force)
+  private[queries] def stageA20CorpusKwIndex(spark: SparkSession, dir: String): String =
+    stageKwIndexTable(spark, dir, "a20kw", col("doc_id") % 2 === 0, force = false)
 
   /** Test hook: the a20 frozen corpus-index staging path. */
   def a20CorpusKwIndexStage(spark: SparkSession, dir: String): String =
@@ -409,9 +402,8 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * leaves once it is finalized as a segment (Lucene's flushed
     * segment: self-contained stats, mergeable later). Input to the
     * a35 compaction. */
-  private[queries] def stageA35Segment(spark: SparkSession, dir: String,
-      force: Boolean = false): String =
-    stageKwIndexTable(spark, dir, "a35seg", col("doc_id") % 2 === 1, force)
+  private[queries] def stageA35Segment(spark: SparkSession, dir: String): String =
+    stageKwIndexTable(spark, dir, "a35seg", col("doc_id") % 2 === 1, force = false)
 
   /** Per-doc tf recovered EXACTLY from a stored keyword layout's own
     * artifacts: postings carry impact := tf·idf with idf ≥ 10⁴ > 0,
@@ -441,13 +433,13 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * "compaction ≡ fresh build" pin (AnalyticsSpec additionally pins
     * terms, postings AND the served search row-identical to the a19
     * monolith). File counts before/after in meta, written LAST. */
-  private[queries] def stageA35Compacted(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageA35Compacted(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a35kw", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val base = stageA20CorpusKwIndex(spark, dir)
       val seg = stageA35Segment(spark, dir)
       def tfOf(st: String): DataFrame = kwRecoverTf(spark, st)
@@ -475,17 +467,6 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
   def a35CompactedKwStage(spark: SparkSession, dir: String): String =
     stageA35Compacted(spark, dir)
 
-  /** Test/stress hook: the a35 odd-half segment staging path. */
-  def a35SegmentStage(spark: SparkSession, dir: String): String =
-    stageA35Segment(spark, dir)
-
-  /** Stress hook: rebuild the compacted index unconditionally —
-    * isolates the RE-STAT MERGE cost (index bytes in, index bytes
-    * out) from the base/segment builds it consumes and the serving
-    * it amortizes. */
-  def rebuildA35CompactedStage(spark: SparkSession, dir: String): String =
-    stageA35Compacted(spark, dir, force = true)
-
   /** a35 — keyword search served from the COMPACTED (re-statted)
     * index: base ∪ segment merged into one fresh-layout index with
     * exact global df/idf — the idf drift a20's append deliberately
@@ -509,13 +490,13 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * note stats stay FROZEN at purge time: re-statting is the NEXT
     * a35-style merge's job, exactly a16's purged-codes-same-codebooks
     * protocol). Meta written last. */
-  private[queries] def stageA36Tombstones(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stageA36Tombstones(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a36del", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val a35 = stageA35Compacted(spark, dir)
       Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
@@ -703,13 +684,13 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     *  - `meta` (n passages): written last as the completeness marker.
     *
     * Keyed by a content fingerprint of documents.parquet. */
-  private[queries] def stagePassageIndex(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+  private[queries] def stagePassageIndex(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a23pi", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val chunks = passageChunks(Tables.documents(spark, dir))
       val nP = chunks.count()
       val tf = chunks.select(col("pid"), col("doc_id"), explode(col("ptoks")).as("term"))
@@ -733,11 +714,6 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     }
     stage
   }
-
-  /** Stress hook: rebuild the persisted passage index unconditionally —
-    * isolates chunk-index build cost from search cost. */
-  def rebuildPassageIndexStage(spark: SparkSession, dir: String): String =
-    stagePassageIndex(spark, dir, force = true)
 
   /** a23 — passage retrieval over the PERSISTED chunk index: a22's
     * semantics served the way a19 serves documents. Search-time work:

@@ -66,19 +66,6 @@ private[queries] trait StreamingCoreFamily { this: StreamingQueries.type =>
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Streaming INPUT fixtures (staged parquet files a file-source
-    * stream admits batch by batch) are deterministic functions of the
-    * immutable testdata dir, so they are built once per (tag, dir) via
-    * [[PipelineQueries.stageOnce]] (versioned + locked + crash-clean).
-    * The operator's timed cost is then the STREAM — source admission,
-    * state-store commits, drain — not re-writing its own input files:
-    * the same layout-vs-query split q31 applies to storage. Mutable
-    * per-run state (s12's upsert ledger) must NOT go through this —
-    * only inputs. */
-  private[queries] def stageOnce(tag: String, dir: String, dataDirs: Seq[String] = Nil)(
-      build: => Unit): Unit =
-    PipelineQueries.stageOnce(tag, dir, dataDirs)(build)
-
   /** The ONE streamed-landing scaffold the foreachBatch family shares
     * (s17/s18/s20/s21/s24/s25/s26): stage the input frame once (the
     * caller shapes it to 4 partitions — 4 files → 4 micro-batches
@@ -95,7 +82,7 @@ private[queries] trait StreamingCoreFamily { this: StreamingQueries.type =>
       onBatch: (DataFrame, Long, String) => Unit): String = {
     val root = java.nio.file.Paths.get(PipelineQueries.staging(tag, dir))
     val staged = root.resolve("in")
-    stageOnce(s"${tag}in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce(s"${tag}in", dir, Seq(staged.toString)) {
       input.write.mode("overwrite").parquet(staged.toString)
     }
     val landed = root.resolve(landingName).toString
@@ -387,7 +374,7 @@ private[queries] trait StreamingCoreFamily { this: StreamingQueries.type =>
     // between micro-batches (a single batch would eval the buffer it
     // just built and never exercise restore+merge)
     val staged = java.nio.file.Paths.get(PipelineQueries.staging("s07", dir))
-    stageOnce("s07", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s07", dir, Seq(staged.toString)) {
       val docs = Tables.documents(spark, dir)
       val median = docs.count() / 2
       def stageHalf(half: DataFrame, name: String): Unit = {
@@ -450,7 +437,7 @@ private[queries] trait StreamingCoreFamily { this: StreamingQueries.type =>
     // stripped from the data files, so the stream schema is unchanged)
     val clickDir = staged.resolve("clicks").toString
     val purchDir = staged.resolve("purchases").toString
-    stageOnce("s08", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s08", dir, Seq(staged.toString)) {
       val stageTmp = staged.resolve("_stage")
       ev.filter(col("event_type").isin("click", "purchase"))
         .withColumn("half", (col("event_id") % 2).cast("int"))
@@ -534,7 +521,7 @@ private[queries] trait StreamingCoreFamily { this: StreamingQueries.type =>
     val tsIsLong = eventsTsIsLong(spark, dir)
     val schema = eventsStreamSchema(tsIsLong)
     val staged = java.nio.file.Paths.get(PipelineQueries.staging("s09", dir))
-    stageOnce("s09", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s09", dir, Seq(staged.toString)) {
       java.nio.file.Files.createDirectories(staged)
       java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "events.parquet"),
         staged.resolve("events.parquet"),
@@ -585,7 +572,7 @@ private[queries] trait StreamingCoreFamily { this: StreamingQueries.type =>
     val tsIsLong = eventsTsIsLong(spark, dir)
     val schema = eventsStreamSchema(tsIsLong)
     val staged = java.nio.file.Paths.get(PipelineQueries.staging("s10", dir))
-    stageOnce("s10", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s10", dir, Seq(staged.toString)) {
       java.nio.file.Files.createDirectories(staged)
       val dataFile = staged.resolve("events.parquet")
       java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "events.parquet"),
@@ -709,7 +696,7 @@ private[queries] trait StreamingCoreFamily { this: StreamingQueries.type =>
     // input fixture staged once; the upsert STATE is per-run mutable
     // (merge is cumulative across batches) so it is deleted fresh —
     // deliberately outside stageOnce
-    stageOnce("s12in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s12in", dir, Seq(staged.toString)) {
       Tables.events(spark, dir)
         .select(col("event_type"), col("value"))
         .repartition(4) // 4 files → 4 micro-batches under maxFilesPerTrigger=1

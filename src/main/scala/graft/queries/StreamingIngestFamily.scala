@@ -53,7 +53,7 @@ private[queries] trait StreamingIngestFamily { this: StreamingQueries.type =>
     val stage = AnalyticsQueries.a12CorpusIndexStage(spark, dir)
     val root = java.nio.file.Paths.get(PipelineQueries.staging("s14", dir))
     val staged = root.resolve("in")
-    stageOnce("s14in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s14in", dir, Seq(staged.toString)) {
       Tables.embeddings(spark, dir).filter(col("vec_id") % 2 === 1)
         .repartition(4) // 4 files → 4 micro-batches under maxFilesPerTrigger=1
         .write.mode("overwrite").parquet(staged.toString)
@@ -110,7 +110,7 @@ private[queries] trait StreamingIngestFamily { this: StreamingQueries.type =>
     val a15 = AnalyticsQueries.a15CompactedStage(spark, dir)
     val root = java.nio.file.Paths.get(PipelineQueries.staging("s15", dir))
     val staged = root.resolve("in")
-    stageOnce("s15in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s15in", dir, Seq(staged.toString)) {
       Tables.embeddings(spark, dir).filter(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id"))
         .repartition(4) // 4 files → 4 micro-batches under maxFilesPerTrigger=1
@@ -164,7 +164,7 @@ private[queries] trait StreamingIngestFamily { this: StreamingQueries.type =>
   def s16StreamExport(spark: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Paths.get(PipelineQueries.staging("s16", dir))
     val staged = root.resolve("in")
-    stageOnce("s16in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s16in", dir, Seq(staged.toString)) {
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("text"))
         .repartition(4) // 4 files → 4 micro-batches under maxFilesPerTrigger=1
@@ -274,7 +274,7 @@ private[queries] trait StreamingIngestFamily { this: StreamingQueries.type =>
   def s19DriftMonitor(spark: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Paths.get(PipelineQueries.staging("s19", dir))
     val staged = root.resolve("in")
-    stageOnce("s19in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s19in", dir, Seq(staged.toString)) {
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), pmod(col("doc_id"), lit(4)).as("w"))
         .repartition(4) // 4 files → 4 micro-batches under maxFilesPerTrigger=1
@@ -455,7 +455,7 @@ private[queries] trait StreamingIngestFamily { this: StreamingQueries.type =>
       .localCheckpoint() // frozen once; every micro-batch probes it
     val root = java.nio.file.Paths.get(PipelineQueries.staging("s22", dir))
     val staged = root.resolve("in")
-    stageOnce("s22in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s22in", dir, Seq(staged.toString)) {
       Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(10)) =!= 0)
         .select(col("doc_id"), col("text"))
@@ -520,7 +520,7 @@ private[queries] trait StreamingIngestFamily { this: StreamingQueries.type =>
     import graft.expressions.MGSummary
     val root = java.nio.file.Paths.get(PipelineQueries.staging("s23", dir))
     val staged = root.resolve("in")
-    stageOnce("s23in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s23in", dir, Seq(staged.toString)) {
       Tables.documents(spark, dir).filter(length(col("text")) >= 2)
         .select(col("doc_id"), col("text"))
         .repartition(4) // 4 files → 4 micro-batches under maxFilesPerTrigger=1

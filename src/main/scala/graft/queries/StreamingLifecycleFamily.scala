@@ -407,7 +407,7 @@ private[queries] trait StreamingLifecycleFamily { this: StreamingQueries.type =>
   def s37StreamCdcReplica(spark: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Paths.get(PipelineQueries.staging("s37", dir))
     val staged = root.resolve("in")
-    stageOnce("s37in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce("s37in", dir, Seq(staged.toString)) {
       (1 to 3).foreach { v =>
         PipelineQueries.p29ChangesBetween(spark, dir, v - 1, v)
           .coalesce(1).write.mode("overwrite").parquet(s"$staged/v$v")
@@ -503,7 +503,7 @@ private[queries] trait StreamingLifecycleFamily { this: StreamingQueries.type =>
       serve: (String, Seq[String]) => DataFrame): DataFrame = {
     val root = java.nio.file.Paths.get(PipelineQueries.staging(tag, dir))
     val staged = root.resolve("in")
-    stageOnce(s"${tag}in", dir, Seq(staged.toString)) {
+    PipelineQueries.stageOnce(s"${tag}in", dir, Seq(staged.toString)) {
       stageFeed(staged.toString)
     }
     val state = root.resolve("state").toString

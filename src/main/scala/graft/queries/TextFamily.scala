@@ -207,7 +207,7 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
     * rewrite keys a fresh train. */
   private[queries] def stageBpeMerges(spark: SparkSession, dir: String,
       force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("t15bpe", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -219,8 +219,7 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Stress hook: retrain the persisted merge table unconditionally —
-    * isolates tokenizer-training cost from encode cost. */
+  /** Test hook: retrain the persisted merge table unconditionally. */
   def rebuildBpeMergesStage(spark: SparkSession, dir: String): String =
     stageBpeMerges(spark, dir, force = true)
 
@@ -289,8 +288,8 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
     * over the (checkpointed, feature-projected) corpus; the model
     * state at the driver is five longs, exactly t14's
     * metadata-sized-artifact-per-round law; final scoring is one more
-    * scan. Rounds × one-aggregate is the same cost model as p21/d07,
-    * measured in GraphStress. The oracle unrolls the identical five
+    * scan. Rounds × one-aggregate is the same cost model as p21/d07
+    * (PERF.md). The oracle unrolls the identical five
     * rounds as CTE chains, so the WHOLE training trajectory
     * hash-gates — features, every gradient, every floor, the final
     * decision boundary. */
@@ -377,14 +376,14 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
     * the whole point: training cost amortizes to zero per scoring
     * fleet, and the frozen boundary is what makes scores comparable
     * across shards and days. */
-  private[queries] def stageQualityModel(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
+  private[queries] def stageQualityModel(spark: SparkSession,
+      dir: String): String = synchronized {
     import spark.implicits._
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/documents.parquet")
+    val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("t17model", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val ft = qualityFeatures(spark, dir)
         .filter(col("doc_id") % 2 === 0).localCheckpoint()
       val w = gdTrainWeights(ft, ft.count())
@@ -395,10 +394,6 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
     }
     stage
   }
-
-  /** Stress hook: retrain the persisted model unconditionally. */
-  def rebuildQualityModelStage(spark: SparkSession, dir: String): String =
-    stageQualityModel(spark, dir, force = true)
 
   /** t17 — classifier APPLY on UNSEEN data: the staged model (trained
     * on the even corpus half, [[stageQualityModel]]) scores the odd

@@ -311,8 +311,8 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
   /** ADC shortlist FLOOR per query before the exact re-rank. The
     * effective size scales with the corpus — `max(PqL, n/20)`, i.e.
     * at least 5% of corpus rows — because a fixed shortlist's recall
-    * decays as the corpus grows past it (measured in AnnStress:
-    * 0.86 → 0.46 at 10× with a hard L=100). Both engines compute the
+    * decays as the corpus grows past it (measured at 10× corpus,
+    * PERF.md: 0.86 → 0.46 with a hard L=100). Both engines compute the
     * same size: Spark from `count()`, the oracle from a
     * `GREATEST(L, (SELECT COUNT(*) ...) // 20)` scalar subquery. */
   private[queries] lazy val PqL = 100
@@ -379,13 +379,13 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * written LAST as the completeness marker (n = the FULL table count,
     * so search sizes its shortlist without a rescan). Same
     * content-fingerprint keying as [[stagePqIndex]]. */
-  private[queries] def stageA12Index(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+  private[queries] def stageA12Index(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a12pq", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val ix = buildPqIndex(spark, dir, trainCorpusOnly = true)
       ix.corpus.filter(col("vec_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$stage/codes")
@@ -669,7 +669,7 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
   /** Persisted PQ index (a11): the build/search split production ANN
     * actually runs — FAISS trains once and serves forever, while a09
     * re-pays codebook training + corpus encoding on every call
-    * (measured in AnnStress: one-shot PQ 4× SLOWER than brute force
+    * (measured, PERF.md: one-shot PQ 4× SLOWER than brute force
     * because build dominates). The index is three parquet tables, the
     * same persistable-artifact pattern as d13's band index and p10's
     * fingerprint index:
@@ -681,19 +681,17 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * Built once per (source dir, INPUT CONTENT, staging format
     * version): the staging key folds in a (name, size, mtime)
     * fingerprint of the embeddings parquet, so a corpus rewritten in
-    * place under the same path (AnnStress's stress dir) or a bumped
+    * place under the same path or a bumped
     * [[PipelineQueries.StagingFormatVersion]] keys a fresh stage
-    * instead of silently serving a stale index against a fresh oracle.
-    * `force` rebuilds unconditionally (AnnStress uses it to time the
-    * build). */
-  private[queries] def stagePqIndex(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+    * instead of silently serving a stale index against a fresh oracle. */
+  private[queries] def stagePqIndex(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a11pq", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     // meta is written LAST — its presence marks a complete index
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val ix = buildPqIndex(spark, dir)
       ix.corpus.write.mode("overwrite").parquet(s"$stage/codes")
       ix.cbs.zipWithIndex
@@ -716,24 +714,12 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * difference between a query batch costing (corpus × M adds) and
     * costing (corpus × M adds + full corpus re-encode): the index
     * build is one-time, amortized across every later batch, exactly
-    * like d13's band index amortizes dedup. AnnStress measures the
-    * split: build reported separately, amortized search ≪ one-shot
-    * a09 and ≪ a01 at 10× corpus. */
+    * like d13's band index amortizes dedup. Measured (PERF.md):
+    * amortized search ≪ one-shot a09 and ≪ a01 at 10× corpus. The
+    * shortlist is L = max(PqL, n/20), so the oracle hash pins it. */
   def a11PqSearchPrebuilt(spark: SparkSession, dir: String): DataFrame = {
-    val n = spark.read.parquet(s"${stagePqIndex(spark, dir)}/meta")
-      .head.getAs[Long]("n")
-    pqSearchPrebuiltL(spark, dir, math.max(PqL.toLong, n / 20).toInt)
-  }
-
-  /** a11's search with an EXPLICIT shortlist size — the FAISS-style
-    * search-time quality knob on a fixed index: larger L = more exact
-    * re-ranks = higher recall at higher cost, tunable per query batch
-    * WITHOUT touching the stored codes/codebooks (unlike the build
-    * knobs K/M/Lloyd iterations, which change the index itself).
-    * AnnStress sweeps this and pins the recall/latency trade; the
-    * gated a11 fixes L = max(PqL, n/20) so the oracle hash pins it. */
-  def pqSearchPrebuiltL(spark: SparkSession, dir: String, shortlistL: Int): DataFrame = {
     val stage = stagePqIndex(spark, dir)
+    val n = spark.read.parquet(s"$stage/meta").head.getAs[Long]("n")
     val codes = spark.read.parquet(s"$stage/codes")
     val cbAll = spark.read.parquet(s"$stage/codebooks")
     // query side: subcodes for the INCOMING batch only (vec_id < 20 is
@@ -741,13 +727,9 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     // part of the index
     val qside = pqSubcodes(Tables.embeddings(spark, dir).filter(col("vec_id") < 20))
       .withColumnRenamed("vec_id", "query_id")
-    pqAdcTail(spark, dir, codes, pqLutsFrom(qside, cbAll), shortlistL)
+    pqAdcTail(spark, dir, codes, pqLutsFrom(qside, cbAll),
+      math.max(PqL.toLong, n / 20).toInt)
   }
-
-  /** AnnStress hook: rebuild the persisted PQ index unconditionally and
-    * return its path — isolates build cost from search cost. */
-  def rebuildPqIndexStage(spark: SparkSession, dir: String): String =
-    stagePqIndex(spark, dir, force = true)
 
   /** The a10/a13 coarse quantizer — a08's corpus-scaled integer
     * k-means re-derived in lockstep with the shared kmeansCtes oracle
@@ -814,13 +796,13 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * corpus is re-read only for the coarse k-means). Same
     * content-fingerprint keying as [[stagePqIndex]]: an in-place
     * corpus rewrite or a format-version bump keys a fresh stage. */
-  private[queries] def stageIvfIndex(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+  private[queries] def stageIvfIndex(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a13ivf", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val k = scaledK(spark, dir)
       val (c1, cells) = buildCoarseQuantizer(spark, dir, k)
       val codes = spark.read.parquet(s"${stagePqIndex(spark, dir)}/codes")
@@ -874,27 +856,6 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     // ctx-derived (probes, L): one meta read, not two
     ivfSearchWith(ivfServeCtx(spark, dir), spark, dir, queryFilter)
 
-  /** Serving/streaming hook: the persisted IVF-PQ stage path,
-    * build-if-missing — s27 freezes the index BEFORE its query stream
-    * starts (s20's protocol on the vector channel), so no build work
-    * can hide inside a micro-batch. */
-  def ivfIndexStage(spark: SparkSession, dir: String): String =
-    stageIvfIndex(spark, dir)
-
-  /** a13's search with EXPLICIT (probes, shortlist) — the two
-    * search-time quality knobs a fixed IVF-PQ index exposes (FAISS's
-    * nprobe and the refine depth): more probed cells = more of the
-    * corpus scored, larger L = more exact re-ranks — both tunable per
-    * query batch WITHOUT touching any stored artifact. AnnStress
-    * sweeps the (probes, L) frontier; the gated a13 fixes both to the
-    * corpus-scaled defaults so the oracle hash pins them. */
-  def ivfPqSearchPrebuiltTuned(spark: SparkSession, dir: String,
-      probesN: Int, shortlistL: Int, outK: Int = 5,
-      queryFilter: Column = col("vec_id") < 20,
-      ordered: Boolean = true): DataFrame =
-    ivfSearchWith(ivfServeCtx(spark, dir), spark, dir, queryFilter, outK,
-      ordered, probesN = Some(probesN), shortlistL = Some(shortlistL))
-
   /** The FROZEN IVF-PQ serving context: stage paths resolved, meta read,
     * and the two frozen metadata-scale artifacts — coarse centroids
     * (k = ⌈√n⌉ rows) and codebooks (M×K rows) — collected ONCE as
@@ -931,16 +892,13 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
   }
 
   /** a13's search over a resolved [[IvfServeCtx]] — the per-batch body
-    * of the streamed serves; (probes, L) default to the ctx's
-    * corpus-scaled values, overridable for the tuned sweeps. */
+    * of the streamed serves, at the ctx's corpus-scaled (probes, L). */
   private[graft] def ivfSearchWith(ctx: IvfServeCtx, spark: SparkSession,
       dir: String, queryFilter: Column, outK: Int = 5,
-      ordered: Boolean = true, probesN: Option[Int] = None,
-      shortlistL: Option[Int] = None): DataFrame = {
+      ordered: Boolean = true): DataFrame = {
     val codesCells = ctx.codesCells
     val cbAll = ctx.cbAll
-    val probes = ivfProbes(spark, dir, ctx.coarse,
-      probesN.getOrElse(ctx.probesN), queryFilter)
+    val probes = ivfProbes(spark, dir, ctx.coarse, ctx.probesN, queryFilter)
     val qside = pqSubcodes(Tables.embeddings(spark, dir).filter(queryFilter))
       .withColumnRenamed("vec_id", "query_id")
     // candidate set: only (code row, query) pairs whose cell the query
@@ -948,13 +906,8 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     // no corpus-side join exists at search time at all
     val candidates = codesCells.join(broadcast(probes), Seq("cell"))
     pqAdcTail(spark, dir, candidates, pqLutsFrom(qside, cbAll),
-      shortlistL.getOrElse(ctx.shortlistL), outK, ordered)
+      ctx.shortlistL, outK, ordered)
   }
-
-  /** AnnStress hook: rebuild the persisted coarse-quantizer stage
-    * unconditionally — isolates IVF build cost from search cost. */
-  def rebuildIvfIndexStage(spark: SparkSession, dir: String): String =
-    stageIvfIndex(spark, dir, force = true)
 
   /** a14's metadata predicate: corpus labels below this survive. A
     * plain comparison (not an expression) so the predicate reaches the
@@ -979,21 +932,12 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * this shape avoids is the join-then-filter plan that scores the
     * whole corpus first. Queries are unfiltered; only corpus rows are
     * constrained, mirroring "search the licensed subset" semantics. */
-  def a14FilteredAnnPrebuilt(spark: SparkSession, dir: String): DataFrame =
-    a14FilteredAnnTuned(spark, dir, FilteredAnnLabelMax)
-
-  /** a14's search with an EXPLICIT label ceiling — the predicate is a
-    * search-time knob on the fixed stored index (like a13's (probes,
-    * L)): AnnStress sweeps selectivity 50%→10% against a post-filtered
-    * a13 baseline to measure where post-filtering under-fills. The
-    * gated a14 pins labelMax = [[FilteredAnnLabelMax]]. */
-  def a14FilteredAnnTuned(spark: SparkSession, dir: String,
-      labelMax: Int): DataFrame = {
+  def a14FilteredAnnPrebuilt(spark: SparkSession, dir: String): DataFrame = {
     val pqStage = stagePqIndex(spark, dir)
     val ivfStage = stageIvfIndex(spark, dir)
     val meta = spark.read.parquet(s"$ivfStage/meta").head
     val codesCells = spark.read.parquet(s"$ivfStage/codes_cells")
-      .filter(col("label") < labelMax)
+      .filter(col("label") < FilteredAnnLabelMax)
       .drop("label")
     val cbAll = spark.read.parquet(s"$pqStage/codebooks")
     val coarse = spark.read.parquet(s"$ivfStage/coarse")
@@ -1013,13 +957,13 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * written last as the completeness marker; file counts before/after
     * recorded in meta so the spec can pin the compaction actually
     * shrank the file population. */
-  private[queries] def stageA15Compacted(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+  private[queries] def stageA15Compacted(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a15pq", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val a12 = stageA12Index(spark, dir)
       val cbAll = spark.read.parquet(s"$a12/codebooks")
       pqEncodeAgainst(
@@ -1081,13 +1025,13 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * compaction would produce (a15's compacted codes minus tombstoned
     * rows, re-range-partitioned). Meta written last; live/deleted
     * counts recorded so the spec can pin coverage. */
-  private[queries] def stageA16Deletes(spark: SparkSession, dir: String,
-      force: Boolean = false): String = synchronized {
-    val fp = PipelineQueries.contentFingerprint(spark, s"$dir/embeddings.parquet")
+  private[queries] def stageA16Deletes(spark: SparkSession,
+      dir: String): String = synchronized {
+    val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a16del", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val a15 = stageA15Compacted(spark, dir)
       Tables.embeddings(spark, dir)
         .filter(pmod(col("vec_id"), lit(7)) === 3).select(col("vec_id"))

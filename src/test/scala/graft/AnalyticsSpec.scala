@@ -9,7 +9,7 @@ import graft.operators.{Dedup, Multimodal}
 /** Semantics tests for the extended analytics surface (SURVEY §7.6). */
 class AnalyticsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
 
   test("polyHash: deterministic fold matching the reference formula") {
     import spark.implicits._

@@ -11,7 +11,7 @@ import graft.sinks.CsvSink
   * quote-all CSV under a Hive path → read back and compare exactly. */
 class FlattenPipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
 
   private val ns = "xmlns:NS1=\"http://uptake.com/bhp/1/sensors\""
 

@@ -140,7 +140,7 @@ class FlattenerSpec extends AnyFunSuite {
     val broken = s"""<NS1:message $sigNs><NS1:messagePayload><unclosed</NS1:message>"""
     assertThrows[Exception](SignalFlattener.flatten(broken))
     // and through the Spark-safe path it becomes an error row, not a crash
-    val spark = GraftSession.local(cores = 2, shufflePartitions = 2)
+    val spark = GraftSession.local(cores = 2)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val out = graft.operators.FlattenOps

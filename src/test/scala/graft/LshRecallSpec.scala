@@ -23,7 +23,7 @@ import graft.operators.Dedup
   */
 class LshRecallSpec extends AnyFunSuite {
 
-  lazy val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark = GraftSession.local(cores = 4)
 
   /** Deterministic random corpus: nBase 40-word docs over a 1000-word
     * vocabulary, each with one mutant copy at depth ∈ {0,1,2,3} word

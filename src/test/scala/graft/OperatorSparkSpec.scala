@@ -10,7 +10,7 @@ import graft.sources.{GreedyBatcher, TarCodec}
   * tar codec, greedy batcher. One shared local session. */
 class OperatorSparkSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
 
   test("tokenizer: N docs, whitespace fragments dropped, tags re-appended (U1/P1)") {
     import spark.implicits._

@@ -12,7 +12,7 @@ import graft.queries.{PipelineQueries, Relational}
   * cluster scale even while results stay correct. */
 class PlanAuditSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =

@@ -7,7 +7,7 @@ object PlanPrint {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: PlanPrint <query> [sfDir]"))
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+    val spark = GraftSession.local(cores = 4)
     val df = SparkEntry.queries(name)(spark, dir)
     println(s"=== $name executed plan ===")
     println(df.queryExecution.executedPlan.toString)

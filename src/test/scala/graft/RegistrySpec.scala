@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.{AdvancedQueries, AnalyticsQueries, PipelineQueries,
   Relational, StreamingQueries, XmlQueries}
@@ -45,5 +47,26 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.queries.size == 233,
       s"registered surface is ${SparkEntry.queries.size} — if you added a " +
         "query, bump this and the counts in README/COVERAGE/PERF")
+  }
+
+  test("the library ships four entry mains, all built through GraftSession") {
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toSeq
+    assert(sources.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val builders = sources.collect {
+      case (p, src) if src.contains("SparkSession.builder()") => p
+    }
+    assert(builders == Seq("graft/GraftSession.scala"),
+      s"SparkSession.builder() outside GraftSession: $builders")
+    val objectDecl = """\bobject\s+(\w+)""".r
+    val mains = sources.flatMap { case (_, src) =>
+      """def main\(""".r.findAllMatchIn(src).map { m =>
+        objectDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+      }
+    }
+    assert(mains.sorted == Seq("Bench", "ProfileOne", "RunOne", "Verify"),
+      s"def main objects: ${mains.sorted}")
   }
 }

@@ -9,7 +9,7 @@ import graft.operators.Skew
   * on pathologically skewed keys (one key holding 90% of rows). */
 class SkewSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
 
   test("salted join == plain join on skewed data") {
     import spark.implicits._

@@ -32,7 +32,7 @@ object StackDecomposabilityProperties extends Properties("ServedStack") {
       : org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(5).withWorkers(1)
 
-  private lazy val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+  private lazy val spark = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   /** Batch-size shapes exercised (sorted sizes per partition), fed by

@@ -12,7 +12,7 @@ import graft.streaming._
   * and the ForeachWriter against an in-proc stub via MemoryStream. */
 class StreamingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
 
   test("replay pacing: first batch immediate, gaps scaled, out-of-order clamped (T1)") {
     import spark.implicits._

@@ -13,7 +13,7 @@ import graft.sources.TarCodec
   * A2 accumulators). */
 class UnpackPipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
 
   test("tar files → binaryFile → extract → envelope → NDJSON → read-back") {
     import spark.implicits._

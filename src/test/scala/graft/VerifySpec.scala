@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the failures manifest while every other key still dumps. */
 class VerifySpec extends AnyFunSuite {
 
-  private lazy val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+  private lazy val spark = GraftSession.local(cores = 4)
 
   test("a throwing key lands in failures.txt; the other keys and oracle_sql.json still dump") {
     val out = Files.createTempDirectory("verifyspec")

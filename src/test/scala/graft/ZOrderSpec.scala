@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * its scan-pruning job. */
 class ZOrderSpec extends AnyFunSuite {
 
-  lazy val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark = GraftSession.local(cores = 4)
 
   private lazy val read = {
     val a = new LongAdder

@@ -162,7 +162,9 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a graft session resolves file:// to the fork-free classes for FileSystem, FileContext and checkpoints") {
-    val spark: SparkSession = GraftSession.local(cores = 2, shufflePartitions = 2)
+    val spark: SparkSession = GraftSession.local(cores = 2)
+    GraftSession.baseConf.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "2")
     val hconf = spark.sessionState.newHadoopConf()
     // newInstance, not the JVM-wide FileSystem.get cache, which a session
     // built without GraftSession may have filled first

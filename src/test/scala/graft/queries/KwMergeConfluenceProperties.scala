@@ -36,7 +36,7 @@ object KwMergeConfluenceProperties extends Properties("KwMergeConfluence") {
       : org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(4).withWorkers(1)
 
-  private lazy val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+  private lazy val spark = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   /** Four leaf segments (doc_id ≡ r mod 4) — an exact disjoint cover

@@ -29,7 +29,7 @@ object LayoutMergeConfluenceProperties extends Properties("LayoutMergeConfluence
       : org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(3).withWorkers(1)
 
-  private lazy val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+  private lazy val spark = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   private val scheduleGen: Gen[List[List[Int]]] = {

@@ -16,7 +16,7 @@ import graft.GraftSession
   * (compensating errors) still fails here. */
 class LifecycleCycleSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =

@@ -28,7 +28,7 @@ import graft.operators.OccCommitLog
 class OccProtocolSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession =
-    GraftSession.local(cores = 4, shufflePartitions = 4)
+    GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   private def fs(p: String) =

@@ -23,7 +23,7 @@ import graft.{GraftSession, SparkEntry}
   * counts, not `heldCount <= 1`. */
 class PinsAtRestSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   test("pinned serving generations do not grow across full a-family passes") {

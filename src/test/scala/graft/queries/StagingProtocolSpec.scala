@@ -27,7 +27,7 @@ import graft.GraftSession
   */
 class StagingProtocolSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   test("meta marker short-circuits when present; its absence forces a rebuild") {

@@ -15,7 +15,7 @@ import graft.GraftSession
   * merge-on-read id lists. */
 class TableLogSpec extends AnyFunSuite {
 
-  private lazy val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+  private lazy val spark = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   private def fs(p: String) =

@@ -13,7 +13,7 @@ import graft.operators.OccCommitLog
   * the log's metadata history surviving, idempotence. */
 class TimeTravelSpec extends AnyFunSuite {
 
-  private lazy val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+  private lazy val spark = GraftSession.local(cores = 4)
   private val dir = "/root/testdata/sf0.001"
 
   private def fs(p: String) =
