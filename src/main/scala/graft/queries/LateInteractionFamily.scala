@@ -164,8 +164,8 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * docs, so fetch cost tracks the CANDIDATE count, not the corpus.
     * `meta` is the completeness marker; keyed by a content fingerprint
     * of documents.parquet. */
-  private[queries] def stageTokenHashIndex(spark: SparkSession, dir: String): String =
-    stageTokenTable(spark, dir, "a28th", lit(true), partitions = 4, force = false)
+  def tokenHashStage(spark: SparkSession, dir: String): String =
+    stageTokenTable(spark, dir, "a28th", lit(true), partitions = 4)
 
   /** ONE staging protocol for every persisted token-hash layout (a28
     * full table, a30 even-half base, a32 odd-half segment): tokenize
@@ -178,12 +178,12 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * semantics or the sort layout lands in all three layouts at
     * once. */
   private[queries] def stageTokenTable(spark: SparkSession, dir: String, tag: String,
-      docFilter: Column, partitions: Int, force: Boolean): String = synchronized {
+      docFilter: Column, partitions: Int): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging(tag, s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       Tables.documents(spark, dir).filter(docFilter)
         .select(col("doc_id"), tokHashes(col("text")).as("th"))
         .repartitionByRange(partitions, col("doc_id"))
@@ -194,11 +194,6 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     }
     stage
   }
-
-  /** Test hook: the persisted a28 token-hash index path,
-    * build-if-missing. */
-  def tokenHashStage(spark: SparkSession, dir: String): String =
-    stageTokenHashIndex(spark, dir)
 
   /** a28 — late-interaction search served from the PERSISTED
     * token-hash table: a27's semantics with ZERO text touched at
@@ -212,7 +207,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * served). Scale: query cost is index bytes + the kernel; corpus
     * text is read once, at ingest. */
   def a28MaxSimPrebuilt(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageTokenHashIndex(spark, dir)
+    val stage = tokenHashStage(spark, dir)
     val t = spark.read.parquet(s"$stage/tokens")
     maxSimTail(
       t.select(col("doc_id"), col("th").as("dh")),
@@ -266,7 +261,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * included.) */
   def a29MaxSimServed(spark: SparkSession, dir: String): DataFrame =
     maxSimRerankServed(spark, dir,
-      spark.read.parquet(s"${stageTokenHashIndex(spark, dir)}/tokens"))
+      spark.read.parquet(s"${tokenHashStage(spark, dir)}/tokens"))
 
   /** The shared served-re-rank composition over ANY stored token-hash
     * frame `t` (doc_id, th): a19 shortlist at depth
@@ -284,7 +279,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * (every served (query_id, doc_id) must be a member). */
   private[graft] def maxSimCandidateShortlist(spark: SparkSession,
       dir: String): DataFrame = {
-    val kwStage = stageKeywordIndex(spark, dir)
+    val kwStage = keywordIndexStage(spark, dir)
     kwPrunedSearch(spark, dir,
       spark.read.parquet(s"$kwStage/terms")
         .select(col("term"), col("term_id"), col("df")),
@@ -348,7 +343,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * unchanged. */
   private[graft] def maxSimRerankServedBatch(spark: SparkSession, dir: String,
       qdocs: DataFrame): DataFrame = {
-    val kwStage = stageKeywordIndex(spark, dir)
+    val kwStage = keywordIndexStage(spark, dir)
     val qt = qdocs.select(col("doc_id").as("query_id"),
       explode(TF.words(col("text"))).as("term")).distinct()
     ServingPins.openGeneration(s"s28:$dir")
@@ -361,7 +356,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
         .select(col("query_id"), col("doc_id")))
     val ids = qdocs.select(col("doc_id")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    val t = spark.read.parquet(s"${stageTokenHashIndex(spark, dir)}/tokens")
+    val t = spark.read.parquet(s"${tokenHashStage(spark, dir)}/tokens")
     maxSimRerankTail(t, shortlist,
       t.filter(col("doc_id").isin(ids: _*))
         .select(col("doc_id").as("query_id"), col("th").as("qh")),
@@ -412,7 +407,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
   private[graft] def servingStackPrepared(spark: SparkSession, dir: String)
       : (DataFrame, Boolean) => Seq[(String, () => DataFrame)] = {
     import graft.expressions.TopKByScore
-    val kwSt = stageKeywordIndex(spark, dir)
+    val kwSt = keywordIndexStage(spark, dir)
     val kwTerms = spark.read.parquet(s"$kwSt/terms")
       .select(col("term"), col("term_id"), col("df"))
     val kwPostings = spark.read.parquet(s"$kwSt/postings")
@@ -421,7 +416,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     // as driver-local relations so per-batch broadcast builds over them
     // are job-free and their scans leave the per-batch plans
     val ivfCtx = ivfServeCtx(spark, dir)
-    val tokens = spark.read.parquet(s"${stageTokenHashIndex(spark, dir)}/tokens")
+    val tokens = spark.read.parquet(s"${tokenHashStage(spark, dir)}/tokens")
     (qdocs: DataFrame, finalOrdered: Boolean) => {
     // every hop is pinned as a driver-local relation (ServingPins r17):
     // intermediates are query-batch-scale (≤ queries×50 rows), so the
@@ -502,13 +497,9 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * approximation (no idf drift, no segment-local dictionary): base ∪
     * increment is EXACTLY the full-corpus index, which is why a30
     * hash-gates against a27's inline oracle. */
-  private[queries] def stageA30TokenBase(spark: SparkSession, dir: String): String =
-    stageTokenTable(spark, dir, "a30th", col("doc_id") % 2 === 0,
-      partitions = 4, force = false)
-
-  /** Test hook: the a30 frozen token-hash base staging path. */
   def a30TokenBaseStage(spark: SparkSession, dir: String): String =
-    stageA30TokenBase(spark, dir)
+    stageTokenTable(spark, dir, "a30th", col("doc_id") % 2 === 0,
+      partitions = 4)
 
   /** a30 — APPEND-ONLY token-hash index update + search: the index
     * lifecycle the late-interaction channel was missing (every other
@@ -526,7 +517,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * appended index is a29's step 2 verbatim (IN-list over base and
     * increment alike). */
   def a30TokenIndexUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA30TokenBase(spark, dir)
+    val stage = a30TokenBaseStage(spark, dir)
     val inc = Tables.documents(spark, dir).filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), tokHashes(col("text")).as("th"))
     val t = spark.read.parquet(s"$stage/tokens").unionByName(inc)
@@ -545,7 +536,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * fingerprint of documents.parquet. */
   private[queries] def stageA32IncrementSegment(spark: SparkSession, dir: String): String =
     stageTokenTable(spark, dir, "a32seg", col("doc_id") % 2 === 1,
-      partitions = 2, force = false)
+      partitions = 2)
 
   /** a32 — the shortlist re-rank SERVED FROM THE APPENDED token
     * index: a29's exact composition reading base ∪ increment segment
@@ -561,7 +552,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * or generational layout must be output-indistinguishable. */
   def a32RerankAppended(spark: SparkSession, dir: String): DataFrame =
     maxSimRerankServed(spark, dir,
-      spark.read.parquet(s"${stageA30TokenBase(spark, dir)}/tokens")
+      spark.read.parquet(s"${a30TokenBaseStage(spark, dir)}/tokens")
         .unionByName(
           spark.read.parquet(s"${stageA32IncrementSegment(spark, dir)}/tokens")))
 
@@ -579,14 +570,13 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * files, larger row groups, and one scan instead of a union.
     * File counts before/after recorded in meta (written LAST — the
     * completeness-marker protocol, StagingProtocolSpec). */
-  private[queries] def stageA33Compacted(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a33CompactedStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a33th", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val basePath = s"${stageA30TokenBase(spark, dir)}/tokens"
+      val basePath = s"${a30TokenBaseStage(spark, dir)}/tokens"
       val segPath = s"${stageA32IncrementSegment(spark, dir)}/tokens"
       def dataFiles(p: String): Long = {
         val it = fs.listFiles(new org.apache.hadoop.fs.Path(p), true)
@@ -607,10 +597,6 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a33 compacted token-table staging path. */
-  def a33CompactedStage(spark: SparkSession, dir: String): String =
-    stageA33Compacted(spark, dir)
-
   /** a33 — the shortlist re-rank served from the COMPACTED token
     * index: the lifecycle step after append-only generations (a32),
     * completing the token channel's a15 treatment. The base ∪ segment
@@ -623,7 +609,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * one answer; compaction is a pure layout change. */
   def a33CompactedRerank(spark: SparkSession, dir: String): DataFrame =
     maxSimRerankServed(spark, dir,
-      spark.read.parquet(s"${stageA33Compacted(spark, dir)}/tokens"))
+      spark.read.parquet(s"${a33CompactedStage(spark, dir)}/tokens"))
 
   /** The a34 delete stage for the token channel: a16's tombstone
     * treatment on the generational token-hash layout. A retracted-doc
@@ -633,8 +619,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * delete-applying compaction produces (compacted tokens minus
     * tombstoned rows, re-range-partitioned). Meta written last;
     * live/deleted counts recorded so the spec can pin coverage. */
-  private[queries] def stageA34Tombstones(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a34DeleteStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a34del", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
@@ -644,7 +629,7 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
         .filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/tombstones")
       val tombs = spark.read.parquet(s"$stage/tombstones")
-      spark.read.parquet(s"${stageA33Compacted(spark, dir)}/tokens")
+      spark.read.parquet(s"${a33CompactedStage(spark, dir)}/tokens")
         .join(tombs, Seq("doc_id"), "left_anti")
         .repartitionByRange(4, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
@@ -656,16 +641,12 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a34 delete-stage path (tombstones + purged table). */
-  def a34DeleteStage(spark: SparkSession, dir: String): String =
-    stageA34Tombstones(spark, dir)
-
   /** Test hook: the a34 re-rank over the PURGED token table (the
     * post-compaction hard-delete form — no anti-join in the plan).
     * The spec pins it row-identical to [[a34TombstoneRerank]]. */
   def a34PurgedRerank(spark: SparkSession, dir: String): DataFrame =
     maxSimRerankServed(spark, dir,
-      spark.read.parquet(s"${stageA34Tombstones(spark, dir)}/purged"))
+      spark.read.parquet(s"${a34DeleteStage(spark, dir)}/purged"))
 
   /** a34 — tombstone DELETES on the generational token index,
     * completing the channel's lifecycle (build a28 → append a30/a32 →
@@ -689,8 +670,8 @@ private[queries] trait LateInteractionFamily { this: AnalyticsQueries.type =>
     * physical purge the next compaction applies, pinned
     * row-identical. */
   def a34TombstoneRerank(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA34Tombstones(spark, dir)
-    val t = spark.read.parquet(s"${stageA30TokenBase(spark, dir)}/tokens")
+    val stage = a34DeleteStage(spark, dir)
+    val t = spark.read.parquet(s"${a30TokenBaseStage(spark, dir)}/tokens")
       .unionByName(spark.read.parquet(s"${stageA32IncrementSegment(spark, dir)}/tokens"))
       .join(broadcast(spark.read.parquet(s"$stage/tombstones")),
         Seq("doc_id"), "left_anti")

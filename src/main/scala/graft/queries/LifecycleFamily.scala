@@ -62,9 +62,9 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val base = stageA20CorpusKwIndex(spark, dir)
+      val base = a20CorpusKwIndexStage(spark, dir)
       val seg1 = stageKwIndexTable(spark, dir, "a37s1",
-        col("doc_id") % 4 === 1, force = false)
+        col("doc_id") % 4 === 1)
       def nOf(st: String): Long =
         spark.read.parquet(s"$st/meta").head.getAs[Long]("n")
       // merge 1: re-stat over gen0 ∪ segment 1 (no deletes yet) —
@@ -78,7 +78,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/tombstones")
       val nTomb = spark.read.parquet(s"$stage/tombstones").count()
       val seg2 = stageKwIndexTable(spark, dir, "a37s2",
-        col("doc_id") % 4 === 3, force = false)
+        col("doc_id") % 4 === 3)
       // merge 2, delete-applying: tf recovered from the COMPACTED
       // merge-1 layout ∪ segment 2, tombstoned docs dropped before
       // the stat pass, df/idf re-derived over the SURVIVOR count
@@ -122,7 +122,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * against (terms, postings AND served search). */
   def a37FreshSurvivorKwStage(spark: SparkSession, dir: String): String =
     stageKwIndexTable(spark, dir, "a37fresh",
-      pmod(col("doc_id"), lit(7)) =!= 3, force = false)
+      pmod(col("doc_id"), lit(7)) =!= 3)
 
   /** a37 — keyword search served after the FULL lifecycle cycle:
     * build → append seg1 → compact/re-stat → deletes → append seg2 →
@@ -146,16 +146,15 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * run). Merge 2's input is merge 1's output ∪ segment 2, tombstoned
     * rows dropped during the merge — the delete-applying compaction
     * a34's purged table previews, here produced by the actual loop. */
-  private[queries] def stageA38TokenCycle(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a38TokenCycleStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a38th", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val base = stageA30TokenBase(spark, dir)
+      val base = a30TokenBaseStage(spark, dir)
       val seg1 = stageTokenTable(spark, dir, "a38s1",
-        col("doc_id") % 4 === 1, partitions = 2, force = false)
+        col("doc_id") % 4 === 1, partitions = 2)
       spark.read.parquet(s"$base/tokens")
         .unionByName(spark.read.parquet(s"$seg1/tokens"))
         .repartitionByRange(4, col("doc_id"))
@@ -165,7 +164,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
         .filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/tombstones")
       val seg2 = stageTokenTable(spark, dir, "a38s2",
-        col("doc_id") % 4 === 3, partitions = 2, force = false)
+        col("doc_id") % 4 === 3, partitions = 2)
       spark.read.parquet(s"$stage/gen1")
         .unionByName(spark.read.parquet(s"$seg2/tokens"))
         .join(broadcast(spark.read.parquet(s"$stage/tombstones")),
@@ -181,10 +180,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a38 twice-merged token staging path. */
-  def a38TokenCycleStage(spark: SparkSession, dir: String): String =
-    stageA38TokenCycle(spark, dir)
-
   /** a38 — the late-interaction re-rank served after the full token
     * cycle (two generations appended, deletes interleaved, both
     * compacted away): a29's serving composition reads ONE
@@ -194,7 +189,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * semantics), so a34's ORACLE gates the cycle unchanged. */
   def a38TokenLifecycle(spark: SparkSession, dir: String): DataFrame =
     maxSimRerankServed(spark, dir,
-      spark.read.parquet(s"${stageA38TokenCycle(spark, dir)}/tokens"))
+      spark.read.parquet(s"${a38TokenCycleStage(spark, dir)}/tokens"))
 
   /** A segment's code rows encoded against the FROZEN a12 codebooks
     * (FAISS add), fingerprint-keyed build-if-missing: encoding is the
@@ -208,7 +203,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val a12 = stageA12Index(spark, dir)
+      val a12 = a12CorpusIndexStage(spark, dir)
       val cbAll = spark.read.parquet(s"$a12/codebooks")
       pqEncodeAgainst(pqSubcodes(Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 4 === residue)), cbAll)
@@ -228,14 +223,13 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * produced here by the actual loop). Segment encodes live in their
     * own stages ([[stageA39Delta]] — ingest cost, paid at arrival),
     * so the cycle's own work is two merges + the tombstone landing. */
-  private[queries] def stageA39VecCycle(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a39VecCycleStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a39pq", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val a12 = stageA12Index(spark, dir)
+      val a12 = a12CorpusIndexStage(spark, dir)
       val emb = Tables.embeddings(spark, dir)
       // segment 1 arrives pre-encoded (its own ingest stage), then
       // merge 1: gen0 codes ∪ segment-1 codes, one sorted layout
@@ -265,10 +259,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a39 twice-merged code staging path. */
-  def a39VecCycleStage(spark: SparkSession, dir: String): String =
-    stageA39VecCycle(spark, dir)
-
   /** a39 — PQ search served after the full vector cycle: the ADC +
     * exact-re-rank algebra over the twice-merged, purged code table
     * with the FROZEN a12 codebooks. Hash-gated with a16's ORACLE —
@@ -277,8 +267,8 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * a16's one-shot purge, spec-pinned row for row). Queries are
     * external embeddings, so a tombstoned vector still asks. */
   def a39VectorLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA39VecCycle(spark, dir)
-    val a12 = stageA12Index(spark, dir)
+    val stage = a39VecCycleStage(spark, dir)
+    val a12 = a12CorpusIndexStage(spark, dir)
     val cbAll = spark.read.parquet(s"$a12/codebooks")
     val n = spark.read.parquet(s"$stage/meta").head.getAs[Long]("n_corpus")
     val qside = pqSubcodes(Tables.embeddings(spark, dir).filter(col("vec_id") < 20))
@@ -291,8 +281,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * per-media functions, so both merges are linear rewrites of
     * 24-byte hash rows — ZERO decode anywhere in the loop (each
     * segment paid its own decode once, at its own ingest). */
-  private[queries] def stageM13ImageCycle(spark: SparkSession,
-      dir: String): String = synchronized {
+  def m13ImageCycleStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("m13ih", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
@@ -328,10 +317,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the m13 twice-merged hash staging path. */
-  def m13ImageCycleStage(spark: SparkSession, dir: String): String =
-    stageM13ImageCycle(spark, dir)
-
   /** m13 — image near-dedup served after the full media cycle: the
     * exact-cluster → banded-Hamming tail over the twice-merged,
     * purged hash table. Deletion preceded the cluster aggregate (it
@@ -341,7 +326,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * the cycle unchanged. */
   def m13ImageLifecycle(spark: SparkSession, dir: String): DataFrame =
     nearDupFromHashes(
-      spark.read.parquet(s"${stageM13ImageCycle(spark, dir)}/hashes"))
+      spark.read.parquet(s"${m13ImageCycleStage(spark, dir)}/hashes"))
 
   /** The a40 COMMIT LOG stage: the keyword channel's lifecycle epochs
     * recorded as a versioned metadata log (p23's lakehouse commit-log
@@ -356,8 +341,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * vacuum because generational merging already keeps every epoch's
     * layout on disk — the log just names them. Marker written LAST;
     * a build without it starts from an empty stage. */
-  private[queries] def stageA40CommitLog(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a40CommitLogStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a40log", s"$dir#$fp")
     val stagePath = new org.apache.hadoop.fs.Path(stage)
@@ -367,7 +351,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     // not outlive the stages it points at (both build-if-missing —
     // warm cost is two marker stats)
     val cyc = stageA37KwCycle(spark, dir)
-    val base = stageA20CorpusKwIndex(spark, dir)
+    val base = a20CorpusKwIndexStage(spark, dir)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
       fs.delete(stagePath, true)
       Seq(("layout", base), ("layout", s"$cyc/gen1"), ("tombstones",
@@ -378,10 +362,6 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     }
     stage
   }
-
-  /** Test hook: the a40 commit-log staging path. */
-  def a40CommitLogStage(spark: SparkSession, dir: String): String =
-    stageA40CommitLog(spark, dir)
 
   /** The AS-OF snapshot serve over a keyword-index commit log: resolve
     * the newest layout commit with version ≤ v, apply any tombstone
@@ -417,7 +397,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
 
   /** Test hook (TimeTravelSpec): one epoch's serve off the a40 log. */
   def a40ServeAsOf(spark: SparkSession, dir: String, v: Int): DataFrame =
-    kwServeAsOfLog(spark, dir, stageA40CommitLog(spark, dir), v)
+    kwServeAsOfLog(spark, dir, a40CommitLogStage(spark, dir), v)
 
   /** a40 — INDEX TIME TRAVEL: the a19 probe served AS OF every epoch
     * of the keyword index's lifecycle, off the commit log. Epoch 0 is
@@ -438,7 +418,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     * exact, replayable answer as long as vacuum hasn't reclaimed the
     * epoch (p28 prices that reclaim). */
   def a40IndexTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA40CommitLog(spark, dir)
+    val stage = a40CommitLogStage(spark, dir)
     (0 to 3).map { v =>
       kwServeAsOfLog(spark, dir, stage, v).withColumn("version", lit(v))
     }.reduce(_ unionByName _)
@@ -464,8 +444,8 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     val stage = PipelineQueries.staging("a41log", s"$dir#$fp")
     val stagePath = new org.apache.hadoop.fs.Path(stage)
     val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val cyc = stageA39VecCycle(spark, dir)
-    val a12 = stageA12Index(spark, dir)
+    val cyc = a39VecCycleStage(spark, dir)
+    val a12 = a12CorpusIndexStage(spark, dir)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
       fs.delete(stagePath, true)
       Seq(("layout", s"$a12/codes"), ("layout", s"$cyc/gen1"), ("tombstones",
@@ -500,7 +480,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     val codes = tombs.foldLeft(spark.read.parquet(layout)) { (c, t) =>
       c.join(broadcast(spark.read.parquet(t)), Seq("vec_id"), "left_anti")
     }
-    val a12 = stageA12Index(spark, dir)
+    val a12 = a12CorpusIndexStage(spark, dir)
     val cbAll = spark.read.parquet(s"$a12/codebooks")
     val n = spark.read.parquet(s"$a12/meta").head.getAs[Long]("n")
     val qside = pqSubcodes(Tables.embeddings(spark, dir).filter(col("vec_id") < 20))
@@ -560,7 +540,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
       fs.delete(stagePath, true)
       val cyc = stageA37KwCycle(spark, dir)
-      val base = stageA20CorpusKwIndex(spark, dir)
+      val base = a20CorpusKwIndexStage(spark, dir)
       def own(src: String, dst: String): String =
         PipelineQueries.copyDir(spark, src, s"$stage/$dst")
       // every commit-log path comes from own()'s RETURN, so the log can
@@ -630,8 +610,8 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
     val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
     if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/done"))) {
       fs.delete(stagePath, true)
-      val cyc = stageA39VecCycle(spark, dir)
-      val a12 = stageA12Index(spark, dir)
+      val cyc = a39VecCycleStage(spark, dir)
+      val a12 = a12CorpusIndexStage(spark, dir)
       val v0 = PipelineQueries.copyDir(spark, s"$a12/codes", s"$stage/v0")
       val v1 = PipelineQueries.copyDir(spark, s"$cyc/gen1", s"$stage/v1")
       val t2 = PipelineQueries.copyDir(spark, s"$cyc/tombstones", s"$stage/tomb2")
@@ -702,7 +682,7 @@ private[queries] trait LifecycleFamily { this: AnalyticsQueries.type =>
 
   def a40IndexChangesBetween(spark: SparkSession, dir: String,
       from: Int, to: Int): DataFrame =
-    indexChangesFromLog(spark, stageA40CommitLog(spark, dir), from, to)
+    indexChangesFromLog(spark, a40CommitLogStage(spark, dir), from, to)
 
   /** The same feed off the VECTOR log — the mapping is one shared
     * function of the (version, kind, path) triples, so the feed is

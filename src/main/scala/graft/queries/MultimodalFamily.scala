@@ -263,8 +263,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * Keyed by a content fingerprint of documents.parquet (the media
     * fixture is a pure function of the doc ids), so an in-place-
     * regenerated corpus invalidates the stage. */
-  private[queries] def stageImageHashIndex(spark: SparkSession,
-      dir: String): String = synchronized {
+  def imageHashStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("m09ih", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
@@ -281,11 +280,6 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Serving/test hook: the persisted m09 hash-index path,
-    * build-if-missing (read by m09 and the streamed s24 gate). */
-  def imageHashStage(spark: SparkSession, dir: String): String =
-    stageImageHashIndex(spark, dir)
-
   /** m09 — image NEAR-dedup served from the PERSISTED perceptual-hash
     * index: m07's semantics with ZERO decode in the search plan
     * (PlanAuditSpec pins no mapPartitions/object boundary — the plan
@@ -297,7 +291,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * touched after ingest, which is the whole economics of a
     * dedup-at-ingest media pipeline. */
   def m09ImageNearDupPrebuilt(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageImageHashIndex(spark, dir)
+    val stage = imageHashStage(spark, dir)
     nearDupFromHashes(spark.read.parquet(s"$stage/hashes"))
   }
 
@@ -368,8 +362,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * corpus at 100 TB), and buys every subsequent near-dup serve
     * fewer files and one scan instead of a union. File counts
     * before/after in meta (written LAST — StagingProtocolSpec). */
-  private[queries] def stageM11Compacted(spark: SparkSession,
-      dir: String): String = synchronized {
+  def m11CompactedStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("m11ih", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
@@ -403,10 +396,6 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the m11 compacted image-hash staging path. */
-  def m11CompactedStage(spark: SparkSession, dir: String): String =
-    stageM11Compacted(spark, dir)
-
   /** m11 — image near-dedup served from the COMPACTED hash index:
     * the lifecycle step after generational appends (m10), completing
     * the image channel's a15 treatment. The base ∪ segment union is
@@ -417,7 +406,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * one answer; compaction is a pure layout change. */
   def m11CompactedNearDup(spark: SparkSession, dir: String): DataFrame =
     nearDupFromHashes(
-      spark.read.parquet(s"${stageM11Compacted(spark, dir)}/hashes"))
+      spark.read.parquet(s"${m11CompactedStage(spark, dir)}/hashes"))
 
   /** The m12 delete stage for the image channel: a16's tombstone
     * treatment on the generational image-hash layout. Retracted media
@@ -425,8 +414,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * base, odd in the segment) persisted beside the index, plus the
     * PURGED hash table the next delete-applying compaction produces.
     * Meta written last; live/deleted counts recorded. */
-  private[queries] def stageM12Tombstones(spark: SparkSession,
-      dir: String): String = synchronized {
+  def m12DeleteStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("m12del", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
@@ -437,7 +425,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
         .select(col("doc_id").as("media_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/tombstones")
       val tombs = spark.read.parquet(s"$stage/tombstones")
-      spark.read.parquet(s"${stageM11Compacted(spark, dir)}/hashes")
+      spark.read.parquet(s"${m11CompactedStage(spark, dir)}/hashes")
         .join(tombs, Seq("media_id"), "left_anti")
         .repartitionByRange(2, col("media_id"))
         .sortWithinPartitions(col("media_id"))
@@ -449,16 +437,12 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the m12 delete-stage path (tombstones + purged table). */
-  def m12DeleteStage(spark: SparkSession, dir: String): String =
-    stageM12Tombstones(spark, dir)
-
   /** Test hook: near-dup over the PURGED hash table (the
     * post-compaction hard-delete form — no anti-join in the plan).
     * The spec pins it row-identical to [[m12TombstoneNearDup]]. */
   def m12PurgedNearDup(spark: SparkSession, dir: String): DataFrame =
     nearDupFromHashes(
-      spark.read.parquet(s"${stageM12Tombstones(spark, dir)}/purged"))
+      spark.read.parquet(s"${m12DeleteStage(spark, dir)}/purged"))
 
   /** m12 — tombstone DELETES on the generational image-hash index,
     * completing the image channel's lifecycle (build m09 → append m10
@@ -476,7 +460,7 @@ private[queries] trait MultimodalFamily { this: AnalyticsQueries.type =>
     * [[m12PurgedNearDup]] is the physical purge the next compaction
     * applies, pinned row-identical. */
   def m12TombstoneNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageM12Tombstones(spark, dir)
+    val stage = m12DeleteStage(spark, dir)
     val hashes = spark.read.parquet(s"${stageM10Generation(spark, dir, "m10ihbase",
         col("media_id") % 2 === 0)}/hashes")
       .unionByName(spark.read.parquet(s"${stageM10Generation(spark, dir, "m10ihseg",

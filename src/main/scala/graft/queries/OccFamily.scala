@@ -51,11 +51,11 @@ private[queries] trait OccFamily { this: AnalyticsQueries.type =>
     val logDir = s"$root/log"
     // pre-staged inputs (fingerprint-keyed shared stages — ingest cost
     // priced by a20/a37's rows) plus this run's tombstone list
-    val base = stageA20CorpusKwIndex(spark, dir)
+    val base = a20CorpusKwIndexStage(spark, dir)
     val seg1 = stageKwIndexTable(spark, dir, "a37s1",
-      col("doc_id") % 4 === 1, force = false)
+      col("doc_id") % 4 === 1)
     val seg2 = stageKwIndexTable(spark, dir, "a37s2",
-      col("doc_id") % 4 === 3, force = false)
+      col("doc_id") % 4 === 3)
     Tables.documents(spark, dir)
       .filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
       .coalesce(1).write.mode("overwrite").parquet(s"$root/tombstones")
@@ -135,7 +135,7 @@ private[queries] trait OccFamily { this: AnalyticsQueries.type =>
     // own the epochs BEFORE any commit names them (a commit names a
     // fully landed artifact — the staging discipline)
     val cyc = stageA37KwCycle(spark, dir)
-    val base = stageA20CorpusKwIndex(spark, dir)
+    val base = a20CorpusKwIndexStage(spark, dir)
     def ownLayout(srcRoot: String, name: String): String = {
       PipelineQueries.copyDir(spark, s"$srcRoot/terms", s"$root/$name/terms")
       PipelineQueries.copyDir(spark, s"$srcRoot/postings", s"$root/$name/postings")

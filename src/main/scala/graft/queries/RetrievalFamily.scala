@@ -124,8 +124,8 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     *
     * Keyed by a content fingerprint of documents.parquet, so an
     * in-place-regenerated corpus invalidates the stage. */
-  private[queries] def stageKeywordIndex(spark: SparkSession, dir: String): String =
-    stageKwIndexTable(spark, dir, "a19kw", lit(true), force = false)
+  def keywordIndexStage(spark: SparkSession, dir: String): String =
+    stageKwIndexTable(spark, dir, "a19kw", lit(true))
 
   /** ONE builder for every persisted keyword-index layout (a19 full
     * table, a20 even-half base, a35's odd-half segment): tokenize the
@@ -135,12 +135,12 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * (crash-path contract: StagingProtocolSpec). Keyed by a content
     * fingerprint of documents.parquet. */
   private[queries] def stageKwIndexTable(spark: SparkSession, dir: String,
-      tag: String, docFilter: Column, force: Boolean): String = synchronized {
+      tag: String, docFilter: Column): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging(tag, s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (force || !fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
       val docs = Tables.documents(spark, dir).filter(docFilter)
       val n = docs.count()
       val tf = docs.select(col("doc_id"), explode(TF.words(col("text"))).as("term"))
@@ -192,11 +192,6 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     terms
   }
 
-  /** Serving/test hook: the persisted a19 index path, build-if-missing
-    * (the artifact a19, a21 and the streamed s20 serving loop read). */
-  def keywordIndexStage(spark: SparkSession, dir: String): String =
-    stageKeywordIndex(spark, dir)
-
   /** a19's per-query kept-term budget: of a query's distinct terms,
     * only the KwKeepTerms RAREST (lowest df = highest idf upper bound)
     * are probed — MaxScore-flavor STATIC impact ordering. High-df
@@ -224,7 +219,7 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * back to (query_id, term_id) to attach query ids; (4) per-(query,
     * doc) impact sum, bounded-heap top-20. What never runs at search
     * time: corpus tokenization, tf/df aggregation, dictionary
-    * construction — all one-time build cost in [[stageKeywordIndex]].
+    * construction — all one-time build cost in [[keywordIndexStage]].
     * Scale: probe cost is Σ df over ≤ queries×KwKeepTerms terms —
     * independent of corpus token count; every search-time join
     * broadcasts the (tiny) query side. */
@@ -328,7 +323,7 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
   }
 
   def a19KeywordSearchPrebuilt(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageKeywordIndex(spark, dir)
+    val stage = keywordIndexStage(spark, dir)
     kwPrunedSearch(spark, dir,
       spark.read.parquet(s"$stage/terms").select(col("term"), col("term_id"), col("df")),
       spark.read.parquet(s"$stage/postings"))
@@ -337,15 +332,11 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
   /** The a20 CORPUS-HALF keyword index stage — a19's layout built
     * from the even doc_ids only, the frozen base an append-only text
     * index updates against (the a12 even/odd protocol replayed on the
-    * inverted index). Same three tables as [[stageKeywordIndex]];
+    * inverted index). Same three tables as [[keywordIndexStage]];
     * meta's max_term_id lets increment-only vocabulary be assigned
     * ids ABOVE the frozen dictionary without renumbering it. */
-  private[queries] def stageA20CorpusKwIndex(spark: SparkSession, dir: String): String =
-    stageKwIndexTable(spark, dir, "a20kw", col("doc_id") % 2 === 0, force = false)
-
-  /** Test hook: the a20 frozen corpus-index staging path. */
   def a20CorpusKwIndexStage(spark: SparkSession, dir: String): String =
-    stageA20CorpusKwIndex(spark, dir)
+    stageKwIndexTable(spark, dir, "a20kw", col("doc_id") % 2 === 0)
 
   /** a20 — APPEND-ONLY keyword-index update + search: the segment
     * model every production text index uses (Lucene's new-segment
@@ -368,7 +359,7 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * AnalyticsSpec pins the stored postings byte-identical across
     * updates. */
   def a20KeywordIndexUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA20CorpusKwIndex(spark, dir)
+    val stage = a20CorpusKwIndexStage(spark, dir)
     val terms = spark.read.parquet(s"$stage/terms")
     val meta = spark.read.parquet(s"$stage/meta").head
     val (nCorpus, maxTermId) = (meta.getAs[Long]("n"), meta.getAs[Long]("max_term_id"))
@@ -403,7 +394,7 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * segment: self-contained stats, mergeable later). Input to the
     * a35 compaction. */
   private[queries] def stageA35Segment(spark: SparkSession, dir: String): String =
-    stageKwIndexTable(spark, dir, "a35seg", col("doc_id") % 2 === 1, force = false)
+    stageKwIndexTable(spark, dir, "a35seg", col("doc_id") % 2 === 1)
 
   /** Per-doc tf recovered EXACTLY from a stored keyword layout's own
     * artifacts: postings carry impact := tf·idf with idf ≥ 10⁴ > 0,
@@ -433,14 +424,13 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * "compaction ≡ fresh build" pin (AnalyticsSpec additionally pins
     * terms, postings AND the served search row-identical to the a19
     * monolith). File counts before/after in meta, written LAST. */
-  private[queries] def stageA35Compacted(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a35CompactedKwStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a35kw", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val base = stageA20CorpusKwIndex(spark, dir)
+      val base = a20CorpusKwIndexStage(spark, dir)
       val seg = stageA35Segment(spark, dir)
       def tfOf(st: String): DataFrame = kwRecoverTf(spark, st)
       def dataFiles(p: String): Long = {
@@ -463,10 +453,6 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a35 compacted keyword-index staging path. */
-  def a35CompactedKwStage(spark: SparkSession, dir: String): String =
-    stageA35Compacted(spark, dir)
-
   /** a35 — keyword search served from the COMPACTED (re-statted)
     * index: base ∪ segment merged into one fresh-layout index with
     * exact global df/idf — the idf drift a20's append deliberately
@@ -477,7 +463,7 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * artifacts; hash-gated with a19's ORACLE — compaction-with-restat
     * must be output-indistinguishable from a fresh full build. */
   def a35KeywordCompacted(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA35Compacted(spark, dir)
+    val stage = a35CompactedKwStage(spark, dir)
     kwPrunedSearch(spark, dir,
       spark.read.parquet(s"$stage/terms").select(col("term"), col("term_id"), col("df")),
       spark.read.parquet(s"$stage/postings"))
@@ -490,14 +476,13 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * note stats stay FROZEN at purge time: re-statting is the NEXT
     * a35-style merge's job, exactly a16's purged-codes-same-codebooks
     * protocol). Meta written last. */
-  private[queries] def stageA36Tombstones(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a36DeleteStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("a36del", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val a35 = stageA35Compacted(spark, dir)
+      val a35 = a35CompactedKwStage(spark, dir)
       Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/tombstones")
@@ -514,16 +499,12 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a36 delete-stage path (tombstones + purged table). */
-  def a36DeleteStage(spark: SparkSession, dir: String): String =
-    stageA36Tombstones(spark, dir)
-
   /** Test hook: a19's search over the PURGED postings (the
     * post-compaction hard-delete form — no anti-join in the plan).
     * The spec pins it row-identical to [[a36TombstoneSearch]]. */
   def a36PurgedSearch(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA36Tombstones(spark, dir)
-    val a35 = stageA35Compacted(spark, dir)
+    val stage = a36DeleteStage(spark, dir)
+    val a35 = a35CompactedKwStage(spark, dir)
     kwPrunedSearch(spark, dir,
       spark.read.parquet(s"$a35/terms").select(col("term"), col("term_id"), col("df")),
       spark.read.parquet(s"$stage/purged"))
@@ -546,8 +527,8 @@ private[queries] trait RetrievalFamily { this: AnalyticsQueries.type =>
     * tombstone set is ids-only, always broadcastable;
     * [[a36PurgedSearch]] is the physical purge, pinned row-identical. */
   def a36TombstoneSearch(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA36Tombstones(spark, dir)
-    val a35 = stageA35Compacted(spark, dir)
+    val stage = a36DeleteStage(spark, dir)
+    val a35 = a35CompactedKwStage(spark, dir)
     val postings = spark.read.parquet(s"$a35/postings")
       .join(broadcast(spark.read.parquet(s"$stage/tombstones")),
         Seq("doc_id"), "left_anti")

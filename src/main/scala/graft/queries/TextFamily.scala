@@ -203,7 +203,7 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
     * once per corpus fingerprint — the tokenizer artifact every
     * training-data pipeline ships to its encode fleet (the merges.txt
     * of a BPE tokenizer). `meta` is written last as the completeness
-    * marker, mirroring [[stageKeywordIndex]]; an in-place corpus
+    * marker, mirroring [[keywordIndexStage]]; an in-place corpus
     * rewrite keys a fresh train. */
   private[queries] def stageBpeMerges(spark: SparkSession, dir: String,
       force: Boolean = false): String = synchronized {
@@ -338,11 +338,6 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
         (gdScore(w) >= 5000).as("pred_keep"), (col("y4") === 10000).as("label_keep"))
       .withColumn("correct", col("pred_keep") === col("label_keep"))
 
-  /** The staged t17 model's path (building it if absent) — s18's
-    * frozen-model source, mirroring [[a20CorpusKwIndexStage]]. */
-  def qualityModelStage(spark: SparkSession, dir: String): String =
-    stageQualityModel(spark, dir)
-
   /** The t16 training loop over an already-materialized feature table:
     * five full-batch squared-loss GD rounds in fixed-point integers —
     * per round ONE map-side-combined 5-sum aggregate, driver state =
@@ -376,8 +371,7 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
     * the whole point: training cost amortizes to zero per scoring
     * fleet, and the frozen boundary is what makes scores comparable
     * across shards and days. */
-  private[queries] def stageQualityModel(spark: SparkSession,
-      dir: String): String = synchronized {
+  def qualityModelStage(spark: SparkSession, dir: String): String = synchronized {
     import spark.implicits._
     val fp = PipelineQueries.contentFingerprint(s"$dir/documents.parquet")
     val stage = PipelineQueries.staging("t17model", s"$dir#$fp")
@@ -396,7 +390,7 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
   }
 
   /** t17 — classifier APPLY on UNSEEN data: the staged model (trained
-    * on the even corpus half, [[stageQualityModel]]) scores the odd
+    * on the even corpus half, [[qualityModelStage]]) scores the odd
     * half it never saw — train/serve generalization, not relabeling
     * (the unit spec pins out-of-sample agreement ≥ 0.85). The five
     * weights are driver metadata; scoring is ONE corpus scan of a
@@ -405,7 +399,7 @@ private[queries] trait TextFamily { this: AnalyticsQueries.type =>
     * fleet's steady state at 100 TB: the model is bytes, the corpus
     * streams through embarrassingly parallel. */
   def t17ClassifierApply(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageQualityModel(spark, dir)
+    val stage = qualityModelStage(spark, dir)
     val w = spark.read.parquet(s"$stage/model").orderBy(col("j"))
       .collect().map(_.getAs[Long]("w"))
     scoreQuality(qualityFeatures(spark, dir).filter(col("doc_id") % 2 === 1), w)

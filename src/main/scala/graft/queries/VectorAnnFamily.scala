@@ -379,8 +379,7 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * written LAST as the completeness marker (n = the FULL table count,
     * so search sizes its shortlist without a rescan). Same
     * content-fingerprint keying as [[stagePqIndex]]. */
-  private[queries] def stageA12Index(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a12CorpusIndexStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a12pq", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
@@ -399,15 +398,9 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a12 corpus-index staging path (AnalyticsSpec pins
-    * that an update run leaves the stored corpus codes byte-identical
-    * and that the stored half covers even ids only). */
-  def a12CorpusIndexStage(spark: SparkSession, dir: String): String =
-    stageA12Index(spark, dir)
-
   /** a12 — INCREMENTAL PQ index update, append-only (the FAISS `add`
     * path, and the ANN analogue of p10/d13's corpus-index increments):
-    * the CORPUS half lives in a persisted index ([[stageA12Index]] —
+    * the CORPUS half lives in a persisted index ([[a12CorpusIndexStage]] —
     * stored one-byte codes + frozen codebooks trained on the corpus
     * only), and the increment (odd vec_ids) is ENCODED at update time
     * against those frozen codebooks — [[pqEncodeAgainst]], M
@@ -424,7 +417,7 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * the distribution shifts) is the documented trade — FAISS
     * re-trains offline on a schedule, same here. */
   def a12PqIndexUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA12Index(spark, dir)
+    val stage = a12CorpusIndexStage(spark, dir)
     val corpusCodes = spark.read.parquet(s"$stage/codes")
     val cbAll = spark.read.parquet(s"$stage/codebooks")
     val n = spark.read.parquet(s"$stage/meta").head.getAs[Long]("n")
@@ -547,7 +540,7 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     // below 2K — ids are dense from 0, the same assumption the vec_id<K
     // init already makes). Encoding covers ALL rows here (a09's
     // stateless inline form); the append-only split stages even-id
-    // codes once and encodes odd ids per call — see stageA12Index.
+    // codes once and encodes odd ids per call — see a12CorpusIndexStage.
     val trainPred: Column =
       if (trainCorpusOnly) col("vec_id") % 2 === 0 else lit(true)
     val initCut: Long = if (trainCorpusOnly) 2L * K else K.toLong
@@ -957,14 +950,13 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * written last as the completeness marker; file counts before/after
     * recorded in meta so the spec can pin the compaction actually
     * shrank the file population. */
-  private[queries] def stageA15Compacted(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a15CompactedStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a15pq", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val a12 = stageA12Index(spark, dir)
+      val a12 = a12CorpusIndexStage(spark, dir)
       val cbAll = spark.read.parquet(s"$a12/codebooks")
       pqEncodeAgainst(
         pqSubcodes(Tables.embeddings(spark, dir).filter(col("vec_id") % 2 === 1)), cbAll)
@@ -992,10 +984,6 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a15 compacted-index staging path. */
-  def a15CompactedStage(spark: SparkSession, dir: String): String =
-    stageA15Compacted(spark, dir)
-
   /** a15 — ANN index COMPACTION, the lifecycle step after append-only
     * updates (a12) and streamed ingest (s14): accumulated small delta
     * files are merged with the stored corpus codes into one
@@ -1009,7 +997,7 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * hash-gated ≡ a12's (same codes, same algebra), pinning that
     * compaction is a pure LAYOUT change — contents untouched. */
   def a15CompactedSearch(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA15Compacted(spark, dir)
+    val stage = a15CompactedStage(spark, dir)
     val codes = spark.read.parquet(s"$stage/codes")
     val cbAll = spark.read.parquet(s"$stage/codebooks")
     val n = spark.read.parquet(s"$stage/meta").head.getAs[Long]("n")
@@ -1025,14 +1013,13 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * compaction would produce (a15's compacted codes minus tombstoned
     * rows, re-range-partitioned). Meta written last; live/deleted
     * counts recorded so the spec can pin coverage. */
-  private[queries] def stageA16Deletes(spark: SparkSession,
-      dir: String): String = synchronized {
+  def a16DeleteStage(spark: SparkSession, dir: String): String = synchronized {
     val fp = PipelineQueries.contentFingerprint(s"$dir/embeddings.parquet")
     val stage = PipelineQueries.staging("a16del", s"$dir#$fp")
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/meta"))) {
-      val a15 = stageA15Compacted(spark, dir)
+      val a15 = a15CompactedStage(spark, dir)
       Tables.embeddings(spark, dir)
         .filter(pmod(col("vec_id"), lit(7)) === 3).select(col("vec_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/tombstones")
@@ -1049,16 +1036,12 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     stage
   }
 
-  /** Test hook: the a16 delete-stage path (tombstones + purged table). */
-  def a16DeleteStage(spark: SparkSession, dir: String): String =
-    stageA16Deletes(spark, dir)
-
   /** Test hook: the a16 search algebra over the PURGED code table (the
     * post-compaction form — no anti-join in the plan). The spec pins it
     * row-identical to [[a16TombstoneSearch]]. */
   def a16PurgedSearch(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA16Deletes(spark, dir)
-    val a15 = stageA15Compacted(spark, dir)
+    val stage = a16DeleteStage(spark, dir)
+    val a15 = a15CompactedStage(spark, dir)
     val cbAll = spark.read.parquet(s"$a15/codebooks")
     val n = spark.read.parquet(s"$a15/meta").head.getAs[Long]("n")
     val qside = pqSubcodes(Tables.embeddings(spark, dir).filter(col("vec_id") < 20))
@@ -1082,8 +1065,8 @@ private[queries] trait VectorAnnFamily { this: AnalyticsQueries.type =>
     * the full-corpus rewrite happens once per compaction cycle, not
     * per delete. */
   def a16TombstoneSearch(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stageA16Deletes(spark, dir)
-    val a15 = stageA15Compacted(spark, dir)
+    val stage = a16DeleteStage(spark, dir)
+    val a15 = a15CompactedStage(spark, dir)
     val codes = spark.read.parquet(s"$a15/codes")
       .join(broadcast(spark.read.parquet(s"$stage/tombstones")), Seq("vec_id"), "left_anti")
     val cbAll = spark.read.parquet(s"$a15/codebooks")

@@ -218,63 +218,47 @@ class LogFeedReaderFactory(conf: Broadcast[SerializableConfiguration])
 /** Emits one change row per record of the action's parquet artifact:
   * insert rows carry their payload, delete rows are ids-only (lang and
   * n_chars null — the artifact never stored them; a retraction has no
-  * payload). Field indices are resolved once per file, from its first
-  * record's schema (every record of one file shares it), as
-  * [[ReplayPartitionReader]] does. */
+  * payload). */
 class LogFeedPartitionReader(p: LogFeedInputPartition, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
-  private val kind = UTF8String.fromString(p.kind)
   private var fileIdx = -1
   private var reader: ParquetReader[Group] = _
   private var current: Group = _
-  // the open file's field indices; -1 = not yet resolved (docIdx) or
-  // absent from the schema / not read for this kind (langIdx, nCharsIdx)
-  private var docIdx = -1
-  private var langIdx = -1
-  private var nCharsIdx = -1
 
   private def nextReader(): Boolean = {
     if (reader != null) { reader.close(); reader = null }
     fileIdx += 1
     if (fileIdx >= p.files.length) return false
     reader = GroupFiles.open(p.files(fileIdx), conf)
-    docIdx = -1
     true
-  }
-
-  private def resolveIndices(g: Group): Unit = {
-    val schema = g.getType
-    def payloadIdx(field: String): Int =
-      if (p.kind == "insert" && schema.containsField(field)) schema.getFieldIndex(field)
-      else -1
-    docIdx = schema.getFieldIndex("doc_id")
-    langIdx = payloadIdx("lang")
-    nCharsIdx = payloadIdx("n_chars")
   }
 
   override def next(): Boolean = {
     while (true) {
       if (reader == null && !nextReader()) return false
       val g = reader.read()
-      if (g != null) {
-        if (docIdx < 0) resolveIndices(g)
-        current = g
-        return true
-      }
+      if (g != null) { current = g; return true }
       reader.close(); reader = null
     }
     false // unreachable
   }
 
   override def get(): InternalRow = {
-    def has(i: Int): Boolean = i >= 0 && current.getFieldRepetitionCount(i) > 0
+    val schema = current.getType
+    def has(field: String): Boolean =
+      schema.containsField(field) &&
+        current.getFieldRepetitionCount(schema.getFieldIndex(field)) > 0
     val lang =
-      if (has(langIdx)) UTF8String.fromBytes(current.getBinary(langIdx, 0).getBytes)
+      if (p.kind == "insert" && has("lang"))
+        UTF8String.fromBytes(current.getBinary("lang", 0).getBytes)
       else null
-    val nChars: Any = if (has(nCharsIdx)) current.getLong(nCharsIdx, 0) else null
+    val nChars: Any =
+      if (p.kind == "insert" && has("n_chars")) current.getLong("n_chars", 0)
+      else null
     new GenericInternalRow(Array[Any](
-      p.version, kind, current.getLong(docIdx, 0), lang, nChars))
+      p.version, UTF8String.fromString(p.kind),
+      current.getLong("doc_id", 0), lang, nChars))
   }
 
   override def close(): Unit = if (reader != null) reader.close()

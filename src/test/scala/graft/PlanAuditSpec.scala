@@ -318,8 +318,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // the cluster-aggregate + banded self-join tail. Decode is an
     // object-boundary mapPartitions (ImageIO inside aHash8) — ANY
     // object boundary in this plan means the corpus is being
-    // re-decoded at search time (m07's inline shape, ~36 s of 45 s at
-    // MultimodalStress ×100)
+    // re-decoded at search time (m07's inline shape, ~36 s of 45 s on
+    // a ×100 corpus, PERF.md)
     assert(p.contains("graft_m09ih"), s"search must scan the persisted hash index:\n$p")
     assert(!p.contains("MapPartitions"), s"decode (object boundary) in the search plan:\n$p")
     assert(!p.contains("DeserializeToObject"), s"object boundary in the search plan:\n$p")

@@ -44,7 +44,7 @@ object KwMergeConfluenceProperties extends Properties("KwMergeConfluence") {
   private lazy val leaves: Vector[(String, Long)] =
     (0 until 4).map { r =>
       val st = AnalyticsQueries.stageKwIndexTable(spark, dir, s"kwconf$r",
-        pmod(col("doc_id"), lit(4)) === r, force = false)
+        pmod(col("doc_id"), lit(4)) === r)
       (st, spark.read.parquet(s"$st/meta").head.getAs[Long]("n"))
     }.toVector
 

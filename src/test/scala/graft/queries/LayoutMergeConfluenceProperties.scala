@@ -76,12 +76,12 @@ object LayoutMergeConfluenceProperties extends Properties("LayoutMergeConfluence
   private lazy val tokenLeaves: Vector[DataFrame] =
     (0 until 4).map { r =>
       val st = AnalyticsQueries.stageTokenTable(spark, dir, s"thconf$r",
-        col("doc_id") % 4 === r, partitions = 2, force = false)
+        col("doc_id") % 4 === r, partitions = 2)
       spark.read.parquet(s"$st/tokens")
     }.toVector
 
   private lazy val tokenFresh: Seq[String] = rows(spark.read.parquet(
-    s"${AnalyticsQueries.stageTokenHashIndex(spark, dir)}/tokens"))
+    s"${AnalyticsQueries.tokenHashStage(spark, dir)}/tokens"))
 
   private lazy val docTombs = Tables.documents(spark, dir)
     .filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
@@ -89,7 +89,7 @@ object LayoutMergeConfluenceProperties extends Properties("LayoutMergeConfluence
 
   private lazy val tokenFreshSurvivors: Seq[String] = rows(
     spark.read.parquet(
-      s"${AnalyticsQueries.stageTokenHashIndex(spark, dir)}/tokens")
+      s"${AnalyticsQueries.tokenHashStage(spark, dir)}/tokens")
       .filter(pmod(col("doc_id"), lit(7)) =!= 3))
 
   property("token: ANY merge schedule lands the fresh monolithic table") =
@@ -106,7 +106,7 @@ object LayoutMergeConfluenceProperties extends Properties("LayoutMergeConfluence
   // ---- vector channel: PQ codes under FROZEN codebooks ----
 
   private lazy val codebooks = spark.read.parquet(
-    s"${AnalyticsQueries.stageA12Index(spark, dir)}/codebooks").localCheckpoint()
+    s"${AnalyticsQueries.a12CorpusIndexStage(spark, dir)}/codebooks").localCheckpoint()
 
   private lazy val vecLeaves: Vector[DataFrame] =
     (0 until 4).map { r =>

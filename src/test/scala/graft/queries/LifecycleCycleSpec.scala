@@ -216,7 +216,7 @@ class LifecycleCycleSpec extends AnyFunSuite {
     import spark.implicits._
     val cycle = AnalyticsQueries.a38TokenCycleStage(spark, dir)
     val fresh = AnalyticsQueries.stageTokenTable(spark, dir, "a38fresh",
-      pmod(col("doc_id"), lit(7)) =!= 3, partitions = 4, force = false)
+      pmod(col("doc_id"), lit(7)) =!= 3, partitions = 4)
     def rows(p: String) = spark.read.parquet(p)
       .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
     assert(rows(s"$cycle/tokens") == rows(s"$fresh/tokens"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession
 
 /** Failure injection for the meta-last completeness-marker protocol
-  * that EVERY persisted index stage relies on (stageImageHashIndex,
+  * that EVERY persisted index stage relies on (imageHashStage,
   * stageM10Generation, stagePqIndex, stageIvfIndex, the a28 token-hash
   * table, the p22/p26 layouts, ...): data dirs are written first and
   * `meta` is written LAST, so
