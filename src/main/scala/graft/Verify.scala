@@ -33,15 +33,19 @@ object Verify {
     * keys still dump; the failed keys are written to `failures.txt`
     * (key TAB message, one per line) and returned as (key, message).
     * With no failure, a stale `failures.txt` from an earlier run is
-    * removed. */
+    * removed. `dumped` is told each written key and its seconds, from
+    * building the query to the end of its write. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
-      oracleSql: Map[String, String]): Seq[(String, String)] = {
+      oracleSql: Map[String, String],
+      dumped: (String, Double) => Unit = (_, _) => ()): Seq[(String, String)] = {
     new java.io.File(outDir).mkdirs()
     val failures = queries.flatMap { case (name, fn) =>
       try {
+        val t0 = System.nanoTime()
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
+        dumped(name, (System.nanoTime() - t0) / 1e9)
         None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -37,10 +37,14 @@ object KinesisSink extends Logging {
     private def flush(): Unit = if (buf.nonEmpty) {
       try {
         val results = producer.putRecords(stream, buf.toSeq)
+        var failed = 0
         results.foreach { r =>
-          if (r.failed) logError(s"Failed to produce record: ${r.errorMessage}")
-          else logInfo(s"Produced sequence ${r.sequenceNumber} to ${r.shardId}")
+          if (r.failed) {
+            failed += 1
+            logError(s"Failed to produce record: ${r.errorMessage}")
+          }
         }
+        logInfo(s"Produced ${results.size - failed} of ${buf.size} records to $stream ($failed failed)")
       } catch {
         // at-most-once: log and continue (reference main.py:45-49)
         case e: Exception => logError(s"Error producing batch: ${e.getMessage}")

@@ -25,7 +25,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.{AccumulatorV2, SerializableConfiguration}
 
 /** T1/T2 as a REAL Structured Streaming source (reference contract:
   * main.py:39-44): a rate-limited `MicroBatchStream` that replays a
@@ -73,6 +73,29 @@ import org.apache.spark.util.SerializableConfiguration
   *      the first trigger builds its reader factory, and broadcast
   *      (not re-serialized into every trigger's tasks); `stop()`
   *      destroys the broadcast.
+  *   6. A paced trigger (`timeScale > 0`, not `Trigger.AvailableNow`)
+  *      admits groups one LEAD ahead of their due time and its readers
+  *      hold each row until its group is due, so the trigger's fixed
+  *      cost (offset WAL, planning, job launch) overlaps the wait for
+  *      the due time instead of adding to it. The lead is the stream's
+  *      own measured admission-to-read delay: each paced task reports
+  *      `now − admission time` when its reader is created, through one
+  *      min-accumulator per stream, and an admission looks ahead by
+  *      the least delay over the last [[ReplayMicroBatchStream.LeadWindow]]
+  *      paced triggers (0 before the first read, also after a
+  *      restart). Taking the least keeps one slow trigger (GC, CPU
+  *      steal) from widening the next window: an overestimated lead
+  *      would hold a window's earliest rows until its last release,
+  *      since the sink flushes at partition close. Each admitted group
+  *      whose due wall time (`anchor + due`) is still ahead when the
+  *      trigger is planned travels in its partition as `(ts,
+  *      releaseAtMs)`; the reader sleeps until that time before it
+  *      returns the group's first row, so no row leaves the source
+  *      before it is due. Release times are the DRIVER's clock: on a
+  *      cluster, an executor whose clock is skewed from the driver's
+  *      releases its rows shifted by that skew. Unpaced drains admit,
+  *      plan and read exactly as without pacing: no holds, no
+  *      accumulator.
   *
   * Options:
   *   - `path`            parquet file/dir to replay (required)
@@ -91,8 +114,9 @@ import org.apache.spark.util.SerializableConfiguration
   *                       progresses); backlog drain rate becomes
   *                       cap × trigger rate. Progress is observable
   *                       via the source metrics (`behindGroups`,
-  *                       `behindRows`, `pacingLagMs`) in each
-  *                       StreamingQueryProgress
+  *                       `behindRows`, `pacingLagMs`, and `admitLeadMs`,
+  *                       the lookahead of the last admission, step 6)
+  *                       in each StreamingQueryProgress
   *   - `groupGranularityMs` coarsen the replay schedule to this bucket
   *                       width (default 1 = exact per-timestamp
   *                       groups). The driver schedule costs 3 longs
@@ -227,11 +251,37 @@ object ReplayOffset {
 }
 
 /** One staged file's share of an admitted span: scan `file` for rows
-  * with `tsLoExclusive < ts_ms <= tsHiInclusive`. Carries only a path
-  * and bounds — rows are read executor-side. */
+  * with `tsLoExclusive < ts_ms <= tsHiInclusive`. Carries only a path,
+  * bounds and, for a paced trigger, release times — rows are read
+  * executor-side.
+  *
+  * A paced trigger's partitions carry its admission wall time
+  * (`admittedAtMs`, −1 otherwise) and the groups that were not yet
+  * due when it was planned: their keys `heldTs` (ascending) with
+  * their due wall times `releaseAtMs`. Those groups are a suffix of
+  * the span (due times never fall), so a row is held iff its ts is
+  * above `heldAfterTs`, the key of the last group that was due; it
+  * belongs to the first held group whose key is ≥ its ts. */
 case class ReplayInputPartition(
-    file: String, tsLoExclusive: Long, tsHiInclusive: Long)
+    file: String, tsLoExclusive: Long, tsHiInclusive: Long,
+    admittedAtMs: Long = -1L,
+    heldAfterTs: Long = Long.MaxValue,
+    heldTs: Array[Long] = Array.emptyLongArray,
+    releaseAtMs: Array[Long] = Array.emptyLongArray)
   extends InputPartition
+
+/** The least value added (`Long.MaxValue` when none was): carries a
+  * paced trigger's admission-to-read delays from its tasks to the
+  * driver, which keeps the minimum. */
+final class MinLongAccumulator extends AccumulatorV2[Long, Long] {
+  private var min = Long.MaxValue
+  override def isZero: Boolean = min == Long.MaxValue
+  override def copy(): MinLongAccumulator = { val a = new MinLongAccumulator; a.min = min; a }
+  override def reset(): Unit = min = Long.MaxValue
+  override def add(v: Long): Unit = if (v < min) min = v
+  override def merge(other: AccumulatorV2[Long, Long]): Unit = add(other.value)
+  override def value: Long = min
+}
 
 /** The session's Hadoop conf for one stream's readers, built and
   * broadcast the first time a reader factory needs it, and destroyed
@@ -270,10 +320,16 @@ private[streaming] object GroupFiles {
     new Builder(HadoopInputFile.fromPath(new HPath(file), conf)).withFilter(filter).build()
 }
 
-class ReplayReaderFactory(conf: Broadcast[SerializableConfiguration])
+/** `lead`, set for a paced stream only, receives each paced task's
+  * admission-to-read delay, taken when its reader is created. */
+class ReplayReaderFactory(conf: Broadcast[SerializableConfiguration],
+    val lead: Option[MinLongAccumulator] = None)
   extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ReplayPartitionReader(partition.asInstanceOf[ReplayInputPartition], conf.value.value)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[ReplayInputPartition]
+    if (p.admittedAtMs >= 0L) lead.foreach(_.add(System.currentTimeMillis() - p.admittedAtMs))
+    new ReplayPartitionReader(p, conf.value.value)
+  }
 }
 
 /** Scans one staged file with a `ts_ms` range predicate. The filter
@@ -282,7 +338,9 @@ class ReplayReaderFactory(conf: Broadcast[SerializableConfiguration])
   * re-checked here anyway (defense, not correctness-critical). The
   * file is opened with the stream's broadcast conf ([[GroupFiles]]),
   * and the three field indices are resolved once, from the first
-  * record's schema (every record of one file shares it). */
+  * record's schema (every record of one file shares it). Rows come in
+  * ts order; before the first row of a held group the reader sleeps
+  * until that group's release time. */
 class ReplayPartitionReader(p: ReplayInputPartition, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
@@ -295,6 +353,8 @@ class ReplayPartitionReader(p: ReplayInputPartition, conf: Configuration)
   private var tsIdx = -1
   private var keyIdx = -1
   private var payloadIdx = -1
+  // first held group whose key is not below the last row's ts
+  private var held = 0
 
   override def next(): Boolean = {
     var g = reader.read()
@@ -307,6 +367,7 @@ class ReplayPartitionReader(p: ReplayInputPartition, conf: Configuration)
       }
       val ts = g.getLong(tsIdx, 0)
       if (ts > p.tsLoExclusive && ts <= p.tsHiInclusive) {
+        if (ts > p.heldAfterTs) awaitRelease(ts)
         current = g
         currentTs = ts
         return true
@@ -314,6 +375,17 @@ class ReplayPartitionReader(p: ReplayInputPartition, conf: Configuration)
       g = reader.read()
     }
     false
+  }
+
+  private def awaitRelease(ts: Long): Unit = {
+    while (held < p.heldTs.length && p.heldTs(held) < ts) held += 1
+    if (held < p.heldTs.length) {
+      var wait = p.releaseAtMs(held) - System.currentTimeMillis()
+      while (wait > 0L) {
+        Thread.sleep(wait)
+        wait = p.releaseAtMs(held) - System.currentTimeMillis()
+      }
+    }
   }
 
   private def str(i: Int): UTF8String =
@@ -494,6 +566,30 @@ class ReplayMicroBatchStream(
   @volatile private var anchorWall: Long = -1L
   @volatile private var drainAll: Boolean = false
 
+  /** Paced: admission waits for due times (step 6 of the class doc). */
+  private def pacing: Boolean = timeScale > 0.0 && !drainAll
+
+  // the lookahead (step 6): per-trigger least admission-to-read delays
+  // of the last LeadWindow paced triggers that read, fed by leadAcc
+  // (registered with the first paced reader factory), and the lead
+  // and wall time of the last paced admission
+  private var leadAcc: MinLongAccumulator = null
+  private val recentLeads = scala.collection.mutable.Queue.empty[Long]
+  @volatile private var admitLead: Long = 0L
+  @volatile private var admittedAt: Long = -1L
+
+  /** Folds the last trigger's delay into the window; returns the lead
+    * for the next admission (0 before any paced read). */
+  private def nextLead(): Long = {
+    val acc = leadAcc
+    if (acc != null && !acc.isZero) {
+      recentLeads.enqueue(acc.value)
+      if (recentLeads.size > ReplayMicroBatchStream.LeadWindow) recentLeads.dequeue()
+      acc.reset()
+    }
+    if (recentLeads.isEmpty) 0L else math.max(0L, recentLeads.min)
+  }
+
   override def prepareForTriggerAvailableNow(): Unit = { drainAll = true }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
@@ -542,11 +638,13 @@ class ReplayMicroBatchStream(
     if (from >= s.ts.length) return start
     if (anchorWall < 0L) anchorWall = clock() - (if (from > 0) s.due(from - 1) else 0L)
     val dueNow =
-      if (drainAll || timeScale <= 0.0) s.ts.length
+      if (!pacing) s.ts.length
       else {
-        val elapsed = clock() - anchorWall
+        admittedAt = clock()
+        admitLead = nextLead()
+        val horizon = admittedAt - anchorWall + admitLead
         var hi = from
-        while (hi < s.ts.length && s.due(hi) <= elapsed) hi += 1
+        while (hi < s.ts.length && s.due(hi) <= horizon) hi += 1
         hi
       }
     val hiCap = math.min(dueNow, from + maxGroupsPerTrigger)
@@ -564,7 +662,8 @@ class ReplayMicroBatchStream(
     * groups and rows remain unconsumed, and — when pacing is active —
     * how far past-due the next unconsumed group is (a healthy paced
     * replay keeps `pacingLagMs` near zero; a sustained climb means the
-    * query cannot keep up with the recorded event rate). */
+    * query cannot keep up with the recorded event rate), and the
+    * lookahead the last admission used (`admitLeadMs`). */
   override def metrics(latestConsumedOffset: java.util.Optional[Offset]): util.Map[String, String] = {
     val s = stagedRef
     if (s == null || s.ts.isEmpty) return util.Collections.emptyMap[String, String]()
@@ -582,7 +681,8 @@ class ReplayMicroBatchStream(
     Map(
       "behindGroups" -> (s.ts.length - from).toString,
       "behindRows" -> (s.cumRows.last - doneRows).toString,
-      "pacingLagMs" -> lagMs.toString).asJava
+      "pacingLagMs" -> lagMs.toString,
+      "admitLeadMs" -> admitLead.toString).asJava
   }
 
   override def reportLatestOffset(): Offset =
@@ -594,20 +694,43 @@ class ReplayMicroBatchStream(
     * a paced trigger usually plans one file and a full drain plans
     * each file once: task count is bounded by the staged file count,
     * not by the number of distinct timestamps. Rows are fetched
-    * executor-side — nothing data-scale crosses the driver. */
+    * executor-side — nothing data-scale crosses the driver. A paced
+    * trigger's partitions also carry its admission time and the release
+    * times of the groups not yet due (step 6 of the class doc). */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val startTs = start.asInstanceOf[ReplayOffset].lastTs
     val endTs = end.asInstanceOf[ReplayOffset].lastTs
     if (endTs <= startTs) return Array.empty
-    staged.files.collect { case (f, lo, hi) if hi > startTs && lo <= endTs =>
-      ReplayInputPartition(f, startTs, endTs): InputPartition
-    }
+    val s = staged
+    // a batch this stream did not admit (re-run from the offset log
+    // after a restart) has no anchor yet: it is planned unpaced
+    val part: String => ReplayInputPartition =
+      if (!pacing || anchorWall < 0L) ReplayInputPartition(_, startTs, endTs)
+      else {
+        val now = clock()
+        val to = idxAfter(s.ts, endTs)
+        var h = idxAfter(s.ts, startTs)
+        while (h < to && anchorWall + s.due(h) <= now) h += 1
+        val after = if (h > 0) s.ts(h - 1) else Long.MinValue
+        val heldTs = s.ts.slice(h, to)
+        val releaseAt = s.due.slice(h, to).map(anchorWall + _)
+        ReplayInputPartition(_, startTs, endTs, admittedAt, after, heldTs, releaseAt)
+      }
+    s.files.collect { case (f, lo, hi) if hi > startTs && lo <= endTs => part(f): InputPartition }
   }
 
   private val readerConf = new StreamHadoopConf
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ReplayReaderFactory(readerConf.get(spark))
+    new ReplayReaderFactory(readerConf.get(spark), if (pacing) Some(leadAccumulator()) else None)
+
+  private def leadAccumulator(): MinLongAccumulator = {
+    if (leadAcc == null) {
+      leadAcc = new MinLongAccumulator
+      spark.sparkContext.register(leadAcc)
+    }
+    leadAcc
+  }
 
   override def commit(end: Offset): Unit = ()
 
@@ -629,6 +752,12 @@ class ReplayMicroBatchStream(
       cleanupHook = null
     }
   }
+}
+
+object ReplayMicroBatchStream {
+  /** Paced triggers whose least admission-to-read delay bounds the
+    * next admission's lead. */
+  val LeadWindow = 5
 }
 
 /** JVM-wide lock for the staging step's session-conf save/set/restore:

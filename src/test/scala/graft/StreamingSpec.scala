@@ -452,6 +452,197 @@ class StreamingSpec extends AnyFunSuite {
     } finally s.stop()
   }
 
+  /** Rows `ts_ms` → wall ms at which `r` returned them, in read order. */
+  private def readTimed(r: ReplayPartitionReader): Seq[(Long, Long)] = {
+    val buf = ArrayBuffer.empty[(Long, Long)]
+    try while (r.next()) buf += ((r.get().getLong(0), System.currentTimeMillis()))
+    finally r.close()
+    buf.toSeq
+  }
+
+  /** Groups 0, 100, …, 900 ms of one row each, under `stageRoot`. */
+  private def tenGroups(): (String, String) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rs_lead").toString
+    (0 until 10).map(i => (i * 100L, "k", s"p$i"))
+      .toDF("ts", "key", "payload").write.mode("overwrite").parquet(dir)
+    (dir, java.nio.file.Files.createTempDirectory("graft_rs_lead_stage").toString)
+  }
+
+  /** Reports `leadMs` as one paced trigger's admission-to-read delay,
+    * the way a task does: a reader built from a partition whose
+    * admission time lies `leadMs` in the past. */
+  private def reportLead(s: ReplayMicroBatchStream, part: ReplayInputPartition, leadMs: Long): Unit =
+    s.createReaderFactory().createReader(
+      part.copy(admittedAtMs = System.currentTimeMillis() - leadMs)).close()
+
+  test("replay source: a paced admission looks ahead by the measured lead; only groups not yet due are held") {
+    val (dir, stageRoot) = tenGroups()
+    var now = 10_000L
+    val s = new ReplayMicroBatchStream(
+      replayOptions(dir, "timeScale" -> "1.0", "stagingDir" -> stageRoot), clock = () => now)
+    try {
+      def admit(from: Long) = s.latestOffset(ReplayOffset(from), s.getDefaultReadLimit)
+        .asInstanceOf[ReplayOffset].lastTs
+      assert(admit(Long.MinValue) == 0L, "lead is 0 before any read: only group 0 is due")
+      val first = s.planInputPartitions(ReplayOffset.Start, ReplayOffset(0L))
+        .map(_.asInstanceOf[ReplayInputPartition])
+      assert(first.forall(p => p.admittedAtMs == 10_000L && p.heldTs.isEmpty))
+      reportLead(s, first.head, 250L)
+      now = 10_120L // elapsed 120 ms; with the ≈ 250 ms lead the horizon is ≈ 370 ms
+      assert(admit(0L) == 300L, "groups due ≤ elapsed + lead (100, 200, 300) are admitted")
+      val lead = s.metrics(java.util.Optional.of(ReplayOffset(0L))).get("admitLeadMs").toLong
+      assert(lead >= 250L && lead < 280L, s"admitLeadMs = $lead")
+      val parts = s.planInputPartitions(ReplayOffset(0L), ReplayOffset(300L))
+        .map(_.asInstanceOf[ReplayInputPartition])
+      assert(parts.nonEmpty)
+      parts.foreach { p =>
+        assert(p.admittedAtMs == 10_120L)
+        // group 100 was due at 10_100: it is not held
+        assert(p.heldAfterTs == 100L)
+        assert(p.heldTs.toSeq == Seq(200L, 300L))
+        assert(p.releaseAtMs.toSeq == Seq(10_200L, 10_300L))
+      }
+    } finally s.stop()
+  }
+
+  test("replay reader returns no row of a held group before its release time, rows in ts order") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rs_hold").toString
+    // one file, six rows in three groups of two (group keys 0, 1, 2)
+    Seq(0L, 0L, 1L, 1L, 2L, 2L).zipWithIndex.map { case (ts, i) => (ts, "k", s"p$i") }
+      .toDF("ts_ms", "partition_key", "payload")
+      .coalesce(1).sortWithinPartitions("ts_ms").write.mode("overwrite").parquet(dir)
+    val file = stagedFiles(dir).head
+    val t0 = System.currentTimeMillis()
+    val p = ReplayInputPartition(file, Long.MinValue, 2L, admittedAtMs = t0,
+      heldAfterTs = 0L, heldTs = Array(1L, 2L), releaseAtMs = Array(t0 + 100L, t0 + 200L))
+    val rows = readTimed(new ReplayPartitionReader(p, spark.sessionState.newHadoopConf()))
+    assert(rows.map(_._1) == Seq(0L, 0L, 1L, 1L, 2L, 2L), s"rows out of ts order: $rows")
+    rows.foreach { case (ts, at) =>
+      if (ts >= 1L) assert(at >= t0 + ts * 100L, s"group $ts returned ${at - t0} ms after t0")
+    }
+    assert(rows.head._2 < t0 + 100L, "group 0 is not held")
+  }
+
+  test("replay source: one slow trigger does not widen the lead (least delay over the window)") {
+    val (dir, stageRoot) = tenGroups()
+    val now = 10_000L
+    val s = new ReplayMicroBatchStream(
+      replayOptions(dir, "timeScale" -> "1.0", "stagingDir" -> stageRoot), clock = () => now)
+    try {
+      def admit() = s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
+        .asInstanceOf[ReplayOffset].lastTs
+      assert(admit() == 0L)
+      val part = s.planInputPartitions(ReplayOffset.Start, ReplayOffset(0L)).head
+        .asInstanceOf[ReplayInputPartition]
+      // four paced triggers read: 30 ms, then one 1 s straggler, then 30 ms twice
+      Seq(30L, 1000L, 30L, 30L).foreach { lead =>
+        reportLead(s, part, lead)
+        admit()
+      }
+      val lead = s.metrics(java.util.Optional.empty[org.apache.spark.sql.connector.read.streaming.Offset]())
+        .get("admitLeadMs").toLong
+      assert(lead >= 30L && lead < 100L, s"admitLeadMs = $lead, not the 30 ms of the window's least")
+      // elapsed 0: a ≈ 30 ms lead admits group 0 only; a 1 s lead would admit all ten
+      assert(admit() == 0L)
+    } finally s.stop()
+  }
+
+  test("replay source: unpaced and AvailableNow triggers plan plain partitions and no accumulator") {
+    val (dir, stageRoot) = thousandRows()
+    val drains = Seq(
+      new ReplayMicroBatchStream(replayOptions(dir, "stagingDir" -> stageRoot)),
+      {
+        val s = new ReplayMicroBatchStream(
+          replayOptions(dir, "timeScale" -> "1.0", "stagingDir" -> stageRoot))
+        s.prepareForTriggerAvailableNow()
+        s
+      })
+    try drains.foreach { s =>
+      val end = s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
+      assert(end == ReplayOffset(999L), "a drain admits every group")
+      val parts = s.planInputPartitions(ReplayOffset.Start, end)
+        .map(_.asInstanceOf[ReplayInputPartition])
+      assert(parts.nonEmpty)
+      parts.foreach(p => assert(p == ReplayInputPartition(p.file, Long.MinValue, 999L),
+        s"a drain partition carries pacing fields: $p"))
+      val factory = s.createReaderFactory().asInstanceOf[ReplayReaderFactory]
+      assert(factory.lead.isEmpty, "a drain registers no accumulator")
+      assert(readAll(factory, parts.toSeq).size == 1000)
+      assert(s.metrics(java.util.Optional.of(end)).get("admitLeadMs") == "0")
+    } finally drains.foreach(_.stop())
+  }
+
+  test("replay partitions with release times round-trip through the Kryo and Java serializers") {
+    import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
+    import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+    val (dir, stageRoot) = tenGroups()
+    var now = 10_000L
+    val s = new ReplayMicroBatchStream(
+      replayOptions(dir, "timeScale" -> "1.0", "stagingDir" -> stageRoot), clock = () => now)
+    try {
+      s.latestOffset(ReplayOffset.Start, s.getDefaultReadLimit)
+      now = 10_950L
+      val end = s.latestOffset(ReplayOffset(0L), s.getDefaultReadLimit)
+      now = 10_450L // planned while groups 500 … 900 are not yet due
+      val parts = s.planInputPartitions(ReplayOffset(0L), end)
+        .map(_.asInstanceOf[ReplayInputPartition]).toSeq
+      assert(parts.exists(_.heldTs.toSeq == Seq(500L, 600L, 700L, 800L, 900L)))
+      def fields(p: ReplayInputPartition) = (p.file, p.tsLoExclusive, p.tsHiInclusive,
+        p.admittedAtMs, p.heldAfterTs, p.heldTs.toSeq, p.releaseAtMs.toSeq)
+      val conf = spark.sparkContext.getConf
+      Seq(new KryoSerializer(conf), new JavaSerializer(conf)).foreach { ser =>
+        val inst = ser.newInstance()
+        parts.foreach { p =>
+          val back = inst.deserialize[InputPartition](inst.serialize[InputPartition](p))
+            .asInstanceOf[ReplayInputPartition]
+          assert(fields(back) == fields(p), s"${ser.getClass.getSimpleName} changed $p")
+        }
+      }
+      // tasks ship the paced factory, accumulator included, with the
+      // Java closure serializer; its holds are long past, so it reads
+      // at once
+      val inst = new JavaSerializer(conf).newInstance()
+      val factory = s.createReaderFactory()
+      val back = inst.deserialize[PartitionReaderFactory](inst.serialize(factory))
+      assert(readAll(back, parts).sorted == (1 until 10).map(i => s"p$i"))
+    } finally s.stop()
+  }
+
+  test("paced replay query: every record once, and the measured lead reaches the source") {
+    import spark.implicits._
+    val dataDir = java.nio.file.Files.createTempDirectory("graft_rs_paced").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_rs_paced_ckpt").toString
+    // 20 groups of 2 rows, 20 ms apart: a 380 ms schedule at timeScale 1
+    (0 until 40).map(i => ((i / 2) * 20L, "k", f"p$i%02d")).toDF("ts", "key", "payload")
+      .write.mode("overwrite").parquet(dataDir)
+    val q = spark.readStream.format("graft-replay")
+      .option("path", dataDir).option("tsMillisExpr", "ts")
+      .option("keyExpr", "key").option("payloadExpr", "payload")
+      .option("timeScale", "1.0")
+      .load()
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreach(SharedStub.pacedCollector)
+      .start()
+    try {
+      // the last batch's progress reports an empty backlog; stopping at
+      // the 40th record alone could drop the only progress that carries
+      // a lookahead (a cold first trigger leaves one batch for the rest)
+      def drained = Option(q.lastProgress).exists(_.sources.exists(s =>
+        s.metrics != null && s.metrics.get("behindRows") == "0"))
+      val deadline = System.currentTimeMillis() + 60000
+      while ((SharedStub.paced.size < 40 || !drained) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+    } finally q.stop()
+    val got = SharedStub.paced.toArray.map(_.toString).toVector
+    assert(got.sorted == (0 until 40).map(i => f"p$i%02d").toVector, s"paced replay got $got")
+    val leads = q.recentProgress.flatMap(_.sources.headOption)
+      .flatMap(s => Option(s.metrics)).flatMap(m => Option(m.get("admitLeadMs"))).map(_.toLong)
+    assert(leads.exists(_ > 0L),
+      s"no admission looked ahead: the tasks' delays never reached the driver (${leads.toSeq})")
+  }
+
   test("replay reader factory round-trips through the Kryo and Java serializers") {
     import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
     import org.apache.spark.sql.connector.read.PartitionReaderFactory
@@ -780,6 +971,13 @@ object SharedStub {
       def open(partitionId: Long, epochId: Long): Boolean = true
       def process(r: org.apache.spark.sql.Row): Unit =
         replayed.add(r.getAs[String]("payload"))
+      def close(errorOrNull: Throwable): Unit = ()
+    }
+  val paced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val pacedCollector: org.apache.spark.sql.ForeachWriter[org.apache.spark.sql.Row] =
+    new org.apache.spark.sql.ForeachWriter[org.apache.spark.sql.Row] {
+      def open(partitionId: Long, epochId: Long): Boolean = true
+      def process(r: org.apache.spark.sql.Row): Unit = paced.add(r.getAs[String]("payload"))
       def close(errorOrNull: Throwable): Unit = ()
     }
   // every record's FIRST putRecords attempt fails, later ones succeed —

@@ -30,6 +30,20 @@ class VerifySpec extends AnyFunSuite {
       assert(Verify.dump(spark, "unused", out.toString,
         queries.filterNot(_._1 == "boom"), sql).isEmpty)
       assert(!Files.exists(out.resolve("failures.txt")))
+      // RunOne's dump mode builds, times and writes each key once through
+      // the same per-key try: the throwing key aborts nothing
+      val one = out.resolve("runone")
+      val printed = new java.io.ByteArrayOutputStream()
+      val runFailures = Console.withOut(printed) {
+        RunOne.dump(spark, "unused", one.toString, queries, sql)
+      }
+      assert(runFailures == Seq("boom" -> "deliberate failure"))
+      assert(spark.read.parquet(one.resolve("ok_a").toString).count() == 3)
+      assert(spark.read.parquet(one.resolve("ok_b").toString).count() == 2)
+      assert(!Files.exists(one.resolve("boom")))
+      assert(Files.readString(one.resolve("failures.txt")) == "boom\tdeliberate failure\n")
+      val timed = printed.toString.linesIterator.map(_.split(" ").take(2).mkString(" ")).toSeq
+      assert(timed == Seq("[runone] ok_a", "[runone] ok_b"), printed.toString)
     } finally {
       val p = new org.apache.hadoop.fs.Path(out.toString)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
